@@ -366,9 +366,10 @@ def _q_g_degrees(spark, sf):
 
 def _q_g_pagerank_top(spark, sf):
     v, e = _graph(spark, sf)
-    # value-verified against the g4 recursive-CTE PageRank oracle (same
-    # loop, iteration-for-iteration); tol/max_iter kept shallow to bound
-    # per-round harness cost — deep-convergence parity is pytest t2's job.
+    # value-verified against the g4 recursive-CTE PageRank oracle (an
+    # independent power-iteration reference for the same fixpoint);
+    # tol/max_iter kept shallow to bound per-round harness cost —
+    # deep-convergence parity is pytest t2's job.
     res = pagerank(spark, e, vertices=v, tol=1e-5, max_iter=40)
     return top_k(res.ranks, v, k=20).select("name", "vtype")
 
@@ -1112,7 +1113,8 @@ def oracle_sql() -> dict[str, str]:
     # DuckDB's recursive CTE working table is exactly "the previous
     # iteration's rows", and it permits multiple recursive references,
     # nested aggregation and window functions in the recursive term — enough
-    # to express synchronous PageRank and LPA iteration-for-iteration.
+    # to express synchronous LPA iteration-for-iteration, and PageRank as an
+    # independent power-iteration reference for the engine's fixpoint.
     # Shared graph CTEs: name-level edges -> vid assignment (identical to
     # g2) -> vid edge list.
     graph_ctes = f"""
@@ -1129,11 +1131,12 @@ def oracle_sql() -> dict[str, str]:
         )"""
 
     def pagerank_sql(p_expr: str, init_expr: str) -> str:
-        # Mirrors engine.algos.pagerank exactly: cw = w/out_w, value' =
-        # (1-alpha)*p + alpha*(contribs + dangling_mass*p), L1 stop at tol
-        # AFTER the update, cap 40 iterations. Literals 0.85 and
-        # (1.0-0.85)=0.15000000000000002 are written with full precision so
-        # both engines evaluate the same doubles.
+        # An independent power-iteration reference for the fixpoint that
+        # engine.algos.pagerank solves as a linear system: cw = w/out_w,
+        # value' = (1-alpha)*p + alpha*(contribs + dangling_mass*p), L1
+        # stop at tol AFTER the update, cap 40 iterations. Literals 0.85
+        # and (1.0-0.85)=0.15000000000000002 are written with full
+        # precision so both engines evaluate the same doubles.
         return f"""
         WITH RECURSIVE {graph_ctes},
         ne AS (
@@ -1543,9 +1546,9 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(weight), 2) AS out_w
             FROM e GROUP BY 1
         """,
-        # g4/g9: full recursive-CTE PageRank (uniform / topic-personalized)
-        # mirroring the engine loop iteration-for-iteration; g6: recursive
-        # deterministic LPA. Built above.
+        # g4/g9: full recursive-CTE PageRank (uniform / topic-personalized),
+        # an independent power-iteration reference for the engine's
+        # fixpoint; g6: recursive deterministic LPA. Built above.
         "g4_pagerank_top": g4_sql,
         "g9_personalized_pagerank": g9_sql,
         "g10_scoring_projection": f"""

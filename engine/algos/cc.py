@@ -129,7 +129,8 @@ def _cc_loop(spark, edges, vertices, max_rounds):
     # Scale-adaptive loop partitioning from the edge count the setup
     # materialization just observed (no extra job); the star-step rounds
     # build fresh plans, so no layout contract spans the conf change.
-    set_loop_partitions(spark, prev[0])
+    # Symmetric view: row_bytes=32, as in the other symmetric-view loops.
+    set_loop_partitions(spark, prev[0], row_bytes=32)
     rounds = 0
     for rounds in range(1, max_rounds + 1):
         nxt, cur = _observed_ckpt(_small_star(_large_star(e)))

@@ -16,17 +16,22 @@ Scale design (the parts that must survive 10^12 edges):
   broadcast (small V — the gather is then map-side against the partitioned
   edge cache, zero edge movement) or as a hash shuffle (large V).
   ``broadcast_state`` picks automatically by V.
-- **ONE action per iteration.** The whole iteration — gather join, salted
-  aggregation, update join, new-state materialization — is a single Spark
-  job; the convergence L1 delta and the *next* iteration's dangling mass
-  are captured during that same job via ``df.observe`` (Observation API),
-  so no second pass and no extra driver round-trips ever happen. The
-  observed dangling mass is also committed into the iteration manifest, so
-  a resumed run reuses the exact value the crashed run observed instead of
-  re-deriving it through a differently-ordered float aggregation. (Dangling
-  mass for iteration i+1 is ``sum(value_i over dangling vids)`` — a static
-  per-vertex flag computed once — so observing it on iteration i's output
-  is exact.)
+- **Dangling-free linear system, ONE action per iteration.** The loop
+  iterates ``x <- (1-alpha)*p + alpha*G*x`` with G the out-edge split
+  alone (no dangling column) and returns ``pi = x / ||x||_1``. That is the
+  damped-PageRank fixpoint with dangling mass sent along the teleport
+  vector p: pi solves ``(I - alpha*G) pi = ((1-alpha) + alpha*d'pi) p``,
+  a scalar multiple of x's equation (Del Corso, Gulli & Romani, "Fast
+  PageRank Computation via a Sparse Linear System", 2005). The whole
+  iteration — gather join, aggregation, update join, new-state
+  materialization — is a single Spark job; the L1 delta and the iterate's
+  total mass ride that same job via ``df.observe`` (Observation API). No
+  driver scalar enters the plan, so every iteration's physical plan and
+  generated code are identical and Spark's codegen cache serves every
+  iteration after the first without compiling. On a DAG (the
+  repo->path->lang / repo->commit link graph) G is nilpotent: x is exact
+  after longest-path+1 updates and the loop stops one iteration later. On
+  cyclic graphs the contraction modulus is alpha*rho(G) <= alpha.
 - **Hub skew: partial aggregation first, salting as the explicit option.**
   ``groupBy(dst).sum`` map-side partial aggregation bounds a mega-hub's
   reducer input to ONE partial row per map partition — for an algebraic
@@ -182,7 +187,7 @@ class PageRankResult:
 # cache). Threshold sits where the state stops being dimension-table-sized.
 BROADCAST_STATE_MAX_V = 100_000
 
-STATE_COLS = ("vid", "p", "dang", "value")
+STATE_COLS = ("vid", "p", "value")
 
 
 def _prepare_edges(
@@ -247,7 +252,9 @@ def pagerank(
     edges_pre_partitioned: bool = False,
     initial_ranks: DataFrame | None = None,
 ) -> PageRankResult:
-    """Run damped PageRank to L1 < ``tol`` or ``max_iter``.
+    """Run damped PageRank until the relative L1 step is below ``tol``
+    (``||x_k+1 - x_k||_1 < tol * ||x_k+1||_1``, the linear-system iterate
+    of the module docstring) or ``max_iter`` iterations.
 
     Parameters mirror ``networkx.pagerank`` where they overlap (alpha,
     personalization, weight handling, dangling mass distributed by the
@@ -268,16 +275,21 @@ def pagerank(
     extra exchange per iteration.
 
     ``initial_ranks``: optional (vid, value) DataFrame to warm-start the
-    power iteration from — typically yesterday's converged ranks after an
-    incremental edge update. The damped update is an affine contraction
-    with modulus alpha, so the fixpoint is init-independent: a warm start
-    reaches the SAME ranks, just in far fewer iterations when the graph
-    changed little (each iteration shrinks the distance to the fixpoint by
-    alpha, so the saving is log_alpha(d_warm/d_cold) iterations). Vids
-    absent from ``initial_ranks`` (new vertices) get their teleport mass;
-    the vector is L1-normalized before iterating. Ignored when ``resume``
+    iteration from — typically yesterday's converged ranks after an
+    incremental edge update. The update is an affine contraction, so the
+    fixpoint is init-independent: a warm start reaches the SAME ranks, just
+    in far fewer iterations when the graph changed little. Vids absent from
+    ``initial_ranks`` (new vertices) get their teleport mass; the vector is
+    L1-normalized and then scaled by ``(1-alpha) / (1-alpha + alpha*dm0)``,
+    dm0 being its share on dangling vertices, so a converged prior starts
+    exactly at the new iterate's fixpoint ``x``. Ignored when ``resume``
     finds a checkpoint (the checkpoint is the closer start).
+
+    Checkpointed states hold the unnormalized iterate ``x``; each
+    iteration's manifest records its total ``mass``.
     """
+    if not 0.0 <= alpha < 1.0:
+        raise ValueError(f"alpha must be in [0, 1), got {alpha}")
     # Scale-adaptive loop partitioning needs the input size BEFORE the
     # edge table is laid out (the gather join's co-partitioning contract
     # ties the cached edge layout to the loop's shuffle partitioning).
@@ -294,61 +306,51 @@ def pagerank(
         )
 
 
-def _gather_update(norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
-                   _prebuilt=None):
-    """ONE synchronous PageRank update as a DataFrame expression:
-    gather edges(src)⋈ranks -> per-dst contribution sum (hub-salted partial
-    stage when hubs are present) -> damped update joined back onto the
-    state. Returns (vid, p, dang, value, diff); shared by the main loop and
-    mid-iteration salvage so both run the same expression tree. Salvaged
-    partitions are numerically equivalent to an uninterrupted run within
-    float-sum associativity (partial-sum order is partition-order dependent);
-    the committed-manifest ``dang_mass`` reuse above removes the one scalar
-    input that could otherwise drift, and the resume test asserts
-    equality at 1e-12.
+def _gather_update(norm, ranks, cols, has_hubs, bcast):
+    """ONE synchronous update ``x <- (1-alpha)*p + alpha*G*x`` as a
+    DataFrame expression: gather edges(src)⋈ranks -> per-dst contribution
+    sum (hub-salted partial stage when hubs are present) -> update joined
+    back onto the state. Returns (vid, p, value, diff); shared by the main
+    loop and mid-iteration salvage so both run the same expression tree.
+    Salvaged partitions are numerically equivalent to an uninterrupted run
+    within float-sum associativity (partial-sum order is partition-order
+    dependent); the resume test asserts equality at 1e-12.
 
-    ``_prebuilt``: optional iteration-invariant Column subtrees from
-    :func:`_prebuild_update_cols` — Columns are immutable name-resolved
-    trees, so the loop builds them ONCE and only the per-iteration
-    ``dangling`` literal is grafted in here (the assembled tree is
-    shape-identical to the inline form, so the float arithmetic is
-    unchanged; this only cuts the per-iteration py4j expression-building
-    chatter, measured ~0.1s/iteration on this host)."""
-    pre = _prebuilt or _prebuild_update_cols(p_col, alpha)
+    ``cols``: the Column subtrees from :func:`_update_cols`. They hold no
+    per-iteration value, so the loop builds them ONCE (cuts the
+    per-iteration py4j expression-building chatter, measured
+    ~0.1s/iteration) and every iteration's plan is identical."""
     gathered = norm.join(
         bcast(ranks.select(F.col("vid").alias("src"), "value")), "src"
     )
     if has_hubs:
         contribs = (
             gathered.groupBy("dst", "salt")
-            .agg(pre["cw_value_sum"].alias("c"))
+            .agg(cols["cw_value_sum"].alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("c"))
         )
     else:
-        contribs = gathered.groupBy("dst").agg(pre["cw_value_sum"].alias("c"))
-    # same tree as the historical inline form:
-    # (1-alpha)*p + alpha*(coalesce(c, 0) + dangling*p)
-    value = pre["teleport"] + alpha * (pre["c0"] + dangling * p_col)
+        contribs = gathered.groupBy("dst").agg(cols["cw_value_sum"].alias("c"))
+    value = cols["value"]
     return (
         ranks.withColumnRenamed("value", "old")
         .join(bcast(contribs.withColumnRenamed("dst", "vid")), "vid", "left")
         .select(
             "vid",
             "p",
-            "dang",
             value.alias("value"),
             F.abs(value - F.col("old")).alias("diff"),
         )
     )
 
 
-def _prebuild_update_cols(p_col, alpha):
-    """Iteration-invariant Column subtrees of the damped update."""
+def _update_cols(p_col, alpha):
+    """Column subtrees of the update: (1-alpha)*p + alpha*coalesce(c, 0)."""
     return {
         "cw_value_sum": F.sum(F.col("cw") * F.col("value")),
-        "teleport": (1.0 - alpha) * p_col,
-        "c0": F.coalesce(F.col("c"), F.lit(0.0)),
+        "value": (1.0 - alpha) * p_col
+        + alpha * F.coalesce(F.col("c"), F.lit(0.0)),
     }
 
 
@@ -412,8 +414,8 @@ def _pagerank_loop(
     else:
         vids = vertices.select("vid")
 
-    # Static per-vertex columns: teleport mass p (uniform -> null, filled by
-    # p_col) and the dangling flag (no out-edges).
+    # Static per-vertex column: teleport mass p (uniform -> null, filled by
+    # p_col).
     if personalization is not None:
         tot = personalization.agg(F.sum("mass")).collect()[0][0]
         if tot is None or not (float(tot) > 0.0):
@@ -428,12 +430,7 @@ def _pagerank_loop(
         )
     else:
         base = vids.select("vid", F.lit(None).cast("double").alias("p"))
-    base = base.join(
-        out_vids.withColumn("nd", F.lit(True)), "vid", "left"
-    ).select("vid", "p", F.coalesce(F.col("nd"), F.lit(False)).alias("out_ok"))
-    base = base.select(
-        "vid", "p", (~F.col("out_ok")).alias("dang")
-    ).repartition(P, "vid").persist(StorageLevel.MEMORY_AND_DISK)
+    base = base.repartition(P, "vid").persist(StorageLevel.MEMORY_AND_DISK)
     n = base.count()
     if n == 0:
         return PageRankResult(
@@ -451,6 +448,8 @@ def _pagerank_loop(
     resumed_from = None
     metrics: list[dict[str, Any]] = []
     if resume and checkpoint is not None and checkpoint.latest() is not None:
+        # Any stored iterate resumes to the same fixpoint (the update
+        # converges from every start), normalized states included.
         start_iter = checkpoint.latest()
         resumed_from = start_iter
         prev = checkpoint.read(spark, start_iter).select("vid", "value")
@@ -459,46 +458,54 @@ def _pagerank_loop(
     elif initial_ranks is not None:
         # Warm start: one O(V) shuffle to align the prior ranks with the
         # hash(vid)-partitioned state, teleport mass for new vids, one
-        # scalar job for the L1 normalizer. All one-time costs — the loop
-        # itself is identical to a cold run.
-        filled = base.join(
-            initial_ranks.select("vid", F.col("value").alias("iv")),
-            "vid",
-            "left",
-        ).select("vid", "p", "dang", F.coalesce(F.col("iv"), p_col).alias("v0"))
+        # scalar job for the L1 normalizer and the dangling share. All
+        # one-time costs — the loop itself is identical to a cold run.
+        filled = (
+            base.join(
+                initial_ranks.select("vid", F.col("value").alias("iv")),
+                "vid",
+                "left",
+            )
+            .join(out_vids.withColumn("out_ok", F.lit(True)), "vid", "left")
+            .select(
+                "vid",
+                "p",
+                F.coalesce(F.col("iv"), p_col).alias("v0"),
+                F.col("out_ok").isNull().alias("dang"),
+            )
+        )
         # Checkpoint BEFORE the normalizer aggregate: otherwise the O(V)
-        # join runs twice — once for tot_v0, again when ranks is
+        # join runs twice — once for the sums, again when ranks is
         # checkpointed below (ADVICE r3).
         filled = filled.localCheckpoint(eager=True)
-        tot_v0 = float(filled.agg(F.sum("v0")).collect()[0][0] or 0.0)
+        row = filled.agg(
+            F.sum("v0").alias("tot"),
+            F.sum(F.when(F.col("dang"), F.col("v0"))).alias("dm"),
+        ).collect()[0]
+        tot_v0 = float(row["tot"] or 0.0)
         if not tot_v0 > 0.0:
             raise ValueError(
                 f"initial_ranks total mass must be > 0 (got {tot_v0!r})"
             )
-        ranks = filled.select(
-            "vid", "p", "dang", (F.col("v0") / tot_v0).alias("value")
-        )
+        # pi0 = v0/tot_v0, scaled by (1-alpha)/(1-alpha + alpha*dm0): the
+        # iterate x that a converged pi0 corresponds to.
+        dm0 = float(row["dm"] or 0.0) / tot_v0
+        scale = (1.0 - alpha) / ((1.0 - alpha + alpha * dm0) * tot_v0)
+        ranks = filled.select("vid", "p", (F.col("v0") * scale).alias("value"))
     else:
-        ranks = base.select("vid", "p", "dang", p_col.alias("value"))
+        ranks = base.select("vid", "p", p_col.alias("value"))
     robs = Observation("pr_init")
-    ranks = ranks.observe(
-        robs, F.sum(F.when(F.col("dang"), F.col("value"))).alias("dm")
-    ).localCheckpoint(eager=True)
-
-    # Dangling mass for the first loop iteration. On resume, reuse the exact
-    # value the crashed run observed (committed in the manifest) — a fresh
-    # float aggregation's partial-sum order is partition-order dependent, so
-    # recomputing could drift at the ulp level from the uninterrupted run
-    # (ADVICE r2). Fresh runs / pre-r3 manifests read it off the initial
-    # state's own materialization (the Observation above — no extra job);
-    # afterwards it rides along in each iteration's Observation.
-    if resumed_from is not None and metrics and "dang_mass" in metrics[-1]:
-        dangling = float(metrics[-1]["dang_mass"])
-    else:
-        dangling = float(robs.get["dm"] or 0.0)
+    ranks = ranks.observe(robs, F.sum("value").alias("mass")).localCheckpoint(
+        eager=True
+    )
+    # The normalizer when no iteration runs (a resume at max_iter); every
+    # iteration then observes its own iterate's mass.
+    mass = float(robs.get["mass"])
 
     converged = False
     delta = float("inf")
+    # Built once: the update holds no per-iteration value (module docstring).
+    cols = _update_cols(p_col, alpha)
 
     # ---- mid-iteration salvage (north rule): a crash DURING iteration
     # start_iter+1's state write left a staging marker and a subset of its
@@ -520,7 +527,7 @@ def _pagerank_loop(
                 # those hash partitions in the sealed state (ADVICE r2).
                 checkpoint.clear_job_debris(it_s)
                 new_full = _gather_update(
-                    norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
+                    norm, ranks, cols, has_hubs, bcast
                 ).select(*STATE_COLS)
                 part = F.pmod(F.hash("vid"), F.lit(p_s))
                 new_full.filter(part.isin(missing)).repartition(
@@ -532,13 +539,12 @@ def _pagerank_loop(
                 .join(ranks.select("vid", "value"), "vid")
                 .agg(
                     F.sum(F.abs(F.col("nv") - F.col("value"))).alias("delta"),
-                    F.sum(F.when(F.col("dang"), F.col("nv"))).alias("dm"),
+                    F.sum("nv").alias("mass"),
                 )
                 .collect()[0]
             )
-            delta = float(row["delta"] or 0.0)
-            dangling = float(row["dm"] or 0.0)
-            m = _iter_metrics(it_s, delta, 0.0, n_edges, n, dangling)
+            delta, mass = _relative_step(row)
+            m = _iter_metrics(it_s, delta, mass, 0.0, n_edges, n)
             m["salvaged_partitions"] = len(missing)
             metrics.append(m)
             checkpoint.commit(it_s, m, list(state.columns))
@@ -550,22 +556,19 @@ def _pagerank_loop(
     it = start_iter
     prev_cached = ranks
     loop_start = (max_iter + 1) if converged else (start_iter + 1)
-    # Iteration-invariant Column subtrees + observation aggregates, built
-    # once — only the dangling literal changes per iteration.
-    pre = _prebuild_update_cols(p_col, alpha)
     obs_delta = F.sum("diff").alias("delta")
-    obs_dang = F.sum(F.when(F.col("dang"), F.col("value"))).alias("dang_mass")
+    obs_mass = F.sum("value").alias("mass")
     for it in range(loop_start, max_iter + 1):
         t0 = time.monotonic()
-        new_ranks = _gather_update(
-            norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
-            _prebuilt=pre,
-        )
         obs = Observation(f"pr_{it}")
-        # Observe BELOW the slimming select: the delta/dangling metrics ride
+        # Observe BELOW the slimming select: the delta/mass metrics ride
         # the same job, but the materialized state excludes the transient
         # ``diff`` column (less block-write traffic per iteration).
-        staged = new_ranks.observe(obs, obs_delta, obs_dang).select(*STATE_COLS)
+        staged = (
+            _gather_update(norm, ranks, cols, has_hubs, bcast)
+            .observe(obs, obs_delta, obs_mass)
+            .select(*STATE_COLS)
+        )
 
         if it == start_iter + 1 and os.environ.get("VERUM_EXPLAIN"):
             print(f"=== pagerank iteration plan (it={it}) ===", flush=True)
@@ -580,11 +583,9 @@ def _pagerank_loop(
             # broadcast-state mode it moves only the O(V) state.
             checkpoint.stage_marker(it, P)
             checkpoint.write_data(staged.repartition(P, "vid"), it)
-            vals = obs.get
-            delta = float(vals["delta"] or 0.0)
-            dangling = float(vals["dang_mass"] or 0.0)
+            delta, mass = _relative_step(obs.get)
             wall = time.monotonic() - t0
-            m = _iter_metrics(it, delta, wall, n_edges, n, dangling)
+            m = _iter_metrics(it, delta, mass, wall, n_edges, n)
             metrics.append(m)
             checkpoint.commit(it, m, list(staged.columns))
             # The parquet snapshot is now the state of record — release the
@@ -597,11 +598,9 @@ def _pagerank_loop(
             ranks = checkpoint.read(spark, it).select(*STATE_COLS)
         else:
             cached = staged.localCheckpoint(eager=True)
-            vals = obs.get
-            delta = float(vals["delta"] or 0.0)
-            dangling = float(vals["dang_mass"] or 0.0)
+            delta, mass = _relative_step(obs.get)
             wall = time.monotonic() - t0
-            metrics.append(_iter_metrics(it, delta, wall, n_edges, n, dangling))
+            metrics.append(_iter_metrics(it, delta, mass, wall, n_edges, n))
             if prev_cached is not None:
                 prev_cached.unpersist()
             prev_cached = cached
@@ -613,9 +612,12 @@ def _pagerank_loop(
 
     norm.unpersist()
     base.unpersist()
-    # API stability: vids go back out as long regardless of the internal
-    # narrowing decision.
-    out = ranks.select(F.col("vid").cast("long").alias("vid"), "value")
+    # pi = x / ||x||_1 (x >= 0). API stability: vids go back out as long
+    # regardless of the internal narrowing decision.
+    out = ranks.select(
+        F.col("vid").cast("long").alias("vid"),
+        (F.col("value") / mass).alias("value"),
+    )
     return PageRankResult(out, it, converged, delta, metrics, resumed_from)
 
 
@@ -1016,22 +1018,28 @@ def _delta_loop(
     )
 
 
+def _relative_step(vals) -> tuple[float, float]:
+    """(||x_k+1 - x_k||_1 / ||x_k+1||_1, ||x_k+1||_1) from an observed or
+    collected (delta, mass) row. The mass is >= (1-alpha) > 0: x is
+    nonnegative and carries at least the teleport term."""
+    mass = float(vals["mass"])
+    return float(vals["delta"] or 0.0) / mass, mass
+
+
 def _iter_metrics(
-    it: int, delta: float, wall: float, n_edges: int, n: int,
-    dang_mass: float | None = None,
+    it: int, delta: float, mass: float, wall: float, n_edges: int, n: int,
 ) -> dict:
+    """``l1_delta`` is the relative step the stopping rule reads; ``mass``
+    is the iterate's L1 norm, the normalizer of its ranks."""
     m = {
         "iter": it,
         "l1_delta": delta,
+        "mass": mass,
         "wall_s": wall,
         "edges_per_s": n_edges / wall if wall > 0 else None,
         "n_edges": n_edges,
         "n_vertices": n,
     }
-    if dang_mass is not None:
-        # Committed so a resumed run reuses the exact observed value
-        # rather than re-deriving it via a differently-ordered float sum.
-        m["dang_mass"] = dang_mass
     if os.environ.get("VERUM_ITER_STATS"):
         m.update(_env_stats())
     return m

@@ -144,6 +144,11 @@ def get_spark(
         # UI/retained-stage bookkeeping light.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Codegen cache sized for one scoring pass: PageRank, CC, LPA,
+        # derive and triangles together compile several hundred classes,
+        # and at Spark's default of 100 entries each layer evicts the
+        # others', so every warm call recompiled its whole loop.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Measured on this (virtualized) host (r1/r2):
         # - Lazily-committed heap pages turn young GCs into page-fault
         #   storms (r1) — ``-Xms=heap -XX:+AlwaysPreTouch`` is mandatory

@@ -117,16 +117,19 @@ def test_personalization_must_have_positive_mass(spark, tiny_graph):
         pagerank(spark, e, vertices=v, personalization=zero, max_iter=2)
 
 
+# ring + a few chords: connected, non-trivial stationary vector
+RING_CHORDS = [(i, (i + 1) % 30) for i in range(30)] + [
+    (0, 15), (7, 22), (11, 3), (18, 9)
+]
+
+
 def test_warm_start_same_fixpoint_fewer_iterations(spark):
     """initial_ranks warm start (incremental-update path): after a small
     edge perturbation, warm-starting from the old converged ranks must
     reach the SAME fixpoint as a cold run (the damped update is an affine
     contraction — init-independent limit) in strictly fewer iterations."""
     vids = list(range(30))
-    # ring + a few chords: connected, non-trivial stationary vector
-    pairs = [(i, (i + 1) % 30) for i in range(30)] + [
-        (0, 15), (7, 22), (11, 3), (18, 9)
-    ]
+    pairs = RING_CHORDS
     v = vertices_df(spark, vids)
     e_old = edges_df(spark, pairs)
     r_old = pagerank(spark, e_old, vertices=v, alpha=0.85, tol=1e-10,
@@ -159,3 +162,58 @@ def test_warm_start_zero_mass_fails_loudly(spark):
     zero = v.select("vid", F.lit(0.0).alias("value"))
     with pytest.raises(ValueError, match="initial_ranks total mass"):
         pagerank(spark, e, vertices=v, initial_ranks=zero, max_iter=2)
+
+
+def _compiled_classes(spark):
+    """Generated classes compiled so far in this JVM (Spark's codegen
+    metrics count one compilation-time sample per compiled class)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_loop_compiles_nothing_per_iteration(spark):
+    """No per-iteration value enters the plan, so every iteration's
+    generated code is identical: once a short run has warmed Spark's
+    codegen cache, a longer run on the same graph compiles nothing. The
+    ring gets one dangling vertex: a loop that wrote the per-iteration
+    dangling mass into its plan would compile anew every iteration."""
+    v = vertices_df(spark, range(31))
+    e = edges_df(spark, RING_CHORDS + [(2, 30)])
+    pagerank(spark, e, vertices=v, tol=0.0, max_iter=4)
+    before = _compiled_classes(spark)
+    res = pagerank(spark, e, vertices=v, tol=0.0, max_iter=12)
+    compiled = _compiled_classes(spark) - before  # before ranks are collected
+    assert res.iterations == 12
+    assert compiled == 0, f"{compiled} classes compiled by a warm call"
+
+
+def test_dag_exact_in_depth_plus_two_iterations(spark):
+    """On a DAG the link matrix is nilpotent: the iterate is exact after
+    longest-path+1 updates and the next one confirms it (chain_dangling:
+    longest path 3, so at most 5 iterations even at alpha=0.85)."""
+    vids, pairs = HAND_GRAPHS["chain_dangling"]
+    res = pagerank(
+        spark, edges_df(spark, pairs), vertices=vertices_df(spark, vids),
+        alpha=0.85, tol=1e-12, max_iter=300,
+    )
+    assert res.converged
+    assert res.iterations <= 5, res.iterations
+    ours = {r.vid: r.value for r in res.ranks.collect()}
+    ref = pagerank_oracle(
+        nx_digraph(vids, [(s, d, 1.0) for s, d in pairs]), alpha=0.85
+    )
+    ks = sorted(ref)
+    a = np.array([ours[k] for k in ks])
+    assert np.allclose(a, [ref[k] for k in ks], atol=1e-9)
+    assert abs(a.sum() - 1.0) < 1e-9
+
+
+def test_alpha_outside_unit_interval_fails_loudly(spark):
+    """alpha = 1 leaves the linear system without its teleport term (the
+    iterate has no fixpoint of positive mass on a graph with dangling
+    vertices): rejected before any Spark work."""
+    v = vertices_df(spark, [0, 1])
+    e = edges_df(spark, [(0, 1)])
+    for alpha in (1.0, -0.1):
+        with pytest.raises(ValueError, match="alpha"):
+            pagerank(spark, e, vertices=v, alpha=alpha)
