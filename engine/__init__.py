@@ -16,8 +16,8 @@ an idiomatic Spark engine:
   degree-ordered triangle counting, Verum's k-hop context query (BFS with
   dont_follow vertex-type pruning), k-core decomposition (h-index
   fixpoint), link-prediction scores (common/Jaccard/Adamic–Adar),
-  HyperBall neighborhood function (effective diameter, harmonic
-  centrality), and weighted multi-source shortest paths.
+  strongly connected components, topological layering, PPR sweep cuts,
+  butterfly counting, and weighted multi-source shortest paths.
 - **incremental**: batch-fold graph maintenance — stable vertex ids,
   per-hash co-occurrence deltas, exact equivalence to a full rebuild.
 - **checkpointing**: every iteration persists state + per-partition lineage

@@ -33,11 +33,6 @@ small diameter) converge in tens of rounds; ``max_iter`` caps pathological
 inputs and ``converged`` reports honestly.
 
 Oracle: ``networkx.core_number`` exact (tests/test_kcore.py).
-
-The h-index fixpoint never sees the PEELING ORDER; when the layer of
-the peel matters (core-periphery profiles, anomaly detection), use the
-onion decomposition (engine/algos/onion.py), whose batch peel also
-yields core numbers as a by-product.
 """
 
 from __future__ import annotations

@@ -39,12 +39,6 @@ from pyspark.sql import DataFrame
 _LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
 
 
-def plan_stat_digits(df: DataFrame) -> int:
-    """Digit count of the optimized plan's sizeInBytes statistic — the
-    regression probe for carried-stat blowup (bounded loops stay < ~60)."""
-    return len(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-
-
 def strip_origin_stats(df: DataFrame) -> DataFrame:
     """Rebuild a just-checkpointed DataFrame around the same checkpointed
     RDD minus the carried originStats/originConstraints.

@@ -12,7 +12,7 @@ property reported, not raised (the SCC module's partial-label policy);
 ``require_dag=True`` upgrades it to a loud ValueError for pipelines that
 must refuse cyclic inputs. The iteration cap is different: hitting
 ``max_depth`` while progress continues raises (a truncated layering is
-silently wrong, the betweenness/k-core policy).
+silently wrong, the k-core policy).
 
 Scale notes: the edge table is NEVER rewritten — each round is one
 frontier×edges equi-join on src (edges can stay hash-partitioned on src

@@ -17,10 +17,7 @@ Scale notes (the designs assume 10^9+ documents):
   counted first (cheap partial-agg) and over-cap buckets are dropped with a
   semi-join, so no reducer ever materializes a mega-bucket id list.
 - n-gram Jaccard: exact verify step for candidate pairs (shared-shingle
-  count / union) — run on LSH candidates, never all-pairs. When the
-  RECALL itself must be exact (no banding miss rate), use the
-  prefix-filtered threshold join (engine/ssjoin.py) over the same
-  shingle family — it ground-truths what these sketches lose.
+  count / union) — run on LSH candidates, never all-pairs.
 - Portable hashing (``portable=True``): every hash in MinHash/SimHash can be
   swapped from xxhash64 to an md5-derived 60-bit integer that ANY engine can
   reproduce in plain SQL (``CAST(conv(substr(md5(x),1,15),16,10) AS BIGINT)``)

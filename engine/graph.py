@@ -312,51 +312,6 @@ def project_bipartite(
     )
 
 
-def save_edges_locality(
-    edges: DataFrame, assignment: DataFrame, path: str
-) -> None:
-    """Persist edges in the LOCALITY layout: directories keyed by the
-    balanced-partitioner label of ``src`` (engine/algos/partition.py
-    ``partition_graph`` output (vid, part)), files sorted by (src, dst).
-
-    This is the storage half of the Spinner story: hash buckets
-    (save_edges_csr / save_edges_bucketed) balance perfectly but scatter
-    every neighborhood over all directories; the locality layout puts
-    ~(1 - cut/E) of each community's edges in ONE directory, so a
-    neighborhood-scoped scan (incident edges of a community, k-hop
-    context around a seed whose part is known) reads one partition
-    directory instead of all of them — directory-level partition
-    pruning the planner applies from a plain ``part = N`` filter.
-
-    Vertices missing from ``assignment`` (isolated at partition time,
-    or added since) land in part = -1: visible, queryable, and an
-    explicit signal to re-partition rather than a silent drop.
-    """
-    tagged = edges.join(
-        assignment.select(F.col("vid").alias("src"), "part"), "src", "left"
-    ).withColumn("part", F.coalesce("part", F.lit(-1)))
-    (
-        tagged.repartition("part")
-        # part leads the sort: the dynamic-partition writer's required
-        # ordering is then already satisfied (same trap as save_edges_csr)
-        .sortWithinPartitions("part", "src", "dst")
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(path)
-    )
-
-
-def load_edges_locality(
-    spark: SparkSession, path: str, parts: list[int] | None = None
-) -> DataFrame:
-    """Re-read the locality layout; ``parts`` pushes a partition filter
-    (directory pruning) into the scan."""
-    df = spark.read.parquet(path)
-    if parts is not None:
-        df = df.filter(F.col("part").isin([int(p) for p in parts]))
-    return df
-
-
 def degree_histogram(edges: DataFrame) -> DataFrame:
     """(degree, n_vertices) over the undirected simple view — the
     first-look profile of any link graph (how heavy is the tail, where do
@@ -486,7 +441,7 @@ def powerlaw_alpha(edges: DataFrame, dmin: int = 1) -> dict:
     Newman, SIAM Review 2009, eq. 3.7, with the standard error
     (alpha - 1)/sqrt(n) from eq. 3.6. The one-number answer to "how
     heavy is this tail" next to :func:`degree_histogram`; drives salting
-    decisions (engine/diagnostics.py) — alpha < 2.5 means hub degree
+    decisions — alpha < 2.5 means hub degree
     grows superlinearly in graph size and every per-key operator needs
     a skew plan. Two scalar aggregates, nothing collected but moments.
 

@@ -23,9 +23,8 @@ Two properties, both tested (tests/test_incremental.py):
    which removes its old pairs via the subtraction.
 2. **Vid stability** — names already in ``vertices`` keep their vid; new
    names get vids past the previous maximum. Downstream per-vertex state
-   (PageRank warm starts via ``pagerank(initial_ranks=...)``, Louvain
-   warm starts via ``louvain(initial_labels=...)``, stored component
-   labels) stays valid across updates — THE reason incremental beats
+   (PageRank warm starts via ``pagerank(initial_ranks=...)``, stored
+   component labels) stays valid across updates — THE reason incremental beats
    rebuild even when a rebuild were affordable.
 
 Rebuilt semantics, not code, of the reference's enrichment-merge loop

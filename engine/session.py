@@ -22,64 +22,32 @@ def _local_dir() -> str:
         return "/tmp"
 
 
-_PAGE_TOUCH_GIB_S: float | None = None
+def _available_bytes() -> int:
+    """Memory this process can still claim: ``MemAvailable``, lowered to the
+    cgroup limit (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``) when
+    one is set."""
+    avail = 0
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemAvailable:"):
+                avail = int(line.split()[1]) * 1024
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as fh:
+                avail = min(avail, int(fh.read()))
+        except (OSError, ValueError):  # no such cgroup file, or "max"
+            pass
+    return avail
 
 
-def _page_touch_gib_s() -> float:
-    """Anonymous-page first-touch bandwidth of this host, in GiB/s.
-
-    ``-Xms<heap> -XX:+AlwaysPreTouch`` makes the JVM fault in and zero the
-    whole heap at startup. On healthy metal that streams at multiple GiB/s
-    and a 64 GiB pre-touch is seconds; under hypervisor ballooning this VM
-    has measured as low as ~0.17 GiB/s (64 GiB pre-touch = 380 s of dead
-    startup against a ~350 s bench — all of it kernel time in the page
-    supply path, so neither THP nor more GC threads help). The probe
-    first-touches one byte per 4 KiB page of a fresh 256 MiB mmap — the
-    same fault+zero path the JVM pre-touch exercises. Caveat, measured on
-    this host: the probe tends to OVERESTIMATE what a fresh JVM heap will
-    see — a balloon driver with free-page reporting hands freed guest pages
-    straight back to the hypervisor, so the probe (whose mmap can recycle
-    pages the process just released) streams at ~1.4 GiB/s while a fresh
-    34 GiB -Xms pre-touch crawled at ~0.12 GiB/s in the same minute. The
-    consumer (_adaptive_heap_gib) therefore applies a 4x safety factor.
-    Cached per process.
-    """
-    global _PAGE_TOUCH_GIB_S
-    if _PAGE_TOUCH_GIB_S is None:
-        import mmap
-        import time
-
-        import numpy as np
-
-        n = 1 << 28  # 256 MiB: big enough to defeat pre-zeroed free pages
-        m = mmap.mmap(-1, n)
-        a = np.frombuffer(memoryview(m), dtype=np.uint8)
-        t0 = time.perf_counter()
-        a[::4096] = 1
-        dt = max(time.perf_counter() - t0, 1e-6)
-        del a
-        m.close()
-        _PAGE_TOUCH_GIB_S = (n / float(1 << 30)) / dt
-    return _PAGE_TOUCH_GIB_S
-
-
-def _adaptive_heap_gib(cores: int) -> int:
-    """Driver heap sized to both the core count AND the host's page supply.
-
-    Target is 4 GiB/core (cap 64) — heap and GC threads must scale together
-    (see the GC discussion in get_spark). But the pre-touched heap must also
-    be CREATABLE in bounded time: the heap that fits the startup budget is
-    ``probe_bandwidth x ~30 s / 4`` (4x = the measured recycled-vs-fresh
-    page gap, see _page_touch_gib_s), floored at 16 GiB (r1's fixed-16g
-    config — known to run every bench workload, just with more frequent
-    young GCs). Healthy host (probe >= ~8 GiB/s) => the 4 GiB/core target;
-    ballooned host => the floor, because a 64 GiB pre-touch measured 380 s
-    against a ~350 s total bench wall — the GC headroom is not worth
-    doubling the run.
-    """
-    cap = min(64, max(4, 4 * cores))
-    fits_budget = int(_page_touch_gib_s() * 30.0 / 4.0)
-    return max(min(cap, fits_budget), min(cap, 16))
+def _heap_gib(cores: int) -> int:
+    """Driver heap in GiB: 4 GiB per core, capped at 64 and at half of the
+    memory available when the session starts, so the pre-touched heap
+    always fits beside whatever else is running (another JVM included)."""
+    return max(1, min(64, 4 * cores, _available_bytes() // (2 << 30)))
 
 
 def get_spark(
@@ -110,19 +78,7 @@ def get_spark(
     cores = parallelism or (os.cpu_count() or 16)
     heap = os.environ.get("SPARK_DRIVER_MEM")
     if heap is None:
-        gib = _adaptive_heap_gib(cores)
-        heap = f"{gib}g"
-        cap = min(64, max(4, 4 * cores))
-        if gib < cap:
-            import sys
-
-            print(
-                f"[engine.session] page-touch {_page_touch_gib_s():.2f} GiB/s"
-                f" -> driver heap {heap} (4 GiB/core target {cap}g deferred;"
-                " hypervisor page supply would stall -Xms pre-touch)",
-                file=sys.stderr,
-                flush=True,
-            )
+        heap = f"{_heap_gib(cores)}g"
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -154,7 +110,8 @@ def get_spark(
         #   storms (r1) — ``-Xms=heap -XX:+AlwaysPreTouch`` is mandatory
         #   with EITHER collector (G1 without pretouch: 527s of sys time
         #   in a 6-iteration run).
-        # - Heap scales with parallelism (4 GiB/core, cap 64g): cluster
+        # - Heap scales with parallelism (4 GiB/core, cap 64g, at most
+        #   half the memory available at start, see _heap_gib): cluster
         #   memory scales with cluster size, and a fixed heap mis-measures
         #   both ends — 16g at 32 threads throttles allocation, 16g at 2
         #   pinned cores gives 2 GC threads a huge young gen (8-35s pauses,
@@ -188,10 +145,3 @@ def get_spark(
         for k, v in extra.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_all() -> None:
-    """Stop the active session if any (used between N-vs-4N bench runs)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -234,9 +234,8 @@ def fit_ivf_centroids(
 
 
 def lloyd_fit(x: "np.ndarray", k: int, iters: int, seed: int) -> "np.ndarray":
-    """Driver-side seeded Lloyd on a sample matrix — the shared quantizer
-    trainer (IVF coarse cells here; per-subspace PQ codebooks in
-    engine/pq.py). Farthest-point init, fixed iterations, one-at-a-time
+    """Driver-side seeded Lloyd on a sample matrix — the IVF coarse-cell
+    trainer. Farthest-point init, fixed iterations, one-at-a-time
     empty-cell repair (ADVICE r3), lowest-index tie-breaks throughout."""
     if x.shape[0] < k:
         raise ValueError(

@@ -145,20 +145,33 @@ def lang_id(docs: DataFrame) -> DataFrame:
     summed trigram counts over space-padded lowered text, argmax with fixed
     priority tiebreak, 'other' when nothing fires. One codegen'd projection,
     no shuffle, no regex in the hot path (the whitespace collapse is the
-    only regexp and both engines agree on it)."""
+    only regexp and both engines agree on it).
+
+    The argmax is the max of (score, priority, code) structs, so each
+    language's score occurs once in the expression. A filter on
+    ``lang_pred`` is pushed below this projection with the expression
+    inlined and no common-subexpression reuse; written as a CASE over
+    ``greatest`` (every score ~15 times), that filter compiled to a plan
+    that exhausted a 4 GiB driver heap on 8 documents."""
     s = _lang_norm(F.col("text"))
-    scores = {}
-    for code, tgs in LANG_TRIGRAMS:
+    n = len(LANG_TRIGRAMS)
+
+    def cand(score, prio, code):
+        return F.struct(
+            score.alias("score"), F.lit(prio).alias("prio"), F.lit(code).alias("code")
+        )
+
+    # nothing fired (max score 0, or null text): the sentinel's top
+    # priority wins every tie at 0
+    cands = [cand(F.lit(0), n, "other")]
+    for i, (code, tgs) in enumerate(LANG_TRIGRAMS):
         total = None
         for tg in tgs:
             c = _trigram_count(s, tg)
             total = c if total is None else total + c
-        scores[code] = total
-    g = F.greatest(*scores.values())
-    expr = F.when(g == 0, F.lit("other"))
-    for code, _ in LANG_TRIGRAMS:
-        expr = expr.when(scores[code] == g, F.lit(code))
-    return docs.select("doc_id", expr.otherwise(F.lit("other")).alias("lang_pred"))
+        cands.append(cand(total, n - 1 - i, code))  # earlier code wins ties
+    best = F.array_max(F.array(*cands))
+    return docs.select("doc_id", best["code"].alias("lang_pred"))
 
 
 def corpus_stats(docs: DataFrame, rsd: float = 0.02) -> DataFrame:

@@ -4,6 +4,7 @@ notes), the tiny fixture corpus, and its derived graph + NetworkX twin."""
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -19,7 +20,8 @@ from tests.oracles import nx_digraph  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(8, app_name="verum-spark-tests", shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
+    s = get_spark(cores, app_name="verum-spark-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -16,6 +16,10 @@ def _sweep_rows(res):
     return [r.asDict() for r in res.sweep.orderBy("sweep_rank").collect()]
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _check_curve_vs_nx(g: nx.Graph, res):
     """Every (vol, cut, conductance) row must equal the nx computation on
     the same prefix (prefixes taken from the engine's own order, so the
@@ -112,3 +116,21 @@ def test_top_k_truncation_is_flagged(spark):
     assert res.support > 5
     # the truncated curve still prices its prefixes exactly
     _check_curve_vs_nx(g, res)
+
+
+def test_sweep_edge_binning_broadcast_only(spark):
+    # localcluster._bin_edges_by_rank: the O(E) prefix-pricing pass must
+    # broadcast the (<= top_k)-row rank map, never shuffle the edge table
+    from engine.algos.localcluster import _bin_edges_by_rank
+
+    canon = spark.createDataFrame(
+        [(i, i + 1) for i in range(100)], "src long, dst long"
+    ).cache()
+    canon.count()
+    rank_map = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "vid long, sweep_rank int"
+    )
+    binned = _bin_edges_by_rank(canon, rank_map, 10)
+    plan = _plan(binned)
+    assert plan.count("BroadcastHashJoin") == 2
+    assert plan.count("Exchange hashpartitioning") == 0

@@ -206,14 +206,14 @@ print("PAR_INVARIANCE_OK")
 def test_parallelism_invariance():
     """Same job at local[2] vs local[8] -> allclose 1e-12 (SURVEY §5.2 t5).
     Runs in a subprocess: getOrCreate would otherwise reuse the suite's
-    shared local[8] context and ignore the master setting."""
+    shared local[n] context and ignore the master setting."""
     import subprocess
     import sys
     from pathlib import Path
 
     repo = str(Path(__file__).resolve().parent.parent)
     # Strip the parent session's gateway vars: inherited, they would attach
-    # the subprocess to THIS JVM and silently reuse its local[8] master.
+    # the subprocess to THIS JVM and silently reuse its local[n] master.
     env = {
         k: v
         for k, v in os.environ.items()

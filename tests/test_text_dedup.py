@@ -510,3 +510,66 @@ def test_paragraph_dedup_idempotent(para_docs):
     a = {(r.doc_id, r.text) for r in once.collect()}
     b = {(r.doc_id, r.text) for r in twice.collect()}
     assert a == b
+
+
+# --- curation chain: normalize -> C4 lines -> lang -> quality -> dedup ----
+
+_GOOD_EN = (
+    "The quick brown fox jumps over the lazy dog near the river bank. "
+    "It was a bright morning and the air was full of the smell of rain. "
+    "Everyone in the village agreed that the harvest would be good this year."
+)
+_NEAR_DUP = _GOOD_EN.replace("the village", "the town")
+_GOOD_EN_2 = (
+    "A completely different document about the history of distributed systems. "
+    "These machines exchanged messages over unreliable networks for decades. "
+    "The literature on consensus is rich with the lessons of those failures."
+)
+_SPANISH = (
+    "El rapido zorro marron salta sobre el perro perezoso cerca del rio. "
+    "Era una manana luminosa y el aire estaba lleno del olor de la lluvia. "
+    "Toda la gente del pueblo estaba de acuerdo en que la cosecha seria buena."
+)
+_DIGITS = "1029 3847 5665 the 9182 7364 0192 " * 30 + "the end."
+_JUNKLINES = "click to accept cookie policy\n{ var x = 1 }\nok"
+
+
+def test_curation_chain_keeps_one_doc_per_cluster(spark):
+    """Each stage materialized and counted, as a curation job runs them:
+    each gate removes exactly its planted offender. Filtering lang_id's
+    output by language must not inline its per-language score expression
+    into the filter (that plan ran the driver out of a 4 GiB heap)."""
+    docs = spark.createDataFrame(
+        [
+            (0, _GOOD_EN),
+            (1, _GOOD_EN),                      # exact dup of 0
+            (2, _GOOD_EN.replace(" ", "  ")),   # exact dup after normalize
+            (3, _NEAR_DUP),                     # near-dup of 0
+            (4, _GOOD_EN_2),
+            (5, _SPANISH),                      # language gate
+            (6, _DIGITS),                       # quality gate
+            (7, _JUNKLINES),                    # no line survives C4 rules
+        ],
+        "doc_id long, text string",
+    )
+    funnel = {}
+
+    def stage(name, df):
+        df = df.localCheckpoint(eager=True)
+        funnel[name] = df.count()
+        return df
+
+    cur = stage("normalized", T.normalize_text(docs, unicode_form=None))
+    cur = stage("c4_lines", T.clean_lines(cur))
+    langs = T.lang_id(cur).filter(F.col("lang_pred").isin(["en"]))
+    cur = stage("lang", cur.join(langs.select("doc_id"), "doc_id", "semi"))
+    good = T.quality_score(cur).filter(F.col("quality") >= 0.5)
+    cur = stage("quality", cur.join(good.select("doc_id"), "doc_id", "semi"))
+    cur = stage("exact_dedup", D.exact_dedup(cur))
+    pairs = D.minhash_candidates(cur).filter(F.col("est_jaccard") >= 0.8)
+    cur = stage("near_dedup", D.dedup_corpus(spark, cur, pairs))
+    assert funnel == {
+        "normalized": 8, "c4_lines": 7, "lang": 6, "quality": 5,
+        "exact_dedup": 3, "near_dedup": 2,
+    }
+    assert sorted(r.doc_id for r in cur.collect()) == [0, 4]

@@ -581,7 +581,7 @@ semantics (networkx PageRank, allclose 1e-6; exact CC/LPA/triangles) is
 enforced by `python -m pytest -x -q` (tests/test_pagerank.py etc.).
 
 Raw data: `BENCH/scaling.json`. Per-round operator timings: `BENCH_r{{N}}.json`
-(driver-run `bench.py`).
+(written by the retired round harness).
 """
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     manual = ""
