@@ -22,9 +22,9 @@ Per-iteration plan (mirrors lpa.py's co-partitioned loop):
     — a sort of each adjacency run, O(deg log deg), skew bounded by max
     degree (intrinsic: any h-index evaluation reads the whole
     neighborhood). No arrays, no Python, whole-stage codegen throughout.
-  - convergence by the same count+xxhash64 state checksum as LPA — one
-    scalar job per round; states localCheckpoint'ed, evicted ones
-    unpersisted.
+  - convergence by the count+xxhash64 state checksum CC and LPA use
+    (loopstate.observed_checkpoint), observed on each state's
+    localCheckpoint job; evicted states unpersisted.
 
 Round complexity: the fixpoint needs rounds proportional to how far wrong
 the degree initialization is along chains (a path graph takes O(n) rounds
@@ -39,9 +39,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from engine.algos.loopstate import observed_checkpoint
 from engine.algos.pagerank import iterative_conf
 
 
@@ -50,19 +51,6 @@ class KCoreResult:
     cores: DataFrame  # (vid, core)
     iterations: int
     converged: bool
-
-
-def _observed_ckpt(est: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """localCheckpoint(eager) with the state checksum observed on the
-    same job (replaces the r5 shape's dedicated checksum scan/round)."""
-    obs = Observation()
-    out = est.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("vid", "est")), F.lit(0)).alias("h"),
-    ).localCheckpoint(eager=True)
-    vals = obs.get
-    return out, (int(vals["n"]), int(vals["h"]))
 
 
 def core_numbers(
@@ -94,9 +82,10 @@ def _kcore_loop(spark, edges, vertices, max_iter):
     )
     # est0 = degree; the h-operator only ever lowers it (guarded by least()
     # below), so the loop is a monotone descent onto the coreness fixpoint.
-    est, prev_cs = _observed_ckpt(
+    est, prev_cs = observed_checkpoint(
         nbrs.groupBy(F.col("v").alias("vid"))
-        .agg(F.count(F.lit(1)).cast("int").alias("est"))
+        .agg(F.count(F.lit(1)).cast("int").alias("est")),
+        "vid", "est",
     )
 
     w = Window.partitionBy("u").orderBy(F.desc("est"), "v")
@@ -113,9 +102,10 @@ def _kcore_loop(spark, edges, vertices, max_iter):
         hidx = ranked.groupBy(F.col("u").alias("vid")).agg(
             F.max(F.least("est", "rn")).cast("int").alias("h")
         )
-        new_est, cs = _observed_ckpt(
+        new_est, cs = observed_checkpoint(
             est.join(hidx, "vid", "left")
-            .select("vid", F.least("est", F.coalesce("h", F.lit(0))).alias("est"))
+            .select("vid", F.least("est", F.coalesce("h", F.lit(0))).alias("est")),
+            "vid", "est",
         )
         old, est = est, new_est
         old.unpersist()
@@ -131,63 +121,3 @@ def _kcore_loop(spark, edges, vertices, max_iter):
         )
     nbrs.unpersist()
     return KCoreResult(cores, it, converged)
-
-
-def k_core(
-    spark: SparkSession,
-    edges: DataFrame,
-    k: int,
-    max_iter: int = 100,
-) -> DataFrame:
-    """Edges of the k-core subgraph (undirected simple view, a < b).
-
-    Direct iterative peel for a single k — cheaper than the full
-    decomposition when only one threshold matters: drop vertices with
-    degree < k, recompute, repeat to fixpoint. Rounds = peel depth; each
-    round is one degree aggregation and two semi-joins, state is only the
-    surviving edge set (localCheckpoint'ed, previous round released).
-    Matches ``networkx.k_core(g, k).edges`` (tests/test_kcore.py).
-    """
-    with iterative_conf(spark):
-        und = (
-            edges.select(
-                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_old = und.count()
-        stable = False
-        for _ in range(max_iter):
-            deg = (
-                und.select(F.col("a").alias("v"))
-                .unionByName(und.select(F.col("b").alias("v")))
-                .groupBy("v")
-                .agg(F.count(F.lit(1)).alias("deg"))
-            )
-            keep = deg.filter(F.col("deg") >= k).select("v")
-            pruned = (
-                und.join(keep.withColumnRenamed("v", "a"), "a", "semi")
-                .join(keep.withColumnRenamed("v", "b"), "b", "semi")
-                .select("a", "b")
-                .localCheckpoint(eager=True)
-            )
-            n_new = pruned.count()
-            old, und = und, pruned
-            old.unpersist()
-            if n_new == n_old:
-                stable = True
-                break
-            n_old = n_new
-        if not stable:
-            # a partially-peeled edge set is NOT the k-core and there is
-            # no flag channel on a bare DataFrame return — fail loudly
-            # (peel depth can reach O(V): a path graph sheds only its two
-            # endpoints per round)
-            und.unpersist()
-            raise RuntimeError(
-                f"k_core(k={k}) did not reach its peel fixpoint within "
-                f"max_iter={max_iter} rounds; raise max_iter"
-            )
-        return und

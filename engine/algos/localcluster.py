@@ -12,19 +12,18 @@ query promoted from "k hops around the seed" (engine/algos/query.py) to
 "the cohesive community around the seed": the answer set follows the
 graph's own cut structure instead of a fixed radius.
 
-Scale shape (the reason this composes safely at 10^9 vertices):
+Scale shape:
 
-- The PPR vector comes from the push/residual loop
-  (engine/algos/pagerank.pagerank_delta) whose per-round cost is
-  O(frontier edges) — seeded mass stays near the seeds, so the touched
-  set is a tiny fraction of V long before convergence. Only vertices
-  with positive score enter the sweep.
-- The sweep itself is bounded by ``top_k`` (default 10k): one
-  row_number window over the positive-support set (NOT over V — the
-  window input is already small), then the rank map is broadcast into a
-  single O(E) scan of the canonical edge set that bins every edge by
-  min-rank and max-rank. Cut and volume for ALL prefixes fall out of two
-  running sums over the K-row sweep table:
+- The PPR vector comes from the dense personalized
+  ``engine.algos.pagerank.pagerank`` on the undirected view: O(E) per
+  iteration, and every vertex in the seeds' component gets a positive
+  score, so the positive support can be all of V.
+- The sweep is bounded by ``top_k`` (default 10k): a distributed top-k
+  (``orderBy(...).limit(top_k)``) cuts the positive support to at most
+  ``top_k`` rows BEFORE the single-partition row_number window, then the
+  rank map is broadcast into a single O(E) scan of the canonical edge set
+  that bins every edge by min-rank and max-rank. Cut and volume for ALL
+  prefixes fall out of two running sums over the K-row sweep table:
 
       cut(k) = #edges{min_rank <= k} - #edges{max_rank <= k}
 
@@ -47,7 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import pagerank_delta
+from engine.algos.pagerank import pagerank
 from engine.graph import symmetrize
 
 
@@ -113,8 +112,8 @@ def ppr_sweep(
     ``seeds``: (vid, mass) DataFrame or a plain list of vids (uniform
     mass). ``scores``: optional precomputed (vid, value) ranking vector —
     pass yesterday's converged PPR, a directed-graph PPR, or any other
-    ordering heuristic; when None, an unweighted push-PPR on the
-    undirected view is computed here.
+    ordering heuristic; when None, an unweighted personalized PageRank on
+    the undirected view is computed here.
     """
     if isinstance(seeds, list):
         if not seeds:
@@ -132,7 +131,7 @@ def ppr_sweep(
     )
 
     if scores is None:
-        scores = pagerank_delta(
+        scores = pagerank(
             spark, und, alpha=alpha, tol=tol, weighted=False,
             personalization=seeds,
         ).ranks
@@ -151,16 +150,17 @@ def ppr_sweep(
         F.col("score").desc(),
         F.col("vid").asc(),
     ]
-    # The window input is the positive PPR support (push-PPR keeps it
-    # local), not V — a single-partition row_number here is deliberate
-    # and bounded, same justification as the report-layer top-k windows.
+    # The support count is observed on the same job that cuts the scored
+    # set to its top_k rows (a distributed top-k, no single-partition
+    # shuffle of the whole support); the row_number window then sees at
+    # most top_k rows. The order is total, so the cut keeps exactly the
+    # first top_k vertices of the full sweep order.
     sobs = Observation()
     ranked = (
-        scored.withColumn("sweep_rank", F.row_number().over(Window.orderBy(*order)))
-        # observed BEFORE the top_k filter: the support count rides the
-        # same job instead of recomputing the score/degree join
-        .observe(sobs, F.count(F.lit(1)).alias("n"))
-        .filter(F.col("sweep_rank") <= top_k)
+        scored.observe(sobs, F.count(F.lit(1)).alias("n"))
+        .orderBy(*order)
+        .limit(top_k)
+        .withColumn("sweep_rank", F.row_number().over(Window.orderBy(*order)))
         .localCheckpoint(eager=True)
     )
     support = int(sobs.get["n"] or 0)

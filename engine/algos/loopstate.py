@@ -34,7 +34,8 @@ is off and every broadcast decision is an explicit ``broadcast()`` hint.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 _LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
 
@@ -75,3 +76,24 @@ def fresh_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` + :func:`strip_origin_stats` — the
     materialization every self-feeding iterative loop should use."""
     return strip_origin_stats(df.localCheckpoint(eager=True))
+
+
+def observed_checkpoint(
+    df: DataFrame, *cols: str
+) -> tuple[DataFrame, tuple[int, int]]:
+    """``localCheckpoint(eager=True)`` with the state fingerprint (row
+    count, xor of the rows' ``xxhash64(*cols)``) OBSERVED on the same job —
+    the convergence checksum of the CC, LPA and k-core loops. xor is
+    overflow-free under ANSI mode and order/partitioning-insensitive, and
+    the states are distinct by construction, so xor-cancellation needs a
+    genuine 64-bit collision. Riding the materialization spares a
+    dedicated checksum scan per round; the two scalars are the only
+    per-round driver traffic."""
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
+    ).localCheckpoint(eager=True)
+    vals = obs.get
+    return out, (int(vals["n"]), int(vals["h"]))

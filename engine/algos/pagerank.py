@@ -14,8 +14,8 @@ Scale design (the parts that must survive 10^12 edges):
   normalized (weight / out-weight), pre-partitioned on ``src`` and persisted
   before the loop. Each iteration then moves only the O(V) rank state: as a
   broadcast (small V — the gather is then map-side against the partitioned
-  edge cache, zero edge movement) or as a hash shuffle (large V).
-  ``broadcast_state`` picks automatically by V.
+  edge cache, zero edge movement) or as a hash shuffle (large V), picked
+  by V against ``BROADCAST_STATE_MAX_V``.
 - **Dangling-free linear system, ONE action per iteration.** The loop
   iterates ``x <- (1-alpha)*p + alpha*G*x`` with G the out-edge split
   alone (no dangling column) and returns ``pi = x / ||x||_1``. That is the
@@ -68,9 +68,8 @@ from engine.io import RunCheckpoint
 
 
 # Target bytes per loop shuffle partition (guide §2.2: 100 MB - 1 GB per
-# reduce partition). Overridable per deployment via the conf key below.
+# reduce partition).
 LOOP_TARGET_PARTITION_BYTES = 128 << 20
-LOOP_TARGET_PARTITION_CONF = "spark.verum.loop.targetPartitionBytes"
 
 
 def loop_shuffle_partitions(
@@ -83,20 +82,18 @@ def loop_shuffle_partitions(
     surface (2x cores locally; O(total-input-bytes/128MB) on a cluster,
     per engine.session), not for one loop's O(E) working set. Derive the
     loop's count from ITS input instead (guide §2.2 "fewer, larger reduce
-    partitions"): ceil(rows*row_bytes / target), floored at
-    ``defaultParallelism`` (every core gets work at any size) and capped at
-    the session value (the deployment's chosen upper bound). At bench
-    scale (3.45M edges, 32 cores) the floor binds — 32 partitions measured
-    0.71 s vs 1.2 s per pagerank iteration against the 2x-cores default
-    (interleaved A/B, tools/probe_iter.py); at cluster scale the bytes
-    term dominates and grows with the data, so tasks stay ~target-sized.
+    partitions"): ceil(rows*row_bytes / LOOP_TARGET_PARTITION_BYTES),
+    floored at the task-slot count (every core gets work at any size) and
+    capped at the session value (the deployment's chosen upper bound). At
+    bench scale (3.45M edges, 32 cores) the floor binds — 32 partitions
+    measured 0.71 s vs 1.2 s per pagerank iteration against the 2x-cores
+    default (interleaved A/B, tools/probe_iter.py); at cluster scale the
+    bytes term dominates and grows with the data, so tasks stay
+    ~target-sized.
     """
-    conf = spark.conf
-    target = int(conf.get(LOOP_TARGET_PARTITION_CONF,
-                          str(LOOP_TARGET_PARTITION_BYTES)))
     cores = _executor_cores(spark)
-    session_p = int(conf.get("spark.sql.shuffle.partitions"))
-    by_bytes = -(-int(rows) * row_bytes // max(target, 1))  # ceil div
+    session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    by_bytes = -(-int(rows) * row_bytes // LOOP_TARGET_PARTITION_BYTES)
     return max(1, min(max(by_bytes, cores), max(session_p, cores)))
 
 
@@ -107,11 +104,7 @@ def _executor_cores(spark: SparkSession) -> int:
     count. ``local[N]`` is parsed directly; on a cluster the scheduler's
     ``defaultParallelism`` (total cores when ``spark.default.parallelism``
     is unset) is the available proxy — at worst a 2x-high floor there,
-    where the bytes term dominates anyway. ``spark.verum.loop.minPartitions``
-    overrides both."""
-    explicit = spark.conf.get("spark.verum.loop.minPartitions", None)
-    if explicit is not None:
-        return int(explicit)
+    where the bytes term dominates anyway."""
     master = spark.sparkContext.master
     if master.startswith("local["):
         n = master[6:].rstrip("]")
@@ -174,9 +167,6 @@ class PageRankResult:
     l1_delta: float
     metrics: list[dict[str, Any]] = field(default_factory=list)
     resumed_from: int | None = None
-    # pagerank_delta only: total edge rows gathered across all rounds
-    # (dense equivalent = iterations * n_edges)
-    edges_gathered: int | None = None
 
 
 # Above this many vertices the per-iteration broadcast of the rank state
@@ -248,7 +238,6 @@ def pagerank(
     resume: bool = False,
     salt_hub_threshold: int | None = None,
     salt_buckets: int = 16,
-    broadcast_state: bool | None = None,
     edges_pre_partitioned: bool = False,
     initial_ranks: DataFrame | None = None,
 ) -> PageRankResult:
@@ -261,7 +250,9 @@ def pagerank(
     teleport vector) so the t2 oracle comparison is apples-to-apples.
 
     ``personalization``: optional (vid, mass) DataFrame — Verum's topic
-    seed set; normalized internally; missing vids get mass 0.
+    seed set; normalized over the graph's vertices (graph vids it lacks get
+    mass 0, vids outside the graph are ignored). Raises ``ValueError`` when
+    no positive mass lands on a graph vertex.
 
     ``edges_pre_partitioned``: True when ``edges`` comes from a bucketed
     table clustered by src (graph.save_edges_bucketed with buckets ==
@@ -301,8 +292,8 @@ def pagerank(
         return _pagerank_loop(
             spark, edges, vertices, alpha, tol, max_iter, weighted,
             personalization, checkpoint, checkpoint_every, resume,
-            salt_hub_threshold, salt_buckets, broadcast_state,
-            edges_pre_partitioned, initial_ranks,
+            salt_hub_threshold, salt_buckets, edges_pre_partitioned,
+            initial_ranks,
         )
 
 
@@ -357,7 +348,7 @@ def _update_cols(p_col, alpha):
 def _pagerank_loop(
     spark, edges, vertices, alpha, tol, max_iter, weighted, personalization,
     checkpoint, checkpoint_every, resume, salt_hub_threshold, salt_buckets,
-    broadcast_state, edges_pre_partitioned=False, initial_ranks=None,
+    edges_pre_partitioned, initial_ranks,
 ) -> PageRankResult:
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Narrow vertex ids to int32 when they fit (dense vids fit up to 2^31
@@ -414,24 +405,20 @@ def _pagerank_loop(
     else:
         vids = vertices.select("vid")
 
-    # Static per-vertex column: teleport mass p (uniform -> null, filled by
-    # p_col).
+    # Static per-vertex column p: the seed mass on each graph vertex (seeds
+    # outside the graph drop out here), or null for the uniform teleport;
+    # p_col turns it into the teleport vector.
     if personalization is not None:
-        tot = personalization.agg(F.sum("mass")).collect()[0][0]
-        if tot is None or not (float(tot) > 0.0):
-            raise ValueError(
-                f"personalization mass must sum > 0 (got {tot!r}); "
-                "an empty or all-zero teleport vector has no stationary "
-                "distribution"
-            )
         base = vids.join(personalization, "vid", "left").select(
-            "vid",
-            (F.coalesce(F.col("mass"), F.lit(0.0)) / F.lit(float(tot))).alias("p"),
+            "vid", F.coalesce(F.col("mass"), F.lit(0.0)).alias("p")
         )
     else:
         base = vids.select("vid", F.lit(None).cast("double").alias("p"))
     base = base.repartition(P, "vid").persist(StorageLevel.MEMORY_AND_DISK)
-    n = base.count()
+    row = base.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("p").alias("tot")
+    ).collect()[0]
+    n, tot = row["n"], row["tot"]
     if n == 0:
         return PageRankResult(
             vids.select(
@@ -439,10 +426,19 @@ def _pagerank_loop(
             ),
             0, True, 0.0,
         )
-    p_col = F.coalesce(F.col("p"), F.lit(1.0 / n))
-    if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_V
-    bcast = F.broadcast if broadcast_state else (lambda df: df)
+    if personalization is None:
+        p_col = F.coalesce(F.col("p"), F.lit(1.0 / n))
+    elif tot is not None and float(tot) > 0.0:
+        p_col = F.col("p") / F.lit(float(tot))
+    else:
+        base.unpersist()
+        norm.unpersist()
+        raise ValueError(
+            f"personalization mass on graph vertices must sum > 0 (got "
+            f"{tot!r}): seeds absent from the graph, or an empty or "
+            "all-zero teleport vector, leave no stationary distribution"
+        )
+    bcast = F.broadcast if n <= BROADCAST_STATE_MAX_V else (lambda df: df)
 
     start_iter = 0
     resumed_from = None
@@ -570,10 +566,6 @@ def _pagerank_loop(
             .select(*STATE_COLS)
         )
 
-        if it == start_iter + 1 and os.environ.get("VERUM_EXPLAIN"):
-            print(f"=== pagerank iteration plan (it={it}) ===", flush=True)
-            staged.explain("formatted")
-
         if checkpoint is not None and (it % checkpoint_every == 0):
             # Stage marker + hash(vid) alignment: the explicit repartition
             # pins file part-index == pmod(hash(vid), P) so a crash between
@@ -621,403 +613,6 @@ def _pagerank_loop(
     return PageRankResult(out, it, converged, delta, metrics, resumed_from)
 
 
-def pagerank_delta(
-    spark: SparkSession,
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    alpha: float = 0.85,
-    tol: float = 1e-6,
-    max_iter: int = 500,
-    weighted: bool = True,
-    personalization: DataFrame | None = None,
-    initial_ranks: DataFrame | None = None,
-    frontier_c: float = 0.8,
-    broadcast_state: bool | None = None,
-    tail_c: float | None = 0.25,
-    tail_trigger_frac: float = 0.125,
-) -> PageRankResult:
-    """Frontier-filtered (push/residual) PageRank — same fixpoint as
-    ``pagerank``, but each round gathers only from the vertices whose
-    pending rank change exceeds a mass-derived threshold, so the
-    convergence tail costs O(frontier edges) per round instead of the
-    dense loop's unconditional O(E) (VERDICT r3 item 2; delta semantics
-    are public knowledge — GraphLab's delta-PageRank / Gauss–Seidel push
-    methods, Andersen–Chung–Lang 2006).
-
-    **Exact invariant, not an approximation.** State is (value, resid)
-    with the invariant  v* = value + (I - alpha*G)^-1 resid  where G is
-    the column-stochastic transition (out-edge split + dangling->teleport
-    column), v* the damped-PageRank fixpoint. A push moves a vertex's
-    residual into its value and sends alpha*G-weighted shares into its
-    neighbors' residuals — the invariant is preserved EXACTLY at every
-    step, for any activation choice, so thresholding changes which work
-    happens when, never the answer. Remaining error is bounded by the
-    unpushed mass:  ||v* - value||_1 <= (R + |D|)/(1 - alpha)  with R the
-    residual L1 mass and D the pending dangling scalar; the loop stops at
-    R + |D| <= tol*(1-alpha), guaranteeing ||v* - value||_1 <= tol.
-    Fixpoint equality vs the dense loop is tested at 1e-9
-    (test_pagerank_delta.py).
-
-    **Frontier rule** (``frontier_c``): a round activates every vertex
-    with |resid| > c*(R+|D|)*outdeg(v)/m — the push threshold is
-    proportional to the vertex's OUT-DEGREE (Andersen–Chung–Lang's
-    cost-aware criterion: a hub only pays its many-edge gather when its
-    residual carries enough mass per edge; dangling vertices have
-    threshold 0 — their push gathers no edges at all). Inactive vertices
-    hold < c*(R+|D|)*sum(outdeg)/m = c*(R+|D|) total, so a round pushes
-    > (1-c) of the mass and the recurrence gives
-    R' <= R*(1 - (1-alpha)(1-c)) — guaranteed geometric convergence for
-    any c in [0, 1). c=0 pushes everything (dense-equivalent rounds).
-    Measured on a bench-family link graph (V=73k, E=173k, alpha=0.85,
-    tol=1e-6): cold-start total edges gathered vs
-    the dense loop's iterations*E is 0.63x at c=0.5, 0.48x at c=0.8 (the
-    default), 0.41x at c=0.9 — a >=2x gather reduction at c>=0.8 — at
-    ~1.7-1.8x the round count. At 100 TB this is the difference between every iteration
-    paying the full O(E) shuffle and the long convergence tail paying
-    only for the vertices still moving; warm starts concentrate the
-    frontier further (the incremental-fold case gathers almost nothing).
-
-    **Dangling algebra, exact but deferred one round.** Active dangling
-    vertices' pushed mass distributes alpha*r*p(d) to EVERY vertex — a
-    rank-one update carried as the driver scalar D (observed in the same
-    job as the round, no extra pass) and folded into every residual at
-    the NEXT round's update. The invariant holds with the effective
-    residual (resid + D*p), so deferral delays arrival by one round
-    without changing the fixpoint; D participates in the stopping bound.
-
-    **Per-round cost**: one Spark job (gather join on the frontier ->
-    push aggregation -> state update; R / dangling / frontier-edge-count
-    all observed on that same job). The edge table shuffles once before
-    the loop (same ``_prepare_edges`` as the dense path); per round only
-    O(frontier) state rows move.
-
-    ``initial_ranks`` warm start: one full O(E) gather computes the true
-    equation residual of the prior vector, after which only the vertices
-    the graph update actually disturbed carry mass — the natural partner
-    of ``engine.incremental``'s daily folds.
-
-    **Adaptive tail schedule** (``tail_c``, VERDICT r4 item 4): a high c
-    maximizes gather reduction but converges at the slow guaranteed rate
-    (1 - (1-alpha)(1-c) per round) — at bench scale the long tail of tiny
-    rounds is then dominated by the fixed per-job floor, and the r4 bench
-    measured the c=0.8 run SLOWER than dense (148 rounds vs 71 iters)
-    despite gathering 2.11x fewer edges. So once the frontier has shrunk
-    below ``tail_trigger_frac * E`` (the same point at which bucket scan
-    pruning makes per-round gathers cheap), the schedule drops c to
-    ``tail_c``: tail rounds push more of the remaining mass each (rate
-    >= 1 - (1-alpha)(1-tail_c), near-dense at 0.25) so the tail takes
-    ~3x fewer rounds, while the early rounds — where E-sized gathers are
-    the real cost — keep the aggressive filter. Activation choice never
-    affects the fixpoint (see above), so this is pure scheduling: the
-    1e-9 dense-equality test holds for any (frontier_c, tail_c).
-    ``tail_c=None`` pins c to ``frontier_c`` for the whole run (the
-    pre-r5 schedule). At true cluster scale the job floor is noise and a
-    large E makes gather reduction dominate — set ``tail_c`` closer to
-    ``frontier_c`` there; the crossover is measured in
-    tools/scaling_bench.py.
-
-    Returns ``PageRankResult``; ``metrics`` rows carry ``frontier_edges``
-    and the effective ``c`` per round; ``edges_gathered`` holds the run
-    total (the dense equivalent is iterations * n_edges).
-    """
-    if not (0.0 <= frontier_c < 1.0):
-        raise ValueError(f"frontier_c must be in [0, 1), got {frontier_c}")
-    if tail_c is not None and not (0.0 <= tail_c < 1.0):
-        raise ValueError(f"tail_c must be in [0, 1) or None, got {tail_c}")
-    with iterative_conf(spark, loop_rows=edges.count()):
-        return _delta_loop(
-            spark, edges, vertices, alpha, tol, max_iter, weighted,
-            personalization, initial_ranks, frontier_c, broadcast_state,
-            tail_c, tail_trigger_frac,
-        )
-
-
-def _delta_loop(
-    spark, edges, vertices, alpha, tol, max_iter, weighted,
-    personalization, initial_ranks, frontier_c, broadcast_state,
-    tail_c=None, tail_trigger_frac=0.125,
-):
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    norm, out_vids, _ = _prepare_edges(edges, weighted, None, 16, P)
-    # Bucket column for tail-round scan pruning. _prepare_edges left norm
-    # hash(src)-partitioned into P partitions (pmod(hash(src), P) — the
-    # same identity the checkpoint salvage protocol relies on); the bucket
-    # key refines that to K = 64*P sub-buckets, CONSISTENT with the
-    # partitioning (bkt % P = partition id), and sortWithinPartitions
-    # clusters each partition into contiguous bkt runs. Cached columnar
-    # batches then carry tight min/max stats on bkt, so a literal
-    # bkt IN (...) filter lets the in-memory scan skip every batch holding
-    # no frontier vertex — late rounds with a handful of active vertices
-    # probe a handful of batches instead of all of E. The sort is one-time,
-    # in-partition (no shuffle), and ordering does not disturb the
-    # HashPartitioning(src) the gather join credits.
-    K = 64 * P
-    norm = norm.withColumn(
-        "bkt", F.pmod(F.hash("src"), F.lit(K))
-    ).sortWithinPartitions("bkt")
-    norm.persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = norm.count()
-
-    if vertices is None:
-        vids = (
-            edges.select(F.col("src").alias("vid"))
-            .unionByName(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-    else:
-        vids = vertices.select("vid")
-
-    if personalization is not None:
-        tot = personalization.agg(F.sum("mass")).collect()[0][0]
-        if tot is None or not (float(tot) > 0.0):
-            raise ValueError(
-                f"personalization mass must sum > 0 (got {tot!r})"
-            )
-        base = vids.join(personalization, "vid", "left").select(
-            "vid",
-            (F.coalesce(F.col("mass"), F.lit(0.0)) / F.lit(float(tot))).alias("p"),
-        )
-    else:
-        base = vids.select("vid", F.lit(None).cast("double").alias("p"))
-    # Static out-degree column: drives the cost-aware activation threshold
-    # (theta_v proportional to odeg) and doubles as the dangling flag
-    # (odeg == 0). One O(E) partial-aggregated pass, before the loop.
-    odeg = norm.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    base = (
-        base.join(odeg.withColumnRenamed("src", "vid"), "vid", "left")
-        .select(
-            "vid", "p",
-            F.coalesce(F.col("odeg"), F.lit(0)).alias("odeg"),
-            (F.col("odeg").isNull()).alias("dang"),
-        )
-        .repartition(P, "vid")
-        .localCheckpoint(eager=True)
-    )
-    n = base.count()
-    if n == 0:
-        norm.unpersist()
-        base.unpersist()
-        return PageRankResult(
-            vids.select(
-                F.col("vid").cast("long").alias("vid"), F.lit(0.0).alias("value")
-            ),
-            0, True, 0.0,
-        )
-    p_col = F.coalesce(F.col("p"), F.lit(1.0 / n))
-    if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_V
-    bcast = F.broadcast if broadcast_state else (lambda df: df)
-
-    sobs = Observation("prd_init")
-    resid_mass = F.sum(F.abs(F.col("resid"))).alias("rm")
-    if initial_ranks is None:
-        # Cold start: value = 0, resid = the constant term (1-alpha)p.
-        state = base.select(
-            "vid", "p", "dang", "odeg",
-            F.lit(0.0).alias("value"),
-            ((1.0 - alpha) * p_col).alias("resid"),
-        ).observe(sobs, resid_mass).localCheckpoint(eager=True)
-    else:
-        # Warm start: resid0 = (1-alpha)p + alpha*G v0 - v0, the exact
-        # equation residual of the prior vector — one full O(E) gather,
-        # after which the frontier is only what the graph change disturbed.
-        vobs = Observation("prd_warm")
-        v0 = (
-            base.join(
-                initial_ranks.select("vid", F.col("value").alias("iv")),
-                "vid", "left",
-            )
-            .select(
-                "vid", "p", "dang", "odeg",
-                F.coalesce("iv", F.lit(0.0)).alias("value"),
-            )
-            .observe(
-                vobs,
-                F.sum(F.when(F.col("dang"), F.col("value"))).alias("dm"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        dang0 = float(vobs.get["dm"] or 0.0)
-        contribs = (
-            norm.join(bcast(v0.select(F.col("vid").alias("src"), "value")), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("cw") * F.col("value")).alias("c"))
-        )
-        state = (
-            v0.join(bcast(contribs.withColumnRenamed("dst", "vid")), "vid", "left")
-            .select(
-                "vid", "p", "dang", "odeg", "value",
-                (
-                    (1.0 - alpha) * p_col
-                    + alpha * (F.coalesce(F.col("c"), F.lit(0.0)) + dang0 * p_col)
-                    - F.col("value")
-                ).alias("resid"),
-            )
-            .observe(sobs, resid_mass)
-            .localCheckpoint(eager=True)
-        )
-        v0.unpersist()
-    base.unpersist()
-
-    # Initial residual mass rides the state materialization (no extra job).
-    R = float(sobs.get["rm"] or 0.0)
-    D = 0.0  # dangling mass pushed last round (alpha-scaled), lands next round
-    stop = tol * (1.0 - alpha)
-    converged = False
-    total_gathered = 0
-    last_gathered: int | None = None
-    next_bkts: list[int] | None = None
-    # Next-round bucket pruning bar (observed for free in each round's
-    # job, replacing the r4 shape's extra collect job per tail round).
-    # The bar must sit AT OR BELOW the next round's activation threshold
-    # for the observed bucket set to cover the frontier; conversely the
-    # next round's effective threshold is clamped UP to the bar
-    # (activation choice never affects the fixpoint, so the clamp is
-    # exact — it can only delay mass, and only in the rare round where
-    # the residual mass collapses more than 4x at once; the bar then
-    # recalibrates off the new mass, so a stall never persists).
-    c_min = frontier_c if tail_c is None else min(frontier_c, tail_c)
-    bkt_bar = 0.0
-    metrics: list[dict[str, Any]] = []
-    rounds = 0
-    # Round-invariant Column subtrees, built once (same trees as the
-    # historical inline forms — only the per-round scalars are grafted in
-    # below; cuts ~0.1s/round of py4j expression building).
-    abs_resid = F.abs(F.col("resid"))
-    odeg_col = F.col("odeg")
-    src_cols = (F.col("vid").alias("src"), F.col("resid").alias("r"))
-    push_agg = F.sum(F.col("cw") * F.col("r") * alpha).alias("c")
-    value_expr = (
-        F.col("value") + F.when(F.col("act"), F.col("resid")).otherwise(0.0)
-    ).alias("value")
-    resid_base = F.when(F.col("act"), F.lit(0.0)).otherwise(
-        F.col("resid")
-    ) + F.coalesce(F.col("c"), F.lit(0.0))
-    dpush_expr = (
-        F.when(F.col("act") & F.col("dang"), F.col("resid"))
-        .otherwise(0.0)
-        .alias("dpush")
-    )
-    obs_r = F.sum(F.abs(F.col("resid"))).alias("R")
-    obs_dp = F.sum("dpush").alias("dp")
-    vid_bkt = F.pmod(F.hash("vid"), F.lit(K))
-    gather_cnt = F.count(F.lit(1)).alias("gathered")
-    while rounds < max_iter:
-        if R + abs(D) <= stop:
-            converged = True
-            break
-        rounds += 1
-        t0 = time.monotonic()
-        # Cost-aware threshold: theta_v = c * mass * odeg/m. Sum over all
-        # vertices = c * mass, so inactive vertices hold < c of the mass
-        # (the geometric guarantee); a vertex's bar to push scales with
-        # how many edges its push costs. odeg=0 (dangling) => bar 0: their
-        # push feeds only the scalar D and gathers nothing.
-        # Adaptive tail: once the frontier is small (same trigger family
-        # as bucket pruning), drop c so tail rounds push near-dense
-        # fractions of the remaining mass — ~3x fewer job-floor-priced
-        # rounds for gathers that are cheap there anyway (see docstring).
-        c_r = frontier_c
-        if (
-            tail_c is not None
-            and last_gathered is not None
-            and last_gathered < n_edges * tail_trigger_frac
-        ):
-            c_r = min(frontier_c, tail_c)
-        theta = max(c_r * (R + abs(D)) / max(n_edges, 1), bkt_bar)
-        active = abs_resid > theta * odeg_col
-        # Bar for the NEXT round's pruning superset, observed below: a
-        # conservative prediction of next round's threshold — c_min times
-        # a quarter of the current mass (mass rarely contracts 4x in one
-        # round; floored at the stopping mass, under which the loop ends).
-        bkt_bar = c_min * max(stop, 0.25 * (R + abs(D))) / max(n_edges, 1)
-        src_side = state.filter(active).select(*src_cols)
-        # Tail-round scan pruning: once the previous round's frontier shrank
-        # below 1/8 of E, filter the edge scan to the frontier's bucket
-        # list — the in-memory scan skips every other partition via batch
-        # stats. The list is a SUPERSET observed for free during the
-        # PREVIOUS round's job (see the staged observe below): any active
-        # vertex must clear theta*odeg = c*(R+|D|)*odeg/m > c_min*stop*
-        # odeg/m while the loop is running, so buckets of vertices above
-        # that literal bar cover every possible frontier — no extra
-        # collect job (the r4 shape spent one per tail round).
-        edge_side = norm
-        pruned_buckets = None
-        if (
-            next_bkts is not None
-            and last_gathered is not None
-            and last_gathered < n_edges // 8
-            # engage only when the frontier covers a minority of buckets
-            # (a near-full IN-list would cost codegen for no skipped batch)
-            and len(next_bkts) * 4 <= K
-        ):
-            edge_side = norm.filter(F.col("bkt").isin(next_bkts))
-            pruned_buckets = len(next_bkts)
-        gobs = Observation(f"prd_g_{rounds}")
-        gathered = edge_side.join(bcast(src_side), "src").observe(
-            gobs, gather_cnt
-        )
-        pushes = gathered.groupBy("dst").agg(push_agg)
-        obs = Observation(f"prd_{rounds}")
-        staged = (
-            state.join(bcast(pushes.withColumnRenamed("dst", "vid")), "vid", "left")
-            .withColumn("act", active)
-            .select(
-                "vid", "p", "dang", "odeg",
-                value_expr,
-                (resid_base + F.lit(D) * p_col).alias("resid"),
-                dpush_expr,
-            )
-            .observe(
-                obs,
-                obs_r,
-                obs_dp,
-                # Next round's pruning superset, observed for free in this
-                # same job: buckets of every vertex that can clear the
-                # predicted next-round bar (the next threshold is clamped
-                # up to this bar, so coverage is exact by construction).
-                F.collect_set(
-                    F.when(abs_resid > F.lit(bkt_bar) * odeg_col, vid_bkt)
-                ).alias("nbkts"),
-            )
-            .select("vid", "p", "dang", "odeg", "value", "resid")
-        )
-        new_state = staged.localCheckpoint(eager=True)
-        vals = obs.get
-        R = float(vals["R"] or 0.0)
-        D = alpha * float(vals["dp"] or 0.0)
-        next_bkts = list(vals["nbkts"] or [])
-        g = int(gobs.get["gathered"] or 0)
-        total_gathered += g
-        last_gathered = g
-        wall = time.monotonic() - t0
-        m = {
-            "iter": rounds,
-            "resid_mass": R + abs(D),
-            "frontier_edges": g,
-            "wall_s": wall,
-            "edges_per_s": g / wall if wall > 0 else None,
-            "n_edges": n_edges,
-            "n_vertices": n,
-            "c": c_r,
-        }
-        if pruned_buckets is not None:
-            m["pruned_buckets"] = pruned_buckets
-        metrics.append(m)
-        prev = state
-        state = new_state
-        prev.unpersist()
-    if not converged and R + abs(D) <= stop:
-        converged = True
-
-    norm.unpersist()
-    out = state.select(F.col("vid").cast("long").alias("vid"), "value")
-    return PageRankResult(
-        out, rounds, converged, R + abs(D), metrics,
-        edges_gathered=total_gathered,
-    )
-
-
 def _relative_step(vals) -> tuple[float, float]:
     """(||x_k+1 - x_k||_1 / ||x_k+1||_1, ||x_k+1||_1) from an observed or
     collected (delta, mass) row. The mass is >= (1-alpha) > 0: x is
@@ -1031,7 +626,7 @@ def _iter_metrics(
 ) -> dict:
     """``l1_delta`` is the relative step the stopping rule reads; ``mass``
     is the iterate's L1 norm, the normalizer of its ranks."""
-    m = {
+    return {
         "iter": it,
         "l1_delta": delta,
         "mass": mass,
@@ -1040,26 +635,3 @@ def _iter_metrics(
         "n_edges": n_edges,
         "n_vertices": n,
     }
-    if os.environ.get("VERUM_ITER_STATS"):
-        m.update(_env_stats())
-    return m
-
-
-def _env_stats() -> dict:
-    """GC-total + host-steal snapshot (diagnostic; VERUM_ITER_STATS=1)."""
-    out: dict[str, float] = {}
-    try:
-        spark = SparkSession.getActiveSession()
-        beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-        out["gc_total_ms"] = sum(
-            beans.get(i).getCollectionTime() for i in range(beans.size())
-        )
-    except Exception:
-        pass
-    try:
-        f = open("/proc/stat").readline().split()
-        out["steal_ticks"] = int(f[8])
-        out["cpu_ticks"] = sum(int(x) for x in f[1:])
-    except Exception:
-        pass
-    return out

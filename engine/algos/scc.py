@@ -58,54 +58,6 @@ def strongly_connected_components(
         return _scc_loop(spark, edges, vertices, max_outer, max_inner)
 
 
-def condensation(
-    spark: SparkSession,
-    edges: DataFrame,
-    scc: SCCResult | None = None,
-    **scc_kwargs,
-) -> tuple[DataFrame, DataFrame]:
-    """The SCC quotient graph (``networkx.condensation`` semantics,
-    public knowledge): contract every strongly connected component to
-    one vertex (its min-vid label), keep one edge per ordered component
-    pair with the ORIGINAL edge multiplicity as ``weight``. The result
-    is always a DAG — the standard preprocessing that turns any directed
-    graph into input for the topological machinery (toposort.py layers,
-    longest paths, DAG reachability).
-
-    Returns ``(labels, quotient_edges)`` where labels is (vid, label)
-    and quotient_edges is (src, dst, weight) over labels. Pass a
-    precomputed ``scc`` to reuse labels; otherwise one is computed here
-    (and a PARTIAL result — converged=False — raises: contracting with
-    incomplete labels would silently merge unassigned vertices).
-
-    Spark shape: two broadcast-free equi-joins (edges x labels on each
-    endpoint, the same O(E) gather as everything else) + one partial-agg
-    count; self-pairs (intra-component edges) drop in the filter.
-    """
-    if scc is not None and scc_kwargs:
-        raise ValueError(
-            "condensation: scc and scc_kwargs are mutually exclusive — "
-            f"kwargs {sorted(scc_kwargs)} would be silently ignored"
-        )
-    res = scc or strongly_connected_components(spark, edges, **scc_kwargs)
-    if not res.converged:
-        raise ValueError(
-            "condensation: SCC labels are partial (converged=False) — "
-            "contracting would silently merge unassigned vertices; raise "
-            "max_outer/max_inner"
-        )
-    lab = res.labels
-    q = (
-        edges.select("src", "dst")
-        .join(lab.select(F.col("vid").alias("src"), F.col("label").alias("ls")), "src")
-        .join(lab.select(F.col("vid").alias("dst"), F.col("label").alias("ld")), "dst")
-        .filter(F.col("ls") != F.col("ld"))
-        .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )
-    return lab, q
-
-
 def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 

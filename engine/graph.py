@@ -279,39 +279,6 @@ def load_edges_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table).select("src", "dst", "rel", "weight")
 
 
-def project_bipartite(
-    edges: DataFrame,
-    on: str = "src",
-    cap: int | None = None,
-    log_dropped: bool = True,
-) -> DataFrame:
-    """(a, b, weight) — the weighted one-mode projection of a bipartite
-    edge table onto its ``on`` side: a and b are connected with weight =
-    number of shared neighbors on the other side
-    (``networkx.bipartite.weighted_projected_graph`` semantics, public).
-    Verum's repo<->repo co-occurrence IS this projection specialized to
-    (content_hash, repo); this operator exposes the same capped machinery
-    (engine/derive.py cooccur_pairs — per-group cap applied BEFORE the
-    pair explode, dropped groups counted and logged, never silent) for
-    any bipartite relation (user<->item, doc<->term, host<->resource).
-
-    ``cap``: max group size on the other side (default: derive's
-    COOCCUR_CAP); a hub neighbor shared by m vertices would otherwise
-    explode into m^2/2 pairs.
-    """
-    from engine.derive import COOCCUR_CAP, cooccur_pairs
-
-    if on not in ("src", "dst"):
-        raise ValueError(f"project_bipartite: on must be src|dst, got {on!r}")
-    other = "dst" if on == "src" else "src"
-    membership = edges.select(
-        F.col(other).alias("content_hash"), F.col(on).alias("repo")
-    ).distinct()
-    return cooccur_pairs(
-        membership, cap if cap is not None else COOCCUR_CAP, log_dropped
-    )
-
-
 def degree_histogram(edges: DataFrame) -> DataFrame:
     """(degree, n_vertices) over the undirected simple view — the
     first-look profile of any link graph (how heavy is the tail, where do
@@ -330,53 +297,6 @@ def degree_histogram(edges: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("degree"))
     )
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_vertices"))
-
-
-def degree_assortativity(edges: DataFrame) -> float:
-    """Pearson degree-degree correlation over the undirected simple view
-    (Newman 2002, "Assortative mixing in networks" — public knowledge):
-    do hubs link to hubs (r > 0) or to leaves (r < 0)? Computed as plain
-    moment aggregates over the symmetric edge list (each edge contributes
-    both orientations, the convention ``networkx.
-    degree_assortativity_coefficient`` uses) — one join, one scalar job.
-    Returns nan for degree-regular graphs (zero variance), like networkx.
-    """
-    und = (
-        edges.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("vid"))
-        .unionByName(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    )
-    sym = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    paired = (
-        sym.join(deg.select(F.col("vid").alias("a"), F.col("deg").alias("dx")), "a")
-        .join(deg.select(F.col("vid").alias("b"), F.col("deg").alias("dy")), "b")
-    )
-    row = paired.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dx").alias("sx"), F.sum("dy").alias("sy"),
-        F.sum(F.col("dx") * F.col("dy")).alias("sxy"),
-        F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).alias("syy"),
-    ).collect()[0]
-    n = float(row["n"])
-    if n == 0:
-        return float("nan")
-    cov = row["sxy"] / n - (row["sx"] / n) * (row["sy"] / n)
-    vx = row["sxx"] / n - (row["sx"] / n) ** 2
-    vy = row["syy"] / n - (row["sy"] / n) ** 2
-    denom = (vx * vy) ** 0.5
-    if denom == 0:
-        return float("nan")
-    return float(cov / denom)
 
 
 def reciprocity(edges: DataFrame) -> float:
@@ -432,140 +352,3 @@ def graph_density(edges: DataFrame, directed: bool = True) -> float:
         return 0.0
     pairs = nv * (nv - 1) if directed else nv * (nv - 1) / 2
     return float(m) / pairs
-
-
-def powerlaw_alpha(edges: DataFrame, dmin: int = 1) -> dict:
-    """MLE power-law exponent of the degree distribution (undirected
-    simple view): alpha = 1 + n / Σ ln(d / (dmin - 1/2)) over degrees
-    >= dmin — the discrete-MLE approximation of Clauset, Shalizi &
-    Newman, SIAM Review 2009, eq. 3.7, with the standard error
-    (alpha - 1)/sqrt(n) from eq. 3.6. The one-number answer to "how
-    heavy is this tail" next to :func:`degree_histogram`; drives salting
-    decisions — alpha < 2.5 means hub degree
-    grows superlinearly in graph size and every per-key operator needs
-    a skew plan. Two scalar aggregates, nothing collected but moments.
-
-    Returns {alpha, sigma, n_tail, dmin} — n_tail = #vertices with
-    degree >= dmin. Raises on an empty tail (no MLE from no data)."""
-    if dmin < 1:
-        raise ValueError(f"powerlaw_alpha: dmin must be >= 1, got {dmin}")
-    und = (
-        edges.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("vid"))
-        .unionByName(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    )
-    row = (
-        deg.filter(F.col("deg") >= dmin)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.log(F.col("deg") / (dmin - 0.5))).alias("slog"),
-        )
-        .collect()[0]
-    )
-    n = int(row["n"] or 0)
-    if n == 0:
-        raise ValueError(
-            f"powerlaw_alpha: no vertices with degree >= dmin={dmin}"
-        )
-    slog = float(row["slog"])
-    if slog <= 0:
-        raise ValueError(
-            f"powerlaw_alpha: degenerate tail (all degrees == dmin={dmin}"
-            f" yield Σlog=0); raise dmin or inspect degree_histogram"
-        )
-    alpha = 1.0 + n / slog
-    return {
-        "alpha": alpha,
-        "sigma": (alpha - 1.0) / (n ** 0.5),
-        "n_tail": n,
-        "dmin": dmin,
-    }
-
-
-def rich_club(edges: DataFrame) -> DataFrame:
-    """(k, n_nodes, n_edges, phi) rich-club coefficient of the undirected
-    simple view for every integer k with at least two richer-than-k nodes:
-    phi(k) = 2 E_k / (N_k (N_k - 1)), N_k = #nodes of degree > k, E_k =
-    #edges whose min endpoint degree > k (Colizza et al., Nature Physics
-    2006; McAuley et al. 2007 — ``networkx.rich_club_coefficient``
-    semantics, normalized=False). Do hubs form their own densely wired
-    club, or only fan out to the periphery?
-
-    Spark shape — no per-k passes, no peeling loop: one degree groupBy,
-    one edge min-degree join, then BOTH step functions fall out of
-    suffix sums over the merged degree HISTOGRAM. The histogram has at
-    most 2*sqrt(E) rows (distinct degree values d1<d2<... satisfy
-    sum(di) <= 2E), so its single-partition window is bounded by the
-    input's square root, not its size — same contract as the
-    vocabulary window in sampling.weighted_draws. The only output-sized
-    step is the final sequence() explode to dense k, which IS the
-    answer. Self-loops are dropped by the simple view (networkx raises
-    on them instead); vertices appear via their incident edges, which
-    matches networkx exactly because degree-0 nodes can never enter
-    N_k. phi uses the same integer-product double division as networkx,
-    so parity tests need no tolerance."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("vid"))
-        .unionByName(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    hist = deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_v"))
-    mdeg = (
-        und.join(deg.select(F.col("vid").alias("a"),
-                            F.col("degree").alias("da")), "a")
-        .join(deg.select(F.col("vid").alias("b"),
-                         F.col("degree").alias("db")), "b")
-        .select(F.least("da", "db").alias("degree"))
-    )
-    ehist = mdeg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_e"))
-    bp = (
-        hist.join(ehist, "degree", "full")
-        .select(
-            "degree",
-            F.coalesce("n_v", F.lit(0)).alias("n_v"),
-            F.coalesce("n_e", F.lit(0)).alias("n_e"),
-        )
-    )
-    # Suffix sums (counts at degree >= this breakpoint) + the previous
-    # breakpoint: rows k in [prev, degree-1] all see these counts,
-    # because N_{>k} / E_{>k} change only at breakpoint degrees.
-    w_desc = (
-        Window.orderBy(F.desc("degree"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_asc = Window.orderBy("degree")
-    steps = bp.select(
-        "degree",
-        F.sum("n_v").over(w_desc).alias("nodes_ge"),
-        F.sum("n_e").over(w_desc).alias("edges_ge"),
-        F.coalesce(F.lag("degree").over(w_asc), F.lit(0)).alias("prev"),
-    )
-    return (
-        steps.filter(F.col("nodes_ge") >= 2)
-        .select(
-            F.explode(
-                F.sequence("prev", F.col("degree") - 1)
-            ).alias("k"),
-            F.col("nodes_ge").alias("n_nodes"),
-            F.col("edges_ge").alias("n_edges"),
-        )
-        .withColumn(
-            "phi",
-            (F.lit(2) * F.col("n_edges"))
-            / (F.col("n_nodes") * (F.col("n_nodes") - F.lit(1))),
-        )
-    )

@@ -80,50 +80,3 @@ def test_content_column_pruned_from_structural_scan(spark, tiny_source, tmp_path
     scans = [line for line in plan.splitlines() if "ReadSchema" in line]
     assert scans, plan
     assert all("content" not in line for line in scans), "\n".join(scans)
-
-
-def test_project_bipartite_matches_networkx(spark):
-    """General one-mode projection == nx.bipartite.weighted_projected_graph
-    on both sides; cap drops hub groups loudly, not silently."""
-    import networkx as nx
-    from networkx.algorithms import bipartite as nxb
-
-    from engine.graph import project_bipartite
-    from tests.conftest import edges_df
-
-    # bipartite: left 0..9, right 100..105, deterministic membership
-    pairs = [(u, 100 + (u * k) % 6) for u in range(10) for k in (1, 2, 3)]
-    pairs = sorted(set(pairs))
-    df = edges_df(spark, pairs)
-    g = nx.Graph(pairs)
-    left = {u for u, _ in pairs}
-    for on, nodes in (("src", left), ("dst", {v for _, v in pairs})):
-        got = {
-            tuple(sorted((r.a, r.b))): r.weight
-            for r in project_bipartite(df, on=on).collect()
-        }
-        proj = nxb.weighted_projected_graph(g, nodes)
-        want = {
-            tuple(sorted((u, v))): float(d["weight"])
-            for u, v, d in proj.edges(data=True)
-        }
-        assert got == want, on
-    # cap: right vertex 100 is shared by many lefts; a tiny cap removes
-    # the pairs that only co-occur through over-cap groups
-    capped = {
-        tuple(sorted((r.a, r.b)))
-        for r in project_bipartite(df, on="src", cap=3).collect()
-    }
-    uncapped = {
-        tuple(sorted((r.a, r.b)))
-        for r in project_bipartite(df, on="src").collect()
-    }
-    assert capped < uncapped
-    with _pytest_raises_value("on must be"):
-        project_bipartite(df, on="vid")
-
-
-def _pytest_raises_value(match):
-    import pytest as _p
-
-    return _p.raises(ValueError, match=match)

@@ -157,24 +157,6 @@ def test_degree_histogram_matches_networkx(spark, tiny_graph, tiny_nx):
     assert got == want
 
 
-def test_degree_assortativity_matches_networkx(spark):
-    import networkx as nx
-    import pytest
-    from engine.graph import degree_assortativity
-    from tests.conftest import edges_df
-
-    g = nx.gnm_random_graph(60, 150, seed=33)
-    got = degree_assortativity(edges_df(spark, list(g.edges)))
-    want = nx.degree_assortativity_coefficient(g)
-    assert got == pytest.approx(want, abs=1e-9)
-
-    # star: perfectly disassortative
-    star = [(0, i) for i in range(1, 8)]
-    got_star = degree_assortativity(edges_df(spark, star))
-    want_star = nx.degree_assortativity_coefficient(nx.Graph(star))
-    assert got_star == pytest.approx(want_star, abs=1e-9)
-
-
 def test_reciprocity_matches_networkx(spark):
     import networkx as nx
     import pytest
@@ -204,86 +186,3 @@ def test_density_matches_networkx(spark):
     assert graph_density(
         edges_df(spark, pairs), directed=False
     ) == pytest.approx(nx.density(gu), abs=1e-12)
-
-
-def test_powerlaw_alpha_matches_direct_mle(spark, tiny_graph):
-    import math
-
-    import pytest
-    from engine.graph import powerlaw_alpha
-
-    _, e = tiny_graph
-    # direct MLE on the collected degree list (CSN 2009 eq. 3.7)
-    und = {}
-    for r in e.select("src", "dst").distinct().collect():
-        if r.src == r.dst:
-            continue
-        a, b = min(r.src, r.dst), max(r.src, r.dst)
-        und.setdefault(a, set()).add(b)
-        und.setdefault(b, set()).add(a)
-    for dmin in (1, 2, 3):
-        degs = [len(v) for v in und.values() if len(v) >= dmin]
-        slog = sum(math.log(d / (dmin - 0.5)) for d in degs)
-        want = 1.0 + len(degs) / slog
-        got = powerlaw_alpha(e, dmin=dmin)
-        assert got["alpha"] == pytest.approx(want, rel=1e-12)
-        assert got["n_tail"] == len(degs)
-        assert got["sigma"] == pytest.approx((want - 1) / len(degs) ** 0.5)
-
-
-def test_powerlaw_alpha_contracts(spark):
-    import pytest
-    from engine.graph import powerlaw_alpha
-    from tests.conftest import edges_df
-
-    with pytest.raises(ValueError, match="dmin"):
-        powerlaw_alpha(edges_df(spark, [(0, 1)]), dmin=0)
-    # a single edge: both degrees == dmin=1 -> Σlog over d/0.5 is log 2 > 0,
-    # fine; but dmin=2 leaves an empty tail
-    with pytest.raises(ValueError, match="no vertices"):
-        powerlaw_alpha(edges_df(spark, [(0, 1)]), dmin=2)
-
-
-def test_rich_club_matches_networkx(spark):
-    import networkx as nx
-    from engine.graph import rich_club
-    from tests.conftest import edges_df
-
-    # the nx docstring example plus random graphs — whole dict, no
-    # tolerance (same integer-ratio double division on both sides)
-    cases = [
-        nx.Graph([(0, 1), (0, 2), (1, 2), (1, 3), (1, 4), (4, 5)]),
-        nx.gnm_random_graph(40, 120, seed=11),
-        nx.barbell_graph(6, 2),
-        nx.star_graph(9),
-    ]
-    for g in cases:
-        g.remove_nodes_from(list(nx.isolates(g)))
-        got = {r.k: r.phi for r in rich_club(edges_df(spark, list(g.edges))).collect()}
-        want = nx.rich_club_coefficient(g, normalized=False)
-        assert got == want, g
-
-    # counts surface honestly: on the star, k=0 sees all nodes/edges
-    rows = {r.k: r for r in rich_club(edges_df(spark, list(nx.star_graph(9).edges))).collect()}
-    assert rows[0].n_nodes == 10 and rows[0].n_edges == 9
-
-
-def test_rich_club_simple_view_and_gaps(spark):
-    import networkx as nx
-    from engine.graph import rich_club
-    from tests.conftest import edges_df
-
-    # duplicate orientations + self loops collapse to the simple view
-    # (networkx would raise on the self loop; the engine's simple-view
-    # convention drops it, like every other shape statistic here)
-    pairs = [(0, 1), (1, 0), (1, 1), (1, 2), (0, 2), (2, 3)]
-    got = {r.k: r.phi for r in rich_club(edges_df(spark, pairs)).collect()}
-    g = nx.Graph([(0, 1), (1, 2), (0, 2), (2, 3)])
-    assert got == nx.rich_club_coefficient(g, normalized=False)
-
-    # degree gaps (degrees 1 and 50): dense k rows fill the gap with
-    # constant step values — parity over the whole range
-    hub = [(0, i) for i in range(1, 51)] + [(1, 2)]
-    got = {r.k: r.phi for r in rich_club(edges_df(spark, hub)).collect()}
-    want = nx.rich_club_coefficient(nx.Graph(hub), normalized=False)
-    assert got == want

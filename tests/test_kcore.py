@@ -1,12 +1,12 @@
 """k-core decomposition: h-index-fixpoint core numbers must equal
-``networkx.core_number`` exactly; single-k peel must equal ``nx.k_core``."""
+``networkx.core_number`` exactly."""
 
 from __future__ import annotations
 
 import networkx as nx
 import pytest
 
-from engine.algos.kcore import core_numbers, k_core
+from engine.algos.kcore import core_numbers
 from tests.conftest import edges_df, vertices_df
 
 HAND_GRAPHS = {
@@ -65,27 +65,3 @@ def test_core_numbers_on_fixture_graph(spark, tiny_graph, tiny_nx):
     got = {r.vid: r.core for r in res.cores.collect()}
     want = nx.core_number(tiny_nx.to_undirected())
     assert got == want
-
-
-@pytest.mark.parametrize("k", [1, 2, 3])
-def test_k_core_subgraph(spark, k):
-    g = nx.gnm_random_graph(60, 150, seed=11)
-    got = {
-        (r.a, r.b)
-        for r in k_core(spark, edges_df(spark, list(g.edges)), k).collect()
-    }
-    want = {(min(a, b), max(a, b)) for a, b in nx.k_core(g, k).edges}
-    assert got == want
-
-
-def test_k_core_empty_when_k_exceeds_degeneracy(spark):
-    pairs = [(0, 1), (1, 2), (2, 0)]  # triangle: degeneracy 2
-    assert k_core(spark, edges_df(spark, pairs), 3).count() == 0
-
-
-def test_k_core_raises_on_peel_exhaustion(spark):
-    """A partial peel is not the k-core; exhausting max_iter must fail
-    loudly (code-review regression: it used to return the partial set)."""
-    pairs = [(i, i + 1) for i in range(12)]  # path: sheds 2 vertices/round
-    with pytest.raises(RuntimeError, match="peel fixpoint"):
-        k_core(spark, edges_df(spark, pairs), k=2, max_iter=2)

@@ -117,6 +117,16 @@ def test_personalization_must_have_positive_mass(spark, tiny_graph):
         pagerank(spark, e, vertices=v, personalization=zero, max_iter=2)
 
 
+def test_personalization_mass_off_the_graph_fails_loudly(spark):
+    """Positive seed mass that lands only on vids outside the graph leaves
+    a zero teleport vector: a ValueError naming the absent seeds, not a
+    ZeroDivisionError from the first iteration's step."""
+    e = edges_df(spark, [(0, 1), (1, 2)])
+    absent = spark.createDataFrame([(99, 1.0)], "vid long, mass double")
+    with pytest.raises(ValueError, match="seeds absent"):
+        pagerank(spark, e, personalization=absent, max_iter=5)
+
+
 # ring + a few chords: connected, non-trivial stationary vector
 RING_CHORDS = [(i, (i + 1) % 30) for i in range(30)] + [
     (0, 15), (7, 22), (11, 3), (18, 9)

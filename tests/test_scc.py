@@ -88,63 +88,3 @@ def test_inner_exhaustion_reports_nonconvergence(spark):
     assert res2.converged
     got = {r.vid: r.label for r in res2.labels.collect()}
     assert got == {v: 0 for v in range(n)}
-
-
-def test_condensation_matches_networkx(spark):
-    import networkx as nx
-
-    from engine.algos.scc import condensation
-    from engine.algos.toposort import topological_layers
-
-    g = nx.gnm_random_graph(40, 120, seed=6, directed=True)
-    pairs = list(g.edges())
-    labels, q = condensation(spark, edges_df(spark, pairs))
-    lab = {r.vid: r.label for r in labels.collect()}
-    got = {(r.src, r.dst): r.weight for r in q.collect()}
-    # nx oracle: map nx condensation's integer ids to our min-vid labels
-    C = nx.condensation(g)
-    to_min = {c: min(C.nodes[c]["members"]) for c in C.nodes}
-    want_edges = set()
-    for a, b in C.edges():
-        want_edges.add((to_min[a], to_min[b]))
-    assert set(got) == want_edges
-    # weights = original cross-component multiplicities
-    for (a, b), w in got.items():
-        true_w = sum(
-            1 for u, v in pairs if lab[u] == a and lab[v] == b
-        )
-        assert w == true_w
-    # the quotient is a DAG and our own toposort agrees
-    tp = topological_layers(spark, q)
-    assert tp.is_dag
-    tp.layers.unpersist()
-    tp.unlayered.unpersist()
-    # labels agree with nx SCC membership
-    for c in C.nodes:
-        members = C.nodes[c]["members"]
-        assert {lab[v] for v in members} == {min(members)}
-
-
-def test_condensation_rejects_partial_and_reuses_scc(spark):
-    import pytest as _pytest
-
-    from engine.algos.scc import SCCResult, condensation
-
-    pairs = [(0, 1), (1, 0), (1, 2)]
-    res = strongly_connected_components(spark, edges_df(spark, pairs))
-    labels, q = condensation(spark, edges_df(spark, pairs), scc=res)
-    assert {(r.src, r.dst, r.weight) for r in q.collect()} == {(0, 2, 1)}
-    fake = SCCResult(labels=res.labels, outer_rounds=1, converged=False)
-    with _pytest.raises(ValueError, match="partial"):
-        condensation(spark, edges_df(spark, pairs), scc=fake)
-
-
-def test_condensation_rejects_kwargs_with_precomputed_scc(spark):
-    import pytest as _pytest
-
-    from engine.algos.scc import condensation
-
-    pairs = [(0, 1), (1, 0)]
-    res = strongly_connected_components(spark, edges_df(spark, pairs))
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        condensation(spark, edges_df(spark, pairs), scc=res, max_outer=9)
