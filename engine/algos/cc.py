@@ -23,8 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import observed_checkpoint
-from engine.algos.pagerank import iterative_conf, set_loop_partitions
+from engine.loop import fingerprint, iterative_conf, step
 
 
 @dataclass
@@ -91,11 +90,11 @@ def connected_components(
 ) -> CCResult:
     """Label every vertex with the min vid of its connected component
     (edge direction ignored; isolated vertices keep their own vid)."""
-    with iterative_conf(spark):
-        return _cc_loop(spark, edges, vertices, max_rounds)
+    with iterative_conf(spark) as size:
+        return _cc_loop(edges, vertices, max_rounds, size)
 
 
-def _cc_loop(spark, edges, vertices, max_rounds):
+def _cc_loop(edges, vertices, max_rounds, size):
     if vertices is None:
         vertices = (
             edges.select(F.col("src").alias("vid"))
@@ -104,20 +103,20 @@ def _cc_loop(spark, edges, vertices, max_rounds):
         )
     vids = vertices.select("vid")
 
-    e, prev = observed_checkpoint(  # lineage cut per round, in-memory
+    e, prev = step(  # lineage cut per round, in-memory
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct(),
-        "u", "v",
+        **fingerprint("u", "v"),
     )
     # Scale-adaptive loop partitioning from the edge count the setup
     # materialization just observed (no extra job); the star-step rounds
     # build fresh plans, so no layout contract spans the conf change.
     # Symmetric view: row_bytes=32, as in the other symmetric-view loops.
-    set_loop_partitions(spark, prev[0], row_bytes=32)
+    size(prev["n"], row_bytes=32)
     rounds = 0
     for rounds in range(1, max_rounds + 1):
-        nxt, cur = observed_checkpoint(_small_star(_large_star(e)), "u", "v")
+        nxt, cur = step(_small_star(_large_star(e)), **fingerprint("u", "v"))
         e.unpersist()  # previous round's edge set is never read again
         e = nxt
         if cur == prev:

@@ -23,8 +23,8 @@ Per-iteration plan (mirrors lpa.py's co-partitioned loop):
     degree (intrinsic: any h-index evaluation reads the whole
     neighborhood). No arrays, no Python, whole-stage codegen throughout.
   - convergence by the count+xxhash64 state checksum CC and LPA use
-    (loopstate.observed_checkpoint), observed on each state's
-    localCheckpoint job; evicted states unpersisted.
+    (engine.loop.fingerprint), observed on each state's ``step`` job;
+    evicted states unpersisted.
 
 Round complexity: the fixpoint needs rounds proportional to how far wrong
 the degree initialization is along chains (a path graph takes O(n) rounds
@@ -42,8 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import observed_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.loop import fingerprint, iterative_conf, step
 
 
 @dataclass
@@ -63,10 +62,10 @@ def core_numbers(
 
     ``vertices``: optional (vid, ...) to include edge-less vertices, same
     contract as the other algorithms."""
-    # Scale-adaptive loop partitioning (pagerank.loop_shuffle_partitions)
-    # needs the size before the nbrs layout commits a partition count; the
-    # symmetric view doubles the rows (row_bytes=32 ~ 2 x 16B edge rows).
-    with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
+    # Scale-adaptive loop partitioning (engine.loop) needs the size before
+    # the nbrs layout commits a partition count; the symmetric view
+    # doubles the rows (row_bytes=32 ~ 2 x 16B edge rows).
+    with iterative_conf(spark, rows=edges.count(), row_bytes=32):
         return _kcore_loop(spark, edges, vertices, max_iter)
 
 
@@ -82,10 +81,10 @@ def _kcore_loop(spark, edges, vertices, max_iter):
     )
     # est0 = degree; the h-operator only ever lowers it (guarded by least()
     # below), so the loop is a monotone descent onto the coreness fixpoint.
-    est, prev_cs = observed_checkpoint(
+    est, prev_cs = step(
         nbrs.groupBy(F.col("v").alias("vid"))
         .agg(F.count(F.lit(1)).cast("int").alias("est")),
-        "vid", "est",
+        **fingerprint("vid", "est"),
     )
 
     w = Window.partitionBy("u").orderBy(F.desc("est"), "v")
@@ -102,10 +101,10 @@ def _kcore_loop(spark, edges, vertices, max_iter):
         hidx = ranked.groupBy(F.col("u").alias("vid")).agg(
             F.max(F.least("est", "rn")).cast("int").alias("h")
         )
-        new_est, cs = observed_checkpoint(
+        new_est, cs = step(
             est.join(hidx, "vid", "left")
             .select("vid", F.least("est", F.coalesce("h", F.lit(0))).alias("est")),
-            "vid", "est",
+            **fingerprint("vid", "est"),
         )
         old, est = est, new_est
         old.unpersist()

@@ -35,7 +35,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.loop import iterative_conf
 
 log = logging.getLogger(__name__)
 

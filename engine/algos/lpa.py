@@ -29,8 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import observed_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.graph import undirected
+from engine.loop import fingerprint, iterative_conf, step
 
 
 @dataclass
@@ -48,7 +48,7 @@ def label_propagation(
 ) -> LPAResult:
     # Scale-adaptive loop partitioning; size known before the nbrs/vids
     # layouts commit a partition count (symmetric view: row_bytes=32).
-    with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
+    with iterative_conf(spark, rows=edges.count(), row_bytes=32):
         return _lpa_loop(spark, edges, vertices, max_iter)
 
 
@@ -77,8 +77,9 @@ def _lpa_loop(spark, edges, vertices, max_iter):
         .localCheckpoint(eager=True)
     )
 
-    labels, cs0 = observed_checkpoint(
-        vids.select("vid", F.col("vid").alias("label")), "vid", "label"
+    labels, cs0 = step(
+        vids.select("vid", F.col("vid").alias("label")),
+        **fingerprint("vid", "label"),
     )
     history: list[tuple[tuple[int, int], DataFrame]] = [(cs0, labels)]
 
@@ -95,11 +96,11 @@ def _lpa_loop(spark, edges, vertices, max_iter):
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("b")
         ).select("vid", (-F.col("b.nl")).alias("label"))
         # (d): vertices with no neighbors keep their current label.
-        new_labels, cs = observed_checkpoint(
+        new_labels, cs = step(
             vids.join(best, "vid", "left")
             .join(labels.withColumnRenamed("label", "old"), "vid", "left")
             .select("vid", F.coalesce("label", "old").alias("label")),
-            "vid", "label",
+            **fingerprint("vid", "label"),
         )
         if cs == history[-1][0]:
             labels = new_labels
@@ -109,9 +110,10 @@ def _lpa_loop(spark, edges, vertices, max_iter):
         if len(history) >= 2 and cs == history[-2][0]:
             a = new_labels
             b = history[-1][1].withColumnRenamed("label", "label_b")
-            labels = a.join(b, "vid").select(
+            labels, _ = step(a.join(b, "vid").select(
                 "vid", F.least("label", "label_b").alias("label")
-            ).localCheckpoint(eager=True)
+            ))
+            new_labels.unpersist()
             converged = True
             break
         history.append((cs, new_labels))
@@ -149,14 +151,7 @@ def community_edge_stats(
     the intra/degree sums while they still count in m, skewing Q —
     networkx raises NotAPartition for the same input (ADVICE r3). Under
     coverage, ``sum(deg_c) == 2m`` exactly, which is the check."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = und.localCheckpoint(eager=True)
+    und = undirected(edges).localCheckpoint(eager=True)
     m = und.count()
     lab = labels.select("vid", "label")
     lab_a = lab.select(F.col("vid").alias("a"), F.col("label").alias("la"))

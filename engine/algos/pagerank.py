@@ -25,7 +25,7 @@ Scale design (the parts that must survive 10^12 edges):
   PageRank Computation via a Sparse Linear System", 2005). The whole
   iteration — gather join, aggregation, update join, new-state
   materialization — is a single Spark job; the L1 delta and the iterate's
-  total mass ride that same job via ``df.observe`` (Observation API). No
+  total mass ride that same job (``engine.loop.step``). No
   driver scalar enters the plan, so every iteration's physical plan and
   generated code are identical and Spark's codegen cache serves every
   iteration after the first without compiling. On a DAG (the
@@ -41,11 +41,6 @@ Scale design (the parts that must survive 10^12 edges):
   ``salt_hub_threshold`` for non-algebraic gathers, but measured OFF as the
   default: at 10.3M edges it costs a full extra exchange per iteration
   (2.06 s/iter -> 1.26 s/iter at local[32] when removed, r2 probes).
-- **Pinned planner conf for the loop** (``iterative_conf``): AQE off (it
-  re-plans every one of the O(iterations) materializations — measured ~5x
-  per-iteration overhead at small scale, no benefit for these static
-  shapes) and shuffled-hash over sort-merge (SMJ would re-sort the edge
-  cache every iteration).
 - **Constant-depth plans + resumability**: each iteration's state is a
   Parquet checkpoint, re-read as the next iteration's input (lineage cut);
   resume picks up from the last committed manifest (io.RunCheckpoint).
@@ -53,9 +48,7 @@ Scale design (the parts that must survive 10^12 edges):
 
 from __future__ import annotations
 
-import os
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -65,98 +58,7 @@ from pyspark.storagelevel import StorageLevel
 
 from engine.graph import hub_vertices
 from engine.io import RunCheckpoint
-
-
-# Target bytes per loop shuffle partition (guide §2.2: 100 MB - 1 GB per
-# reduce partition).
-LOOP_TARGET_PARTITION_BYTES = 128 << 20
-
-
-def loop_shuffle_partitions(
-    spark: SparkSession, rows: int, row_bytes: int = 16
-) -> int:
-    """Scale-adaptive shuffle partition count for the iteration loops.
-
-    The loops run with AQE off (``iterative_conf``), so the static count is
-    binding — and the session default is sized for the whole relational
-    surface (2x cores locally; O(total-input-bytes/128MB) on a cluster,
-    per engine.session), not for one loop's O(E) working set. Derive the
-    loop's count from ITS input instead (guide §2.2 "fewer, larger reduce
-    partitions"): ceil(rows*row_bytes / LOOP_TARGET_PARTITION_BYTES),
-    floored at the task-slot count (every core gets work at any size) and
-    capped at the session value (the deployment's chosen upper bound). At
-    bench scale (3.45M edges, 32 cores) the floor binds — 32 partitions
-    measured 0.71 s vs 1.2 s per pagerank iteration against the 2x-cores
-    default (interleaved A/B, tools/probe_iter.py); at cluster scale the
-    bytes term dominates and grows with the data, so tasks stay
-    ~target-sized.
-    """
-    cores = _executor_cores(spark)
-    session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    by_bytes = -(-int(rows) * row_bytes // LOOP_TARGET_PARTITION_BYTES)
-    return max(1, min(max(by_bytes, cores), max(session_p, cores)))
-
-
-def _executor_cores(spark: SparkSession) -> int:
-    """Concurrent task slots — the loop partition floor. NOT
-    ``defaultParallelism``: engine.session sets ``spark.default.parallelism``
-    to 2x the core count, which is a parallelism default, not the slot
-    count. ``local[N]`` is parsed directly; on a cluster the scheduler's
-    ``defaultParallelism`` (total cores when ``spark.default.parallelism``
-    is unset) is the available proxy — at worst a 2x-high floor there,
-    where the bytes term dominates anyway."""
-    master = spark.sparkContext.master
-    if master.startswith("local["):
-        n = master[6:].rstrip("]")
-        if n != "*":
-            return int(n)
-        return os.cpu_count() or 2
-    return spark.sparkContext.defaultParallelism
-
-
-def set_loop_partitions(spark: SparkSession, rows: int, row_bytes: int = 16) -> int:
-    """Apply :func:`loop_shuffle_partitions` mid-loop (for operators whose
-    input size is first observed on their setup materialization). Must run
-    inside ``iterative_conf``, which restores the session value on exit."""
-    p = loop_shuffle_partitions(spark, rows, row_bytes)
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    return p
-
-
-@contextmanager
-def iterative_conf(
-    spark: SparkSession,
-    loop_rows: int | None = None,
-    row_bytes: int = 16,
-):
-    """Pin query-planning conf for driver-controlled iteration loops; restore
-    on exit so relational queries keep AQE.
-
-    ``loop_rows``: when the loop's input row count is known up front, the
-    loop's ``spark.sql.shuffle.partitions`` is set scale-adaptively via
-    :func:`loop_shuffle_partitions` (and restored on exit). Operators whose
-    size is only observed on the setup materialization call
-    :func:`set_loop_partitions` instead — the restore here covers both."""
-    conf = spark.conf
-    saved = {
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.join.preferSortMergeJoin": conf.get(
-            "spark.sql.join.preferSortMergeJoin"
-        ),
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-    }
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    if loop_rows is not None:
-        conf.set(
-            "spark.sql.shuffle.partitions",
-            str(loop_shuffle_partitions(spark, loop_rows, row_bytes)),
-        )
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
+from engine.loop import iterative_conf, step
 
 
 @dataclass
@@ -288,7 +190,7 @@ def pagerank(
     # scan; the bucketed path is exempt — its partitioning IS the saved
     # bucket count, which the session value already matches.
     loop_rows = None if edges_pre_partitioned else edges.count()
-    with iterative_conf(spark, loop_rows=loop_rows):
+    with iterative_conf(spark, rows=loop_rows):
         return _pagerank_loop(
             spark, edges, vertices, alpha, tol, max_iter, weighted,
             personalization, checkpoint, checkpoint_every, resume,
@@ -490,13 +392,10 @@ def _pagerank_loop(
         ranks = filled.select("vid", "p", (F.col("v0") * scale).alias("value"))
     else:
         ranks = base.select("vid", "p", p_col.alias("value"))
-    robs = Observation("pr_init")
-    ranks = ranks.observe(robs, F.sum("value").alias("mass")).localCheckpoint(
-        eager=True
-    )
+    ranks, row = step(ranks, mass=F.sum("value"))
     # The normalizer when no iteration runs (a resume at max_iter); every
     # iteration then observes its own iterate's mass.
-    mass = float(robs.get["mass"])
+    mass = float(row["mass"])
 
     converged = False
     delta = float("inf")
@@ -552,21 +451,18 @@ def _pagerank_loop(
     it = start_iter
     prev_cached = ranks
     loop_start = (max_iter + 1) if converged else (start_iter + 1)
-    obs_delta = F.sum("diff").alias("delta")
-    obs_mass = F.sum("value").alias("mass")
+    observed = {"delta": F.sum("diff"), "mass": F.sum("value")}
     for it in range(loop_start, max_iter + 1):
         t0 = time.monotonic()
-        obs = Observation(f"pr_{it}")
-        # Observe BELOW the slimming select: the delta/mass metrics ride
-        # the same job, but the materialized state excludes the transient
-        # ``diff`` column (less block-write traffic per iteration).
-        staged = (
-            _gather_update(norm, ranks, cols, has_hubs, bcast)
-            .observe(obs, obs_delta, obs_mass)
-            .select(*STATE_COLS)
-        )
+        new = _gather_update(norm, ranks, cols, has_hubs, bcast)
 
         if checkpoint is not None and (it % checkpoint_every == 0):
+            # Observe BELOW the slimming select: the delta/mass metrics
+            # ride the write job, but the snapshot excludes ``diff``.
+            obs = Observation(f"pr_{it}")
+            staged = new.observe(
+                obs, *(c.alias(k) for k, c in observed.items())
+            ).select(*STATE_COLS)
             # Stage marker + hash(vid) alignment: the explicit repartition
             # pins file part-index == pmod(hash(vid), P) so a crash between
             # here and commit() is recoverable per-partition (salvage
@@ -589,8 +485,10 @@ def _pagerank_loop(
                 prev_cached = None
             ranks = checkpoint.read(spark, it).select(*STATE_COLS)
         else:
-            cached = staged.localCheckpoint(eager=True)
-            delta, mass = _relative_step(obs.get)
+            # The in-memory state keeps ``diff``: the delta/mass metrics
+            # ride the materialization, which observes the frame it stores.
+            cached, row = step(new, **observed)
+            delta, mass = _relative_step(row)
             wall = time.monotonic() - t0
             metrics.append(_iter_metrics(it, delta, mass, wall, n_edges, n))
             if prev_cached is not None:

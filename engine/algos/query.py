@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.loop import iterative_conf, step
 
 
 def context_query(
@@ -54,18 +54,18 @@ def _query_loop(spark, vertices, edges, topic, max_depth, dont_follow):
         expandable = frontier.join(typed, "vid").filter(
             ~F.col("vtype").isin(list(dont_follow))
         ).select("vid")
-        nxt = (
+        nxt, found = step(
             nbrs.join(expandable.withColumnRenamed("vid", "u"), "u", "left_semi")
             .select(F.col("v").alias("vid"))
             .distinct()
             .join(visited.select("vid"), "vid", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
+            .withColumn("depth", F.lit(d)),
+            n=F.count(F.lit(1)),
         )
-        if nxt.isEmpty():
+        if found["n"] == 0:
             nxt.unpersist()
             break
-        new_visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        new_visited, _ = step(visited.unionByName(nxt))
         # Both reads of the previous round's states are now materialized —
         # release them (bounds cached state to 2 frames, not O(depth)).
         for df in live:

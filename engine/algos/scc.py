@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.loop import iterative_conf, step
 
 
 @dataclass
@@ -58,12 +58,9 @@ def strongly_connected_components(
         return _scc_loop(spark, edges, vertices, max_outer, max_inner)
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
 def _scc_loop(spark, edges, vertices, max_outer, max_inner):
-    e = _ckpt(
+    count = F.count(F.lit(1))
+    e, _ = step(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -75,25 +72,35 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
     )
     if vertices is not None:
         verts = verts.unionByName(vertices.select("vid")).distinct()
-    live_v = _ckpt(verts)          # unassigned vertices
+    live_v, live = step(verts, n=count)  # unassigned vertices
     live_e = e                      # edges among unassigned vertices
     assigned = None                 # (vid, label) accumulated across rounds
 
     def add(labels):
+        """Fold a materialized (vid, label) frame into ``assigned``."""
         nonlocal assigned
-        labels = _ckpt(labels)
         if assigned is None:
             assigned = labels
         else:
             prev = assigned
-            assigned = _ckpt(prev.unionByName(labels))
+            assigned, _ = step(prev.unionByName(labels))
             prev.unpersist()
             labels.unpersist()
+
+    def restrict(keep):
+        """(live_v, live_e, live) narrowed to the ``keep`` vertices."""
+        new_v, n = step(keep, n=count)
+        new_e, _ = step(
+            live_e.join(new_v.select(F.col("vid").alias("src")), "src", "semi")
+            .join(new_v.select(F.col("vid").alias("dst")), "dst", "semi")
+        )
+        live_v.unpersist(); live_e.unpersist()
+        return new_v, new_e, n
 
     converged = False
     outer = 0
     for outer in range(1, max_outer + 1):
-        if live_v.limit(1).count() == 0:
+        if live["n"] == 0:
             converged = True
             break
 
@@ -104,20 +111,18 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
             srcs = live_e.select(F.col("src").alias("vid")).distinct()
             dsts = live_e.select(F.col("dst").alias("vid")).distinct()
             both = srcs.join(dsts, "vid", "semi")
-            trimmed = live_v.join(both, "vid", "anti")
-            n_trim = trimmed.limit(1).count()
-            if n_trim == 0:
+            trimmed, t = step(
+                live_v.join(both, "vid", "anti")
+                .select("vid", F.col("vid").alias("label")),
+                n=count,
+            )
+            if t["n"] == 0:
+                trimmed.unpersist()
                 trim_done = True
                 break
-            add(trimmed.select("vid", F.col("vid").alias("label")))
-            new_v = _ckpt(live_v.join(both, "vid", "semi"))
-            new_e = _ckpt(
-                live_e.join(new_v.select(F.col("vid").alias("src")), "src", "semi")
-                .join(new_v.select(F.col("vid").alias("dst")), "dst", "semi")
-            )
-            live_v.unpersist(); live_e.unpersist()
-            live_v, live_e = new_v, new_e
-        if live_v.limit(1).count() == 0:
+            add(trimmed)
+            live_v, live_e, live = restrict(live_v.join(both, "vid", "semi"))
+        if live["n"] == 0:
             converged = True
             break
         if not trim_done:
@@ -131,7 +136,9 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
         # coloring would produce FALSE roots (vertices that merely never
         # saw the true max) and silently wrong components, so exhaustion
         # aborts the round with converged=False instead of capturing.
-        color = _ckpt(live_v.select("vid", F.col("vid").alias("color")))
+        # ``grew`` flags the rows a round raised; their count, observed on
+        # the state's own materialization, is the fixpoint test.
+        color, _ = step(live_v.select("vid", F.col("vid").alias("color")))
         color_done = False
         for _ in range(max_inner):
             pushed = (
@@ -141,22 +148,17 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
                 .groupBy(F.col("dst").alias("vid"))
                 .agg(F.max("color").alias("pc"))
             )
-            new_color = _ckpt(
+            new_color, c = step(
                 color.join(pushed, "vid", "left").select(
-                    "vid", F.greatest("color", F.coalesce("pc", F.lit(-1))).alias("color")
-                )
-            )
-            delta = (
-                new_color.join(
-                    color.select("vid", F.col("color").alias("oc")), "vid"
-                )
-                .filter("color != oc")
-                .limit(1)
-                .count()
+                    "vid",
+                    F.greatest("color", F.coalesce("pc", F.lit(-1))).alias("color"),
+                    (F.col("pc") > F.col("color")).alias("grew"),
+                ),
+                changed=F.count_if("grew"),
             )
             color.unpersist()
             color = new_color
-            if delta == 0:
+            if c["changed"] == 0:
                 color_done = True
                 break
 
@@ -167,33 +169,34 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
         # 3. CAPTURE: backward BFS from every root inside its color class.
         # member(vid, root): vid is in the SCC of `root`.
         roots = color.filter("vid = color").select(F.col("vid").alias("root"))
-        member = _ckpt(roots.select(F.col("root").alias("vid"), "root"))
+        member, _ = step(roots.select(F.col("root").alias("vid"), "root"))
         # same-color edge list, reversed (we walk towards the root's
         # predecessors), built once per outer round
-        ce = _ckpt(
+        ce = (
             live_e.join(color.select(F.col("vid").alias("src"), F.col("color").alias("cs")), "src")
             .join(color.select(F.col("vid").alias("dst"), F.col("color").alias("cd")), "dst")
             .filter("cs = cd")
             .select(F.col("dst").alias("u"), F.col("src").alias("v"), F.col("cs").alias("color"))
+            .localCheckpoint(eager=True)
         )
         frontier = member
         capture_done = False
         for _ in range(max_inner):
-            step = (
+            found, f = step(
                 ce.join(frontier.select(F.col("vid").alias("u"), "root"), "u")
                 .filter(F.col("color") == F.col("root"))
                 .select(F.col("v").alias("vid"), "root")
                 .distinct()
-                .join(member, ["vid", "root"], "anti")
+                .join(member, ["vid", "root"], "anti"),
+                n=count,
             )
-            step = _ckpt(step)
-            if step.limit(1).count() == 0:
+            if f["n"] == 0:
                 capture_done = True
-                step.unpersist()
+                found.unpersist()
                 break
             prev_m, prev_f = member, frontier
-            member = _ckpt(member.unionByName(step))
-            frontier = step
+            member, _ = step(member.unionByName(found))
+            frontier = found
             prev_m.unpersist()
             if prev_f is not prev_m:
                 prev_f.unpersist()
@@ -204,19 +207,15 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
 
         # canonical label = min vid of the component (root vid is the MAX
         # by construction of the coloring)
-        scc_labels = member.groupBy("root").agg(F.min("vid").alias("label")).join(
-            member, "root"
-        ).select("vid", "label")
+        scc_labels, _ = step(
+            member.groupBy("root").agg(F.min("vid").alias("label"))
+            .join(member, "root")
+            .select("vid", "label")
+        )
         add(scc_labels)
         captured = member.select("vid")
-        new_v = _ckpt(live_v.join(captured, "vid", "anti"))
-        new_e = _ckpt(
-            live_e.join(new_v.select(F.col("vid").alias("src")), "src", "semi")
-            .join(new_v.select(F.col("vid").alias("dst")), "dst", "semi")
-        )
-        live_v.unpersist(); live_e.unpersist()
+        live_v, live_e, live = restrict(live_v.join(captured, "vid", "anti"))
         member.unpersist(); ce.unpersist(); color.unpersist()
-        live_v, live_e = new_v, new_e
 
     out = assigned if assigned is not None else verts.select(
         "vid", F.col("vid").alias("label")

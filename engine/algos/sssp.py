@@ -12,13 +12,14 @@ rounds; non-negative weights are required (checked) so the fixpoint is
 the true distance and termination is guaranteed.
 
 Spark shape (mirrors the other loops): edges normalized and partitioned
-ONCE by dst; the state stays hash(vid)-partitioned; per round one join +
-one min-aggregate + one co-partitioned merge join, one scalar job for the
-change count. "Infinity" is represented by ABSENCE — the state only holds
-settled/tentative vertices, so a round's work is proportional to the
-reached frontier's edge cut, not to V (on a 10^12-file corpus with a
-small seed set, early rounds touch a vanishing fraction of the graph, and
-the engine never materializes an O(V) all-infinity vector).
+ONCE by src; the state stays hash(vid)-partitioned; per round one join +
+one min-aggregate + one co-partitioned merge join, materialized with the
+change count observed on that same job (engine.loop.step). "Infinity"
+is represented by ABSENCE — the state only holds settled/tentative
+vertices, so a round's work is proportional to the reached frontier's
+edge cut, not to V (on a 10^12-file corpus with a small seed set, early
+rounds touch a vanishing fraction of the graph, and the engine never
+materializes an O(V) all-infinity vector).
 
 Oracle: ``networkx.single_source_dijkstra_path_length`` / multi-source
 (tests/test_sssp.py, exact on integer-weight fixtures, 1e-9 on floats).
@@ -31,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.loop import iterative_conf, step
 
 
 @dataclass
@@ -79,11 +80,10 @@ def _sssp_loop(spark, edges, sources, weighted, max_iter, max_dist):
             "(a NULL weight would silently never relax its edge)"
         )
 
-    dist = (
+    dist, _ = step(
         sources.select("vid").distinct()
         .select("vid", F.lit(0.0).alias("dist"))
         .repartition(P, "vid")
-        .localCheckpoint(eager=True)
     )
 
     converged = False
@@ -112,11 +112,10 @@ def _sssp_loop(spark, edges, sources, weighted, max_iter, max_dist):
         )
         if max_dist is not None:
             merged = merged.filter(F.col("dist") <= max_dist)
-        new_dist = merged.localCheckpoint(eager=True)
-        changed = new_dist.filter("improved").limit(1).count()
+        new_dist, row = step(merged, changed=F.count_if("improved"))
         old, dist = dist, new_dist.drop("improved")
         old.unpersist()
-        if changed == 0:
+        if row["changed"] == 0:
             converged = True
             break
 

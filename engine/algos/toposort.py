@@ -19,7 +19,7 @@ frontier×edges equi-join on src (edges can stay hash-partitioned on src
 for the whole loop) plus one partial-aggregable groupBy(dst) count and
 one join updating the remaining-degree table, which only SHRINKS. Rounds
 = DAG depth, the same bound any parallel formulation pays. Loop state
-(degree table) goes through ``fresh_checkpoint`` and is released per
+(degree table) goes through ``engine.loop.step`` and is released per
 round; the only driver-side values are scalar counts.
 
 Verum parity: the reference's NetworkX toolkit exposes DAG utilities via
@@ -31,11 +31,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import fresh_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.loop import iterative_conf, step
 
 
 @dataclass
@@ -57,15 +56,13 @@ def topological_layers(
     count as cycles. Parallel edges are collapsed (in-degree is counted
     over DISTINCT (src, dst) so duplicates don't inflate the peel gate).
     """
-    # Scale-adaptive loop partitioning (see pagerank.loop_shuffle_partitions).
-    with iterative_conf(spark, loop_rows=edges.count()):
+    # Scale-adaptive loop partitioning (engine.loop).
+    with iterative_conf(spark, rows=edges.count()):
         return _kahn(spark, edges, vertices, max_depth, require_dag)
 
 
 def _kahn(spark, edges, vertices, max_depth, require_dag):
-    e = fresh_checkpoint(
-        edges.select("src", "dst").distinct()
-    )
+    e, _ = step(edges.select("src", "dst").distinct())
     if vertices is None:
         verts = (
             e.select(F.col("src").alias("vid"))
@@ -76,7 +73,7 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
         verts = vertices.select("vid")
 
     # Remaining in-degree; vertices with no incoming edge start at 0.
-    deg = fresh_checkpoint(
+    deg, _ = step(
         verts.join(
             e.groupBy(F.col("dst").alias("vid")).agg(
                 F.count(F.lit(1)).alias("d")
@@ -89,18 +86,15 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
     # Per-layer frontiers stay cached until the end; the layer table is
     # assembled lazily from them and materialized ONCE after the peel
     # (the r5 shape re-checkpointed the growing union every round). The
-    # frontier count rides the frontier materialization as an Observation.
+    # frontier count is observed on the frontier's own materialization.
     frontiers: list[DataFrame] = []
     assigned_parts: list[DataFrame] = []
     depth = 0
     for k in range(max_depth + 1):
-        fobs = Observation()
-        frontier = fresh_checkpoint(
-            deg.filter(F.col("d") == 0).select("vid")
-            .observe(fobs, F.count(F.lit(1)).alias("n"))
+        frontier, f = step(
+            deg.filter(F.col("d") == 0).select("vid"), n=F.count(F.lit(1))
         )
-        n = int(fobs.get["n"] or 0)
-        if n == 0:
+        if f["n"] == 0:
             frontier.unpersist()
             break
         depth = k + 1
@@ -112,7 +106,7 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        new_deg = fresh_checkpoint(
+        new_deg, _ = step(
             deg.join(frontier, "vid", "left_anti")
             .join(dec, "vid", "left")
             .select("vid", (F.col("d") - F.coalesce("c", F.lit(0))).alias("d"))
@@ -126,11 +120,8 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
             "(DAG depth exceeds the cap)"
         )
 
-    uobs = Observation()
-    unlayered = fresh_checkpoint(
-        deg.select("vid").observe(uobs, F.count(F.lit(1)).alias("n"))
-    )
-    remaining = int(uobs.get["n"] or 0)
+    unlayered, u = step(deg.select("vid"), n=F.count(F.lit(1)))
+    remaining = u["n"]
     deg.unpersist()
     e.unpersist()
     if remaining > 0 and require_dag:
@@ -145,7 +136,7 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
         acc = assigned_parts[0]
         for part in assigned_parts[1:]:
             acc = acc.unionByName(part)
-        layers = fresh_checkpoint(acc)
+        layers, _ = step(acc)
         for fr in frontiers:
             fr.unpersist()
     return TopoResult(

@@ -18,26 +18,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.graph import undirected, undirected_degrees
+from engine.loop import iterative_conf
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """(src, dst, dkey) — degree-ordered orientation of the simple
     undirected view; dkey = struct(deg(dst), dst) for wedge ordering."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    und = undirected(edges)
+    deg = undirected_degrees(und)
     keyed = (
-        und.join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
-        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
+        und.join(deg.select(F.col("vid").alias("a"), F.col("deg").alias("da")), "a")
+        .join(deg.select(F.col("vid").alias("b"), F.col("deg").alias("db")), "b")
         .select(
             "a", "b",
             F.struct(F.col("da").alias("d"), F.col("a").alias("v")).alias("ka"),
@@ -117,18 +109,7 @@ def clustering_coefficients(spark: SparkSession, edges: DataFrame) -> DataFrame:
     small denominators evaluate identically in double)."""
     with iterative_conf(spark):
         tri = _per_vertex(spark, edges)
-        und = (
-            edges.select(F.least("src", "dst").alias("a"),
-                         F.greatest("src", "dst").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        deg = (
-            und.select(F.col("a").alias("vid"))
-            .unionByName(und.select(F.col("b").alias("vid")))
-            .groupBy("vid")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
+        deg = undirected_degrees(undirected(edges))
         possible = F.col("deg") * (F.col("deg") - 1) / 2.0
         return tri.join(deg, "vid", "left").select(
             "vid",
@@ -143,18 +124,7 @@ def transitivity(spark: SparkSession, edges: DataFrame) -> float:
     view (``networkx.transitivity``); 0.0 for wedge-free graphs."""
     with iterative_conf(spark):
         tri = _count(spark, edges)
-        und = (
-            edges.select(F.least("src", "dst").alias("a"),
-                         F.greatest("src", "dst").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        deg = (
-            und.select(F.col("a").alias("vid"))
-            .unionByName(und.select(F.col("b").alias("vid")))
-            .groupBy("vid")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
+        deg = undirected_degrees(undirected(edges))
         row = deg.agg(
             F.sum(F.col("deg") * (F.col("deg") - 1) / 2).alias("wedges")
         ).collect()[0]

@@ -97,8 +97,21 @@ def _assign_vertex_ids_scalable(distinct_names: DataFrame) -> DataFrame:
         )
         .persist()
     )
-    counts = {r["pid"]: r["n"] for r in
-              ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()}
+    local_rank = F.col("mid") - F.col("pid").cast("long") * F.lit(1 << 33)
+    rows = ranged.groupBy("pid").agg(
+        F.count(F.lit(1)).alias("n"), F.max(local_rank).alias("top")
+    ).collect()
+    # The rank arithmetic rests on that bit layout; a partition whose max
+    # local rank is not its count - 1 means it no longer holds.
+    broken = [r["pid"] for r in rows if r["top"] + 1 != r["n"]]
+    if broken:
+        ranged.unpersist()
+        raise RuntimeError(
+            "monotonically_increasing_id is no longer pid*2^33 + a "
+            f"per-partition row counter (partitions {broken[:5]}): the "
+            "scalable vid assignment would emit wrong vids"
+        )
+    counts = {r["pid"]: r["n"] for r in rows}
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -108,7 +121,6 @@ def _assign_vertex_ids_scalable(distinct_names: DataFrame) -> DataFrame:
             [(pid, off) for pid, off in offsets.items()], "pid int, off long"
         )
     )
-    local_rank = F.col("mid") - F.col("pid").cast("long") * F.lit(1 << 33)
     out = (
         ranged.join(off_df, "pid")
         .select(
@@ -160,6 +172,30 @@ def hub_vertices(edges: DataFrame, threshold: int = 10_000) -> DataFrame:
     list (popular langs/commits, BASELINE.json north_star). Computed once at
     derivation; tiny (O(#langs + #hot commits)), always broadcastable."""
     return in_degrees(edges).filter(F.col("in_deg") > threshold).select("vid", "in_deg")
+
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """Undirected simple view as one row per edge: (a, b) with a < b —
+    endpoints ordered, self-loops dropped, parallel and reciprocal edges
+    collapsed. The view triangles, degree profiles, density and
+    modularity are defined on."""
+    return (
+        edges.select(F.least("src", "dst").alias("a"),
+                     F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def undirected_degrees(und: DataFrame) -> DataFrame:
+    """(vid, deg) over an :func:`undirected` view: vertices of degree 0
+    have no row."""
+    return (
+        und.select(F.col("a").alias("vid"))
+        .unionByName(und.select(F.col("b").alias("vid")))
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -284,19 +320,10 @@ def degree_histogram(edges: DataFrame) -> DataFrame:
     first-look profile of any link graph (how heavy is the tail, where do
     the hubs start). Two aggregates; matches ``networkx.degree_histogram``
     for every non-zero degree (tests/test_graph_layout.py)."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"),
-                     F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+    deg = undirected_degrees(undirected(edges))
+    return deg.groupBy(F.col("deg").alias("degree")).agg(
+        F.count(F.lit(1)).alias("n_vertices")
     )
-    deg = (
-        und.select(F.col("a").alias("vid"))
-        .unionByName(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_vertices"))
 
 
 def reciprocity(edges: DataFrame) -> float:
@@ -331,19 +358,19 @@ def reciprocity(edges: DataFrame) -> float:
 def graph_density(edges: DataFrame, directed: bool = True) -> float:
     """|E| / (|V|·(|V|-1)) (halved denominator when undirected) over the
     simple loop-free view — == ``networkx.density``. Two scalar jobs."""
-    simple = edges.select("src", "dst").filter(
-        F.col("src") != F.col("dst")
-    )
-    if not directed:
-        simple = simple.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
+    if directed:
+        simple = (
+            edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-    simple = simple.distinct().localCheckpoint(eager=True)
+    else:
+        simple = undirected(edges)
+    simple = simple.localCheckpoint(eager=True)
     m = simple.count()
     nv = (
-        simple.select(F.col("src").alias("vid"))
-        .unionByName(simple.select(F.col("dst").alias("vid")))
+        simple.select(F.col("a").alias("vid"))
+        .unionByName(simple.select(F.col("b").alias("vid")))
         .distinct()
         .count()
     )

@@ -88,6 +88,21 @@ def test_scalable_vid_assignment_matches_window_path(spark, tiny_graph):
     assert row.vtype == "repo"
 
 
+def test_scalable_vid_assignment_checks_the_id_layout(spark, tiny_graph, monkeypatch):
+    """The scalable path reads local ranks off the monotonically_increasing_id
+    bit layout; an id that is not pid*2^33 + a row counter must fail loudly,
+    not yield shifted vids."""
+    import pytest
+
+    from engine.graph import assign_vertex_ids
+
+    v, _ = tiny_graph
+    mid = F.monotonically_increasing_id
+    monkeypatch.setattr(F, "monotonically_increasing_id", lambda: mid() + 1)
+    with pytest.raises(RuntimeError, match="monotonically_increasing_id"):
+        assign_vertex_ids(v.select("name"), scalable=True)
+
+
 def test_scalable_vid_parallelism_invariant(spark, tiny_graph):
     """Same vids regardless of shuffle partition count (partition boundaries
     move, global ranks don't)."""
@@ -112,7 +127,8 @@ def test_bucketed_table_no_edge_exchange(spark, tiny_graph):
     groupBy(src) and the PageRank prep run with no Exchange on the edge
     side, and pagerank(edges_pre_partitioned=True) matches the plain run."""
     import numpy as np
-    from engine.algos.pagerank import pagerank, _prepare_edges, iterative_conf
+    from engine.algos.pagerank import pagerank, _prepare_edges
+    from engine.loop import iterative_conf
     from engine.graph import load_edges_bucketed, save_edges_bucketed
 
     v, e = tiny_graph

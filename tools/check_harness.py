@@ -1,18 +1,19 @@
 """Validate __spark_entry__.queries() against oracle_sql() via DuckDB —
 a local stand-in for the driver's CORRECTNESS harness.
 
-Usage: PYTHONPATH=/root/repo python tools/check_harness.py [sf_dir] [names...]
+Usage: python tools/check_harness.py [sf_dir] [names...]
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
 from engine.session import get_spark  # noqa: E402
