@@ -1722,7 +1722,7 @@ def oracle_sql() -> dict[str, str]:
         # with explicit integer-valued scores = in-degree, so the
         # score/deg ordering ratio and the phi division are bit-identical
         # doubles in both engines). und = the undirected simple view
-        # (self-loops dropped, parallel edges collapsed — graph.symmetrize);
+        # (self-loops dropped, parallel edges collapsed — graph.neighbours);
         # an edge is cut by prefix k iff exactly one endpoint ranks <= k,
         # so cut(k) = running(#min-rank<=k) - running(#max-rank<=k).
         # g16: per-community modularity ingredients of the vtype partition

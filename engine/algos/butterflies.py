@@ -49,7 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.loop import iterative_conf
+from engine.loop import iterative_conf, release
 
 
 @dataclass
@@ -170,8 +170,7 @@ def _butterflies(spark, edges, max_center_degree, per_vertex):
             F.sum(F.col("cw") * (F.col("cw") - 1)).alias("b")
         ).collect()[0]
         total = int(row["b"] or 0) // 2
-        w.unpersist()
-        e.unpersist()
+        release(w, e)
         return ButterflyResult(total, side, kept_cost, centers_skipped, None)
 
     pair_cnt = pair_cnt.localCheckpoint(eager=True)
@@ -219,7 +218,5 @@ def _butterflies(spark, edges, max_center_degree, per_vertex):
         )
     )
     pv = all_nc.unionByName(all_c).localCheckpoint(eager=True)
-    pair_cnt.unpersist()
-    w.unpersist()
-    e.unpersist()
+    release(pair_cnt, w, e)
     return ButterflyResult(total, side, kept_cost, centers_skipped, pv)

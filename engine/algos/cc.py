@@ -23,7 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.loop import fingerprint, iterative_conf, step
+from engine.loop import fingerprint, iterative_conf, release, step
 
 
 @dataclass
@@ -117,7 +117,7 @@ def _cc_loop(edges, vertices, max_rounds, size):
     rounds = 0
     for rounds in range(1, max_rounds + 1):
         nxt, cur = step(_small_star(_large_star(e)), **fingerprint("u", "v"))
-        e.unpersist()  # previous round's edge set is never read again
+        release(e)  # previous round's edge set is never read again
         e = nxt
         if cur == prev:
             break

@@ -24,7 +24,7 @@ Per-iteration plan (mirrors lpa.py's co-partitioned loop):
     neighborhood). No arrays, no Python, whole-stage codegen throughout.
   - convergence by the count+xxhash64 state checksum CC and LPA use
     (engine.loop.fingerprint), observed on each state's ``step`` job;
-    evicted states unpersisted.
+    each superseded state released.
 
 Round complexity: the fixpoint needs rounds proportional to how far wrong
 the degree initialization is along chains (a path graph takes O(n) rounds
@@ -42,7 +42,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.loop import fingerprint, iterative_conf, step
+from engine.graph import neighbours
+from engine.loop import fingerprint, iterative_conf, release, step
 
 
 @dataclass
@@ -71,14 +72,7 @@ def core_numbers(
 
 def _kcore_loop(spark, edges, vertices, max_iter):
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nbrs = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
+    nbrs = neighbours(edges).repartition(P, "v").localCheckpoint(eager=True)
     # est0 = degree; the h-operator only ever lowers it (guarded by least()
     # below), so the loop is a monotone descent onto the coreness fixpoint.
     est, prev_cs = step(
@@ -106,8 +100,8 @@ def _kcore_loop(spark, edges, vertices, max_iter):
             .select("vid", F.least("est", F.coalesce("h", F.lit(0))).alias("est")),
             **fingerprint("vid", "est"),
         )
-        old, est = est, new_est
-        old.unpersist()
+        release(est)
+        est = new_est
         if cs == prev_cs:
             converged = True
             break
@@ -118,5 +112,5 @@ def _kcore_loop(spark, edges, vertices, max_iter):
         cores = vertices.select("vid").join(cores, "vid", "left").select(
             "vid", F.coalesce("core", F.lit(0)).alias("core")
         )
-    nbrs.unpersist()
+    release(nbrs)
     return KCoreResult(cores, it, converged)

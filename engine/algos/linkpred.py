@@ -35,21 +35,12 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.graph import neighbours
 from engine.loop import iterative_conf
 
 log = logging.getLogger(__name__)
 
 SCORE_COLS = ("a", "b", "common", "jaccard", "adamic_adar")
-
-
-def _adjacency(edges: DataFrame) -> DataFrame:
-    """Symmetric simple adjacency (v, nbr)."""
-    return (
-        edges.select(F.col("src").alias("v"), F.col("dst").alias("nbr"))
-        .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("nbr")))
-        .filter(F.col("v") != F.col("nbr"))
-        .distinct()
-    )
 
 
 def _degrees(adj: DataFrame) -> DataFrame:
@@ -100,14 +91,14 @@ def link_scores(
     ``common >= min_common`` under the ``center_cap`` policy.
     """
     with iterative_conf(spark):
-        adj = _adjacency(edges).localCheckpoint(eager=True)
-        try:
-            deg = _degrees(adj)
-            if pairs is not None:
-                return _score_candidates(pairs, adj, deg)
-            return _enumerate(adj, deg, center_cap, min_common, log_dropped)
-        finally:
-            adj.unpersist()
+        # Symmetric simple adjacency (v, nbr); the returned scores read it.
+        adj = neighbours(edges).select(
+            F.col("u").alias("v"), F.col("v").alias("nbr")
+        ).localCheckpoint(eager=True)
+        deg = _degrees(adj)
+        if pairs is not None:
+            return _score_candidates(pairs, adj, deg)
+        return _enumerate(adj, deg, center_cap, min_common, log_dropped)
 
 
 def _score_candidates(pairs: DataFrame, adj: DataFrame, deg: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ Scale shape:
 - Driver traffic: scalars (total volume, the argmin row) and the K-row
   sweep table only; ``members`` stays a DataFrame.
 
-Conductance is over the UNDIRECTED SIMPLE graph (graph.symmetrize:
+Conductance is over the UNDIRECTED SIMPLE graph (graph.neighbours:
 self-loops dropped, parallel edges collapsed; degree = number of
 distinct neighbors), the standard ACL setting. Directed input is
 symmetrized internally; the PPR scores that define the sweep ORDER may
@@ -47,7 +47,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.algos.pagerank import pagerank
-from engine.graph import symmetrize
+from engine.graph import neighbours
+from engine.loop import release
 
 
 @dataclass(frozen=True)
@@ -124,8 +125,10 @@ def ppr_sweep(
 
     # Materialized ONCE: the r5 shape recomputed this O(E) distinct for
     # every consumer (degree pass, sweep binning, volume count) — four
-    # full symmetrize jobs for one sweep.
-    und = symmetrize(edges).localCheckpoint(eager=True)
+    # full symmetric-view jobs for one sweep.
+    und = neighbours(edges).select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
+    ).localCheckpoint(eager=True)
     deg = und.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -214,8 +217,7 @@ def ppr_sweep(
     # the rank map's and edge view's jobs are done once the sweep table is
     # materialized; release their checkpoint blocks (the returned `sweep`
     # is caller-owned)
-    ranked.unpersist()
-    und.unpersist()
+    release(ranked, und)
 
     best = (
         sweep.filter(F.col("conductance").isNotNull())

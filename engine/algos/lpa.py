@@ -29,8 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.graph import undirected
-from engine.loop import fingerprint, iterative_conf, step
+from engine.graph import neighbours, undirected
+from engine.loop import fingerprint, iterative_conf, release, step
 
 
 @dataclass
@@ -68,20 +68,13 @@ def _lpa_loop(spark, edges, vertices, max_iter):
     # v: the per-iteration vote join reshuffles neither the O(E) edge table
     # nor the O(V) label state (labels stay hash(vid) and the vid->v rename
     # preserves the partitioning through the projection).
-    nbrs = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
+    nbrs = neighbours(edges).repartition(P, "v").localCheckpoint(eager=True)
 
-    labels, cs0 = step(
+    labels, cs = step(
         vids.select("vid", F.col("vid").alias("label")),
         **fingerprint("vid", "label"),
     )
-    history: list[tuple[tuple[int, int], DataFrame]] = [(cs0, labels)]
+    sums = [cs]  # every state's checksum; only the last state is kept
 
     converged = False
     it = 0
@@ -102,35 +95,23 @@ def _lpa_loop(spark, edges, vertices, max_iter):
             .select("vid", F.coalesce("label", "old").alias("label")),
             **fingerprint("vid", "label"),
         )
-        if cs == history[-1][0]:
-            labels = new_labels
+        if cs == sums[-1]:
             converged = True
-            break
-        # (e) oscillation breaker: 2-cycle -> elementwise min of both states.
-        if len(history) >= 2 and cs == history[-2][0]:
-            a = new_labels
-            b = history[-1][1].withColumnRenamed("label", "label_b")
-            labels, _ = step(a.join(b, "vid").select(
-                "vid", F.least("label", "label_b").alias("label")
-            ))
-            new_labels.unpersist()
+        elif len(sums) >= 2 and cs == sums[-2]:
+            # (e) oscillation breaker: 2-cycle -> elementwise min of both.
+            merged, _ = step(new_labels.join(
+                labels.withColumnRenamed("label", "label_b"), "vid"
+            ).select("vid", F.least("label", "label_b").alias("label")))
+            release(new_labels)
+            new_labels = merged
             converged = True
-            break
-        history.append((cs, new_labels))
-        if len(history) > 3:
-            # Evicted states are never compared again — release their
-            # localCheckpoint blocks so a long run holds at most 3 states
-            # in executor storage (VERDICT r1 item 8).
-            history.pop(0)[1].unpersist()
+        sums.append(cs)
+        release(labels)
         labels = new_labels
+        if converged:
+            break
 
-    # Release everything the result does not reference: the loop inputs and
-    # all cached states except the final labels.
-    for _cs, df in history:
-        if df is not labels:
-            df.unpersist()
-    nbrs.unpersist()
-    vids.unpersist()
+    release(nbrs, vids)
     return LPAResult(labels, it, converged)
 
 
@@ -173,10 +154,10 @@ def community_edge_stats(
         .select("label", F.coalesce("l_c", F.lit(0)).alias("l_c"), "deg_c")
         .localCheckpoint(eager=True)
     )
-    und.unpersist()
+    release(und)
     n_tagged2 = stats.agg(F.sum("deg_c")).collect()[0][0] or 0
     if int(n_tagged2) != 2 * m:
-        stats.unpersist()
+        release(stats)
         raise ValueError(
             f"labels do not cover every edge endpoint: {m - n_tagged2 // 2} "
             f"of {m} undirected edges have an unlabeled endpoint — "
@@ -208,7 +189,7 @@ def modularity(
         F.sum(F.col("deg_c") * F.col("deg_c")).alias("sd2"),
         F.sum("deg_c").alias("sd"),
     ).collect()[0]
-    stats.unpersist()
+    release(stats)
     m = int(row["sd"] or 0) // 2
     if m == 0:
         return 0.0

@@ -58,7 +58,7 @@ from pyspark.storagelevel import StorageLevel
 
 from engine.graph import hub_vertices
 from engine.io import RunCheckpoint
-from engine.loop import iterative_conf, step
+from engine.loop import iterative_conf, release, step
 
 
 @dataclass
@@ -322,6 +322,7 @@ def _pagerank_loop(
     ).collect()[0]
     n, tot = row["n"], row["tot"]
     if n == 0:
+        release(base, norm)
         return PageRankResult(
             vids.select(
                 F.col("vid").cast("long").alias("vid"), F.lit(0.0).alias("value")
@@ -333,8 +334,7 @@ def _pagerank_loop(
     elif tot is not None and float(tot) > 0.0:
         p_col = F.col("p") / F.lit(float(tot))
     else:
-        base.unpersist()
-        norm.unpersist()
+        release(base, norm)
         raise ValueError(
             f"personalization mass on graph vertices must sum > 0 (got "
             f"{tot!r}): seeds absent from the graph, or an empty or "
@@ -393,6 +393,11 @@ def _pagerank_loop(
     else:
         ranks = base.select("vid", "p", p_col.alias("value"))
     ranks, row = step(ranks, mass=F.sum("value"))
+    if initial_ranks is not None and resumed_from is None:
+        release(filled)
+    # The materialized iterate behind ``ranks`` (None once a Parquet
+    # snapshot is the state of record).
+    held = ranks
     # The normalizer when no iteration runs (a resume at max_iter); every
     # iteration then observes its own iterate's mass.
     mass = float(row["mass"])
@@ -444,12 +449,13 @@ def _pagerank_loop(
             metrics.append(m)
             checkpoint.commit(it_s, m, list(state.columns))
             start_iter = it_s
+            release(held)
+            held = None
             ranks = state
             if delta < tol:
                 converged = True
 
     it = start_iter
-    prev_cached = ranks
     loop_start = (max_iter + 1) if converged else (start_iter + 1)
     observed = {"delta": F.sum("diff"), "mass": F.sum("value")}
     for it in range(loop_start, max_iter + 1):
@@ -476,13 +482,10 @@ def _pagerank_loop(
             m = _iter_metrics(it, delta, mass, wall, n_edges, n)
             metrics.append(m)
             checkpoint.commit(it, m, list(staged.columns))
-            # The parquet snapshot is now the state of record — release the
-            # prior iteration's localCheckpoint blocks (ADVICE r1: with
-            # checkpoint_every=1 the initial state otherwise stays pinned
-            # for the whole run).
-            if prev_cached is not None:
-                prev_cached.unpersist()
-                prev_cached = None
+            # The parquet snapshot is now the state of record.
+            if held is not None:
+                release(held)
+                held = None
             ranks = checkpoint.read(spark, it).select(*STATE_COLS)
         else:
             # The in-memory state keeps ``diff``: the delta/mass metrics
@@ -491,17 +494,16 @@ def _pagerank_loop(
             delta, mass = _relative_step(row)
             wall = time.monotonic() - t0
             metrics.append(_iter_metrics(it, delta, mass, wall, n_edges, n))
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = cached
+            if held is not None:
+                release(held)
+            held = cached
             ranks = cached.select(*STATE_COLS)
 
         if delta < tol:
             converged = True
             break
 
-    norm.unpersist()
-    base.unpersist()
+    release(norm, base)
     # pi = x / ||x||_1 (x >= 0). API stability: vids go back out as long
     # regardless of the internal narrowing decision.
     out = ranks.select(

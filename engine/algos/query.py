@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.loop import iterative_conf, step
+from engine.graph import neighbours
+from engine.loop import iterative_conf, release, step
 
 
 def context_query(
@@ -37,19 +38,12 @@ def context_query(
 
 
 def _query_loop(spark, vertices, edges, topic, max_depth, dont_follow):
-    nbrs = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # Self-loops dropped: the left_anti against visited removes them anyway.
+    nbrs = neighbours(edges).localCheckpoint(eager=True)
     typed = vertices.select("vid", "vtype")
 
     visited = topic.select("vid").distinct().withColumn("depth", F.lit(0))
-    frontier = visited.select("vid")
-    # Checkpoints still readable by the NEXT round (frontier + visited);
-    # older ones are released as soon as their last consumer materializes.
-    live: list[DataFrame] = []
+    frontier = visited
     for d in range(1, max_depth + 1):
         expandable = frontier.join(typed, "vid").filter(
             ~F.col("vtype").isin(list(dont_follow))
@@ -63,18 +57,19 @@ def _query_loop(spark, vertices, edges, topic, max_depth, dont_follow):
             n=F.count(F.lit(1)),
         )
         if found["n"] == 0:
-            nxt.unpersist()
+            release(nxt)
             break
         new_visited, _ = step(visited.unionByName(nxt))
-        # Both reads of the previous round's states are now materialized —
-        # release them (bounds cached state to 2 frames, not O(depth)).
-        for df in live:
-            df.unpersist()
-        live = [nxt, new_visited]
-        visited = new_visited
-        frontier = nxt.select("vid")
+        # Both reads of the previous round's states are now materialized.
+        # Round 1's frontier is the topic frame, which no step made.
+        if frontier is not visited:
+            release(frontier, visited)
+        frontier, visited = nxt, new_visited
 
-    nbrs.unpersist()  # only the loop reads it; results reference edges/visited
+    # The result reads edges and the visited set only.
+    release(nbrs)
+    if frontier is not visited:
+        release(frontier)
     sub_vertices = vertices.join(visited, "vid").select("vid", "name", "vtype", "depth")
     keep = visited.select("vid")
     sub_edges = (

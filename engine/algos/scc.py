@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.loop import iterative_conf, step
+from engine.loop import iterative_conf, release, step
 
 
 @dataclass
@@ -84,8 +84,7 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
         else:
             prev = assigned
             assigned, _ = step(prev.unionByName(labels))
-            prev.unpersist()
-            labels.unpersist()
+            release(prev, labels)
 
     def restrict(keep):
         """(live_v, live_e, live) narrowed to the ``keep`` vertices."""
@@ -94,7 +93,7 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
             live_e.join(new_v.select(F.col("vid").alias("src")), "src", "semi")
             .join(new_v.select(F.col("vid").alias("dst")), "dst", "semi")
         )
-        live_v.unpersist(); live_e.unpersist()
+        release(live_v, live_e)
         return new_v, new_e, n
 
     converged = False
@@ -117,7 +116,7 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
                 n=count,
             )
             if t["n"] == 0:
-                trimmed.unpersist()
+                release(trimmed)
                 trim_done = True
                 break
             add(trimmed)
@@ -156,14 +155,14 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
                 ),
                 changed=F.count_if("grew"),
             )
-            color.unpersist()
+            release(color)
             color = new_color
             if c["changed"] == 0:
                 color_done = True
                 break
 
         if not color_done:
-            color.unpersist()
+            release(color)
             break
 
         # 3. CAPTURE: backward BFS from every root inside its color class.
@@ -192,17 +191,18 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
             )
             if f["n"] == 0:
                 capture_done = True
-                found.unpersist()
+                release(found)
                 break
-            prev_m, prev_f = member, frontier
-            member, _ = step(member.unionByName(found))
-            frontier = found
-            prev_m.unpersist()
-            if prev_f is not prev_m:
-                prev_f.unpersist()
+            new_member, _ = step(member.unionByName(found))
+            release(member)
+            if frontier is not member:
+                release(frontier)
+            member, frontier = new_member, found
+        if frontier is not member:
+            release(frontier)
 
         if not capture_done:
-            member.unpersist(); ce.unpersist(); color.unpersist()
+            release(member, ce, color)
             break
 
         # canonical label = min vid of the component (root vid is the MAX
@@ -215,11 +215,10 @@ def _scc_loop(spark, edges, vertices, max_outer, max_inner):
         add(scc_labels)
         captured = member.select("vid")
         live_v, live_e, live = restrict(live_v.join(captured, "vid", "anti"))
-        member.unpersist(); ce.unpersist(); color.unpersist()
+        release(member, ce, color)
 
     out = assigned if assigned is not None else verts.select(
         "vid", F.col("vid").alias("label")
     ).limit(0)
-    live_v.unpersist()
-    live_e.unpersist()
+    release(live_v, live_e)
     return SCCResult(out, outer, converged)

@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.loop import iterative_conf, step
+from engine.loop import iterative_conf, release, step
 
 
 @dataclass
@@ -74,17 +74,18 @@ def _sssp_loop(spark, edges, sources, weighted, max_iter, max_dist):
     )
     bad = e.filter(F.col("w").isNull() | (F.col("w") < 0)).limit(1).count()
     if bad:
-        e.unpersist()
+        release(e)
         raise ValueError(
             "shortest_paths requires non-null, non-negative edge weights "
             "(a NULL weight would silently never relax its edge)"
         )
 
-    dist, _ = step(
+    state, _ = step(
         sources.select("vid").distinct()
         .select("vid", F.lit(0.0).alias("dist"))
         .repartition(P, "vid")
     )
+    dist = state
 
     converged = False
     it = 0
@@ -112,13 +113,12 @@ def _sssp_loop(spark, edges, sources, weighted, max_iter, max_dist):
         )
         if max_dist is not None:
             merged = merged.filter(F.col("dist") <= max_dist)
-        new_dist, row = step(merged, changed=F.count_if("improved"))
-        old, dist = dist, new_dist.drop("improved")
-        old.unpersist()
+        new_state, row = step(merged, changed=F.count_if("improved"))
+        release(state)
+        state, dist = new_state, new_state.drop("improved")
         if row["changed"] == 0:
             converged = True
             break
 
-    out = dist
-    e.unpersist()
-    return SSSPResult(out, it, converged)
+    release(e)
+    return SSSPResult(dist, it, converged)

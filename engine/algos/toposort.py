@@ -30,11 +30,12 @@ the repo->path->lang dependency DAG the engine derives.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.loop import iterative_conf, step
+from engine.loop import iterative_conf, release, step
 
 
 @dataclass
@@ -88,18 +89,14 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
     # (the r5 shape re-checkpointed the growing union every round). The
     # frontier count is observed on the frontier's own materialization.
     frontiers: list[DataFrame] = []
-    assigned_parts: list[DataFrame] = []
-    depth = 0
-    for k in range(max_depth + 1):
+    for _ in range(max_depth + 1):
         frontier, f = step(
             deg.filter(F.col("d") == 0).select("vid"), n=F.count(F.lit(1))
         )
         if f["n"] == 0:
-            frontier.unpersist()
+            release(frontier)
             break
-        depth = k + 1
         frontiers.append(frontier)
-        assigned_parts.append(frontier.select("vid", F.lit(k).alias("layer")))
         # Decrement successors of the peeled layer; drop the peeled rows.
         dec = (
             e.join(frontier.withColumnRenamed("vid", "src"), "src")
@@ -111,7 +108,7 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
             .join(dec, "vid", "left")
             .select("vid", (F.col("d") - F.coalesce("c", F.lit(0))).alias("d"))
         )
-        deg.unpersist()
+        release(deg)
         deg = new_deg
     else:
         raise ValueError(
@@ -122,26 +119,24 @@ def _kahn(spark, edges, vertices, max_depth, require_dag):
 
     unlayered, u = step(deg.select("vid"), n=F.count(F.lit(1)))
     remaining = u["n"]
-    deg.unpersist()
-    e.unpersist()
+    release(deg, e)
     if remaining > 0 and require_dag:
         sample = [r.vid for r in unlayered.limit(5).collect()]
         raise ValueError(
             f"input graph is not a DAG: {remaining} vertices on or "
             f"downstream of a directed cycle (e.g. vids {sample})"
         )
-    if not assigned_parts:
+    if not frontiers:
         layers = spark.createDataFrame([], "vid long, layer int")
     else:
-        acc = assigned_parts[0]
-        for part in assigned_parts[1:]:
-            acc = acc.unionByName(part)
-        layers, _ = step(acc)
-        for fr in frontiers:
-            fr.unpersist()
+        layers, _ = step(reduce(DataFrame.unionByName, (
+            fr.select("vid", F.lit(k).alias("layer"))
+            for k, fr in enumerate(frontiers)
+        )))
+        release(*frontiers)
     return TopoResult(
         layers=layers,
         unlayered=unlayered,
         is_dag=(remaining == 0),
-        depth=depth,
+        depth=len(frontiers),
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.graph import undirected, undirected_degrees
-from engine.loop import iterative_conf
+from engine.loop import iterative_conf, release
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -62,7 +62,9 @@ def _count(spark, edges):
         ["wa", "wb"],
         "inner",
     )
-    return closed.count()
+    n = closed.count()
+    release(o)
+    return n
 
 
 def triangles_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:

@@ -35,6 +35,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from engine.loop import release
+
 log = logging.getLogger("verum_spark.dedup")
 
 BUCKET_CAP = 64  # max docs per LSH bucket before the bucket is dropped
@@ -105,8 +107,8 @@ def minhash_signatures(
 
 def _seal(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
     """Materialize the (capped, small) result, then release the persisted
-    intermediates (VERDICT r2 item 4 — the dedup module now follows the same
-    no-outliving-persists policy as the algorithm modules, lpa.py:126).
+    intermediates (``engine.loop.release``, the policy every engine module
+    follows).
 
     localCheckpoint(eager=True) computes the result once while the
     intermediate cache is still live, stores only the O(candidate-pairs)
@@ -115,8 +117,7 @@ def _seal(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
     returned DataFrame's lifetime (ContextCleaner reclaims them on GC) —
     bounded by the bucket caps, not by corpus size."""
     out = result.localCheckpoint(eager=True)
-    for df in intermediates:
-        df.unpersist()
+    release(*intermediates)
     return out
 
 

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from engine.loop import release
+
 EDGE_RELS = ("repo_path", "path_lang", "repo_commit", "cooccur")
 
 
@@ -60,11 +62,11 @@ def assign_vertex_ids(names: DataFrame, scalable: bool | None = None) -> DataFra
         )
         if cached:
             out = out.localCheckpoint(eager=True)
-            distinct.unpersist()
+            release(distinct)
         return out
     out = _assign_vertex_ids_scalable(distinct)
     if cached:
-        distinct.unpersist()
+        release(distinct)
     return out
 
 
@@ -105,7 +107,7 @@ def _assign_vertex_ids_scalable(distinct_names: DataFrame) -> DataFrame:
     # local rank is not its count - 1 means it no longer holds.
     broken = [r["pid"] for r in rows if r["top"] + 1 != r["n"]]
     if broken:
-        ranged.unpersist()
+        release(ranged)
         raise RuntimeError(
             "monotonically_increasing_id is no longer pid*2^33 + a "
             f"per-partition row counter (partitions {broken[:5]}): the "
@@ -133,7 +135,7 @@ def _assign_vertex_ids_scalable(distinct_names: DataFrame) -> DataFrame:
         # to keep recomputation deterministic.
         .localCheckpoint(eager=True)
     )
-    ranged.unpersist()
+    release(ranged)
     return out
 
 
@@ -198,16 +200,14 @@ def undirected_degrees(und: DataFrame) -> DataFrame:
     )
 
 
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected simple view: edges ∪ reversed, self-loops dropped,
-    parallel edges collapsed (weights summed). Used by CC/LPA/triangles."""
-    fwd = edges.select("src", "dst", "weight")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    return (
-        fwd.unionByName(rev)
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.sum("weight").alias("weight"))
+def neighbours(edges: DataFrame) -> DataFrame:
+    """Symmetric neighbour list (u, v): both orientations of
+    :func:`undirected`, so self-loops are dropped and parallel and
+    reciprocal edges collapsed. The view LPA, k-core, the context query,
+    link scores and the sweep cut walk."""
+    und = undirected(edges)
+    return und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
 
 
@@ -344,14 +344,14 @@ def reciprocity(edges: DataFrame) -> float:
     )
     n = simple.count()
     if n == 0:
-        simple.unpersist()
+        release(simple)
         return float("nan")
     mutual = simple.join(
         simple.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         ["src", "dst"],
         "semi",
     ).count()
-    simple.unpersist()
+    release(simple)
     return float(mutual) / float(n)
 
 
@@ -374,7 +374,7 @@ def graph_density(edges: DataFrame, directed: bool = True) -> float:
         .distinct()
         .count()
     )
-    simple.unpersist()
+    release(simple)
     if nv <= 1:
         return 0.0
     pairs = nv * (nv - 1) if directed else nv * (nv - 1) / 2

@@ -366,9 +366,7 @@ def refresh_components(
     mid = (
         lbl.join(aff, "label", "left_anti")
         .unionByName(sub_cc.labels.select("vid", "label"))
-    )
-    aff.unpersist()
-    members.unpersist()
+    )  # reads aff, and members through sub_cc: both stay with the result
     if added_edges is not None:
         return merge_components(spark, mid, added_edges, new_vertices)
     if new_vertices is not None:

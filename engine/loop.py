@@ -1,5 +1,6 @@
 """The iterative-loop policy every engine loop shares: pinned planner conf,
-scale-adaptive loop partitions, and one lineage-cutting state step.
+scale-adaptive loop partitions, one lineage-cutting state step, and one
+release of what the engine materialized.
 
 **Pinned planner conf** (:func:`iterative_conf`): AQE off (it re-plans
 every one of the O(iterations) materializations — measured ~5x
@@ -39,6 +40,21 @@ on its own (the join is then co-partitioned or shuffled); explicit
 Materializations that no loop feeds back (neighbour
 lists, oriented edges, warm-start inputs) keep a plain ``localCheckpoint``,
 whose carried stats still steer broadcast choices.
+
+**Release** (:func:`release`): the one way the engine frees a frame it
+materialized. ``DataFrame.unpersist()`` only drops CacheManager entries,
+and a checkpoint has none: its blocks belong to the RDD under its
+``LogicalRDD`` leaf, which stays in executor storage until a driver GC
+lets the ContextCleaner find it. At 10^9 edges every such leftover state
+is O(E) of memory or disk. ``release`` therefore unpersists that RDD for
+a checkpointed frame (every :func:`step` output and every
+``localCheckpoint``), ``unpersist()``s a ``persist()``ed one, and raises
+``TypeError`` for anything else (a projection of a checkpoint, say), so
+a release that would free nothing fails loudly. The rule: release a
+frame once no unmaterialized plan reads it, and never release a frame
+the caller gets back, nor one a returned lazy frame reads. A read after
+release fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; Spark cannot
+recompute a local checkpoint.
 """
 
 from __future__ import annotations
@@ -48,6 +64,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 # Target bytes per loop shuffle partition (guide §2.2: 100 MB - 1 GB per
 # reduce partition).
@@ -190,3 +207,19 @@ def _strip_origin_stats(df: DataFrame) -> DataFrame:
         spark._jsparkSession, plan
     )
     return DataFrame(jdf, spark)
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free checkpointed or persisted frames (module docstring); raise
+    ``TypeError`` on any other frame, which would stay in storage."""
+    for df in dfs:
+        if df.storageLevel != StorageLevel.NONE:
+            df.unpersist()
+            continue
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getName() != _LOGICAL_RDD:
+            raise TypeError(
+                "release() takes a checkpointed or persisted frame; this "
+                f"one reads {plan.nodeName()}, so nothing would be freed"
+            )
+        plan.rdd().unpersist(False)

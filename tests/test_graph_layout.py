@@ -8,10 +8,10 @@ from pyspark.sql import functions as F
 from engine.graph import (
     hub_vertices,
     load_edges_csr,
+    neighbours,
     out_degrees,
     save_edges_csr,
     scoring_projection,
-    symmetrize,
 )
 from engine.report import top_k, top_k_per_type
 from tests.conftest import edges_df
@@ -46,10 +46,10 @@ def test_out_degrees_and_hubs(spark):
     assert od[1] == 1 and od[0] == 1
 
 
-def test_symmetrize_collapses_and_drops_loops(spark):
-    e = edges_df(spark, [(0, 1, 2.0), (1, 0, 1.0), (1, 1, 5.0)])
-    s = {(r.src, r.dst): r.weight for r in symmetrize(e).collect()}
-    assert s == {(0, 1): 3.0, (1, 0): 3.0}
+def test_neighbours_collapses_and_drops_loops(spark):
+    e = edges_df(spark, [(0, 1), (1, 0), (0, 1), (1, 1), (2, 1)])
+    got = sorted((r.u, r.v) for r in neighbours(e).collect())
+    assert got == [(0, 1), (1, 0), (1, 2), (2, 1)]
 
 
 def test_scoring_projection_adds_damped_reverse(spark):

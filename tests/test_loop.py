@@ -1,4 +1,5 @@
-"""engine.loop: the loop conf's sizing and the state step's plan statistics.
+"""engine.loop: the loop conf's sizing, the state step's plan statistics
+and the release of superseded states.
 
 A loop state that carries its origin plan's statistics squares its size
 estimate every round when the loop body reads it twice, so after a dozen
@@ -14,9 +15,11 @@ import pytest
 
 from engine.algos.kcore import core_numbers
 from engine.algos.lpa import label_propagation
+from engine.algos.pagerank import pagerank
+from engine.algos.query import context_query
 from engine.algos.sssp import shortest_paths
-from engine.loop import _executor_cores, iterative_conf
-from tests.conftest import edges_df
+from engine.loop import _executor_cores, iterative_conf, release, step
+from tests.conftest import edges_df, vertices_df
 
 PATH = [(i, i + 1) for i in range(40)]  # 41 vertices, 40 edges
 
@@ -58,3 +61,41 @@ def test_size_caps_at_the_session_value_read_on_entry(spark):
         assert size(10**12) == max(session_p, cores)
         assert int(conf.get("spark.sql.shuffle.partitions")) == max(session_p, cores)
     assert int(conf.get("spark.sql.shuffle.partitions")) == session_p
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_loops_release_superseded_states(spark):
+    """Storage grows by at most the one frame each result reads: LPA's
+    labels, the query's visited set, PageRank's last iterate. A driver GC
+    during a call can only lower the count (the ContextCleaner frees
+    unreachable RDDs), so an upper bound is what holds."""
+    e = edges_df(spark, PATH)
+    v = vertices_df(spark, range(41))
+    topic = spark.createDataFrame([(0,)], "vid long")
+    runs = {
+        "lpa": lambda: label_propagation(spark, e, max_iter=12).labels,
+        "query": lambda: context_query(
+            spark, v, e, topic, max_depth=4, dont_follow=()
+        )[0],
+        "pagerank": lambda: pagerank(spark, e, tol=1e-9).ranks,
+    }
+    grew = {}
+    for name, run in runs.items():
+        before = _persistent_rdds(spark)
+        run().collect()
+        grew[name] = _persistent_rdds(spark) - before
+    assert all(n <= 1 for n in grew.values()), grew
+
+
+def test_release_frees_a_state_and_refuses_a_projection(spark):
+    state, _ = step(edges_df(spark, PATH))
+    with pytest.raises(TypeError):
+        release(state.select("src"))
+    before = _persistent_rdds(spark)
+    release(state)
+    assert _persistent_rdds(spark) == before - 1
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        state.count()

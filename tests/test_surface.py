@@ -86,3 +86,19 @@ def test_entry_points_import():
 
     for name in ("entry", "queries", "oracle_sql"):
         assert callable(getattr(__spark_entry__, name)), name
+
+
+def test_engine_frees_frames_only_through_loop_release():
+    """``DataFrame.unpersist()`` frees nothing on a checkpointed frame
+    (``engine/loop.py`` docstring), so engine code frees what it
+    materialized through ``engine.loop.release`` and nowhere else."""
+    calls = [
+        f"{f.relative_to(REPO)}:{node.lineno}"
+        for f in REPO.joinpath("engine").rglob("*.py")
+        if f != REPO / "engine" / "loop.py"
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "unpersist"
+    ]
+    assert not calls, calls
