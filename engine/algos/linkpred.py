@@ -40,8 +40,6 @@ from engine.loop import iterative_conf
 
 log = logging.getLogger(__name__)
 
-SCORE_COLS = ("a", "b", "common", "jaccard", "adamic_adar")
-
 
 def _degrees(adj: DataFrame) -> DataFrame:
     return adj.groupBy("v").agg(F.count(F.lit(1)).cast("int").alias("deg"))

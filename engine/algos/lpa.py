@@ -167,30 +167,3 @@ def community_edge_stats(
     return stats
 
 
-def modularity(
-    spark: SparkSession, edges: DataFrame, labels: DataFrame
-) -> float:
-    """Newman modularity Q of a community assignment over the undirected
-    simple view of ``edges`` (the same view the LPA loop propagates on) —
-    the standard quality score for the labels this module produces
-    (Newman & Girvan 2004 — public knowledge):
-
-        Q = sum_c [ L_c / m  -  (deg_c / 2m)^2 ]
-
-    with L_c = intra-community edge count, deg_c = summed degrees of the
-    community's vertices, m = total edges (== sum(deg_c)/2 under the
-    coverage guarantee :func:`community_edge_stats` enforces). One extra
-    scalar collect over the community-sized stats — no iteration. Matches
-    ``networkx.algorithms.community.modularity`` exactly
-    (tests/test_lpa.py)."""
-    stats = community_edge_stats(spark, edges, labels)
-    row = stats.agg(
-        F.sum("l_c").alias("sl"),
-        F.sum(F.col("deg_c") * F.col("deg_c")).alias("sd2"),
-        F.sum("deg_c").alias("sd"),
-    ).collect()[0]
-    release(stats)
-    m = int(row["sd"] or 0) // 2
-    if m == 0:
-        return 0.0
-    return float(row["sl"]) / m - float(row["sd2"]) / (4.0 * m * m)

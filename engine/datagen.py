@@ -53,11 +53,6 @@ EXT_LANG = [
 ]
 ZIPF_S = 1.2
 
-SCALES = {
-    "tiny": (1_000, 20),
-    "small": (10_000, 100),
-    "bench": (2_000_000, 5_000),
-}
 
 _MOD = 1_000_000_007
 

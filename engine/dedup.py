@@ -384,21 +384,6 @@ def dedup_clusters(spark, pairs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_corpus(spark, docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """``docs`` with every non-canonical member of each near-dup cluster
-    removed (one survivor — the min doc_id — per transitive cluster).
-
-    The loser set is O(duplicates), aggregated before it ever meets the
-    corpus, and the removal is a single left-anti hash join — the corpus
-    itself is scanned once and never shuffled."""
-    losers = (
-        dedup_clusters(spark, pairs)
-        .filter(F.col("doc_id") != F.col("canonical_id"))
-        .select("doc_id")
-    )
-    return docs.join(losers, "doc_id", "anti")
-
-
 # ---------------------------------------------------------------------------
 # Paragraph-level dedup (sub-document granularity — C4/CCNet/RefinedWeb
 # practice: exact-duplicate paragraphs/lines are removed corpus-wide, keeping
@@ -427,20 +412,6 @@ def split_paragraphs(
         docs.select("doc_id", parts.alias("para_idx", "para"))
         .withColumn("para", F.trim("para"))
         .filter(F.length("para") >= min_chars)
-    )
-
-
-def paragraph_dup_stats(docs: DataFrame, delim: str = r"\n{2,}") -> DataFrame:
-    """(para, n_occ, n_docs) for every paragraph occurring more than once —
-    the corpus boilerplate profile. Partial-aggregable; skew-safe."""
-    paras = split_paragraphs(docs, delim)
-    return (
-        paras.groupBy("para")
-        .agg(
-            F.count(F.lit(1)).alias("n_occ"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-        .filter(F.col("n_occ") > 1)
     )
 
 

@@ -111,37 +111,25 @@ def content_membership(source: DataFrame) -> DataFrame:
     return with_content_hash(source).select("content_hash", "repo").distinct()
 
 
-def cooccur_groups(hashed: DataFrame, cap: int = COOCCUR_CAP) -> DataFrame:
-    """(content_hash, repos: array<string>, n_repos) for groups of 2..cap.
+def cooccur_pairs(
+    membership: DataFrame, cap: int = COOCCUR_CAP, log_dropped: bool = True
+) -> DataFrame:
+    """Unordered repo pairs (a, b, weight) from (content_hash, repo) facts;
+    weight = #shared hashes.
 
-    Groups above ``cap`` are *dropped* (never silently — see
-    :func:`derive_cooccur_edges`): identical content shared by thousands of
-    repos (empty files, LICENSEs) would otherwise explode quadratically
-    (SURVEY.md §7.3.2). ``collect_set`` per hash is safe because the set is
-    only kept when |set| <= cap; Spark's partial aggregation bounds the
-    map-side state, and ``sort_array`` makes pair order deterministic.
-    """
-    return _membership_groups(
-        hashed.select("content_hash", "repo").distinct(), cap
-    )
-
-
-def _membership_groups(membership: DataFrame, cap: int) -> DataFrame:
-    return (
+    The cap is applied per hash group BEFORE the explode: groups of more
+    than ``cap`` repos are dropped and counted, never silently — identical
+    content shared by thousands of repos (empty files, LICENSEs) would
+    otherwise explode quadratically (SURVEY.md §7.3.2). ``collect_set``
+    per hash is safe because Spark's partial aggregation bounds the
+    map-side state, and ``sort_array`` makes pair order deterministic."""
+    groups = (
         membership.groupBy("content_hash")
         .agg(F.sort_array(F.collect_set("repo")).alias("repos"))
         .withColumn("n_repos", F.size("repos"))
         .filter(F.col("n_repos") >= 2)
         .withColumn("capped", F.col("n_repos") > F.lit(cap))
     )
-
-
-def cooccur_pairs(
-    membership: DataFrame, cap: int = COOCCUR_CAP, log_dropped: bool = True
-) -> DataFrame:
-    """Unordered repo pairs (a, b, weight) from (content_hash, repo) facts;
-    weight = #shared hashes. Cap applied per hash group BEFORE the explode."""
-    groups = _membership_groups(membership, cap)
     if log_dropped:
         dropped = groups.filter("capped").agg(
             F.count(F.lit(1)).alias("groups"), F.sum("n_repos").alias("repos")
@@ -194,6 +182,31 @@ def derive_name_edges(
     return edges
 
 
+def derive_graph(
+    source: DataFrame, cooccur_cap: int = COOCCUR_CAP, include_cooccur: bool = True,
+    log_dropped: bool = True,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """source corpus -> (vertices, edges, name_edges): the one derivation
+    behind :func:`build_graph` and ``incremental.initial_state``.
+
+    ``name_edges`` is persisted: the vid assignment's first job stores it
+    and ``encode_edges`` reads it back. A lazy ``localCheckpoint`` would be
+    freed with its frames, but costs jobs at local[4] on perfbench's score
+    corpus: planned adaptively it runs its shuffle stage when declared
+    (derive 14 -> 15 jobs); planned with AQE off it left derive at 14 but
+    moved PageRank's jobs from 20 to 22. A later call on the same source
+    reuses the cached entry. ``vertices`` is the checkpoint
+    ``assign_vertex_ids`` already made."""
+    name_edges = derive_name_edges(
+        source, cooccur_cap, include_cooccur, log_dropped=log_dropped
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    names = name_edges.select(F.col("src_name").alias("name")).unionByName(
+        name_edges.select(F.col("dst_name").alias("name"))
+    )
+    vertices = assign_vertex_ids(names)
+    return vertices, encode_edges(name_edges, vertices), name_edges
+
+
 def build_graph(
     source: DataFrame, cooccur_cap: int = COOCCUR_CAP, include_cooccur: bool = True,
     log_dropped: bool = True,
@@ -204,12 +217,7 @@ def build_graph(
     past hashing — check ``explain()``: the scan that feeds structural edges
     must not read the ``content`` column at all (column pruning).
     """
-    name_edges = derive_name_edges(
+    vertices, edges, _ = derive_graph(
         source, cooccur_cap, include_cooccur, log_dropped=log_dropped
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    names = name_edges.select(F.col("src_name").alias("name")).unionByName(
-        name_edges.select(F.col("dst_name").alias("name"))
     )
-    vertices = assign_vertex_ids(names).persist(StorageLevel.MEMORY_AND_DISK)
-    edges = encode_edges(name_edges, vertices)
     return vertices, edges

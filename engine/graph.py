@@ -19,8 +19,6 @@ from pyspark.sql.window import Window
 
 from engine.loop import release
 
-EDGE_RELS = ("repo_path", "path_lang", "repo_commit", "cooccur")
-
 
 # Above this many distinct names the window path's single-reducer global
 # sort becomes the job's bottleneck task; switch to the range-partitioned
@@ -153,13 +151,6 @@ def encode_edges(name_edges: DataFrame, vertices: DataFrame) -> DataFrame:
         )
         .drop("dst_n", "dst_name")
         .select("src", "dst", "rel", "weight")
-    )
-
-
-def out_degrees(edges: DataFrame) -> DataFrame:
-    """Weighted out-degree per source vertex: (vid, out_w, out_deg)."""
-    return edges.groupBy(F.col("src").alias("vid")).agg(
-        F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
     )
 
 
@@ -313,17 +304,6 @@ def save_edges_bucketed(
 
 def load_edges_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table).select("src", "dst", "rel", "weight")
-
-
-def degree_histogram(edges: DataFrame) -> DataFrame:
-    """(degree, n_vertices) over the undirected simple view — the
-    first-look profile of any link graph (how heavy is the tail, where do
-    the hubs start). Two aggregates; matches ``networkx.degree_histogram``
-    for every non-zero degree (tests/test_graph_layout.py)."""
-    deg = undirected_degrees(undirected(edges))
-    return deg.groupBy(F.col("deg").alias("degree")).agg(
-        F.count(F.lit(1)).alias("n_vertices")
-    )
 
 
 def reciprocity(edges: DataFrame) -> float:

@@ -44,6 +44,7 @@ from engine.derive import (
     _name,
     content_membership,
     cooccur_pairs,
+    derive_graph,
     derive_structural_edges,
 )
 from engine.graph import assign_vertex_ids, encode_edges
@@ -191,189 +192,9 @@ def initial_state(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Bootstrap the four-way state from the first corpus snapshot.
 
-    Same derivation as derive.build_graph (identical vids and edges), but
-    also returns the name_edges/membership state ``update_graph`` needs."""
-    from engine.derive import derive_name_edges
-
-    name_edges = derive_name_edges(
+    The derivation of derive.build_graph (identical vids and edges), plus
+    the name_edges/membership state ``update_graph`` needs."""
+    vertices, edges, name_edges = derive_graph(
         source, cap, include_cooccur, log_dropped=log_dropped
-    ).localCheckpoint(eager=True)
-    names = name_edges.select(F.col("src_name").alias("name")).unionByName(
-        name_edges.select(F.col("dst_name").alias("name"))
     )
-    vertices = assign_vertex_ids(names).localCheckpoint(eager=True)
-    edges = encode_edges(name_edges, vertices)
     return vertices, edges, name_edges, content_membership(source)
-
-
-def merge_components(
-    spark,
-    prev_labels: DataFrame,
-    new_edges: DataFrame,
-    new_vertices: DataFrame | None = None,
-) -> DataFrame:
-    """Incrementally maintained connected components under edge GROWTH.
-
-    New edges can only MERGE components, never split them — so today's
-    labels come from yesterday's plus the batch in O(batch + #components)
-    instead of an O(E) full recomputation: map each new edge's endpoints
-    through the old labels (unseen vids label themselves), contract to
-    the label-level edge set (tiny — one node per touched component),
-    run the ordinary large-star/small-star loop on THAT, and compose the
-    relabeling back over the old assignment. Labels stay canonical
-    min-vid: every old label is the min vid of its component, so the min
-    over merged labels is the min vid of the merged component.
-
-    VALID ONLY when edges were added, never removed — true for the
-    structural pipeline (``update_graph``'s dedup-union is monotone). A
-    cooccur cap-crossing RETRACTS edges (see ``merge_cooccur``), which
-    can split a component; after a retracting fold use
-    ``refresh_components`` (component-scoped recompute — still
-    O(touched), never a full rerun). Equivalence to the full
-    recomputation on grown graphs is tested (test_incremental.py).
-
-    ``new_vertices``: optional (vid) rows to include as isolated
-    vertices (e.g. the post-fold vertex table); otherwise only vids seen
-    in ``prev_labels`` or ``new_edges`` get labels.
-    """
-    from engine.algos.cc import connected_components
-
-    lbl = prev_labels.select("vid", "label")
-    ends = new_edges.select("src", "dst")
-    mapped = (
-        ends.join(
-            lbl.select(F.col("vid").alias("src"), F.col("label").alias("ls")),
-            "src", "left",
-        )
-        .join(
-            lbl.select(F.col("vid").alias("dst"), F.col("label").alias("ld")),
-            "dst", "left",
-        )
-        .select(
-            F.coalesce("ls", F.col("src")).alias("src"),
-            F.coalesce("ld", F.col("dst")).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    contracted = connected_components(spark, mapped)
-    remap = contracted.labels.select(
-        F.col("vid").alias("label"), F.col("label").alias("nl")
-    )
-    # old vertices re-mapped; endpoints unseen before enter as their own
-    # label and pick up the contracted result directly
-    old_part = lbl.join(remap, "label", "left").select(
-        "vid", F.coalesce("nl", F.col("label")).alias("label")
-    )
-    new_vids = (
-        ends.select(F.col("src").alias("vid"))
-        .unionByName(ends.select(F.col("dst").alias("vid")))
-        .distinct()
-        .join(lbl.select("vid"), "vid", "anti")
-    )
-    new_part = new_vids.join(
-        remap.select(F.col("label").alias("vid"), "nl"), "vid", "left"
-    ).select("vid", F.coalesce("nl", F.col("vid")).alias("label"))
-    out = old_part.unionByName(new_part)
-    if new_vertices is not None:
-        extra = (
-            new_vertices.select("vid")
-            .join(out.select("vid"), "vid", "anti")
-            .select("vid", F.col("vid").alias("label"))
-        )
-        out = out.unionByName(extra)
-    return out
-
-
-def edge_delta(
-    prev_name_edges: DataFrame, name_edges: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(added, removed) name-edge key sets between two folds.
-
-    Keys are (src_name, dst_name, rel) — weight changes alone (a cooccur
-    pair whose count moved) are neither added nor removed: connectivity
-    maintenance only cares about edge existence. Two anti-joins, each one
-    shuffle on the composite key."""
-    key = ["src_name", "dst_name", "rel"]
-    added = name_edges.select(*key).join(
-        prev_name_edges.select(*key), key, "left_anti"
-    )
-    removed = prev_name_edges.select(*key).join(
-        name_edges.select(*key), key, "left_anti"
-    )
-    return added, removed
-
-
-def refresh_components(
-    spark,
-    prev_labels: DataFrame,
-    edges: DataFrame,
-    removed_edges: DataFrame,
-    added_edges: DataFrame | None = None,
-    new_vertices: DataFrame | None = None,
-) -> DataFrame:
-    """Incrementally maintained connected components when a fold RETRACTED
-    edges (the cooccur cap-crossing case ``merge_components`` excludes —
-    VERDICT r3 item 5).
-
-    A removed edge can only split THE COMPONENT IT WAS IN; every other
-    component's labels are already correct. So: collect the old labels
-    touched by ``removed_edges``' endpoints, rerun the large-star/
-    small-star loop ONLY on those components' induced subgraph of the
-    POST-fold edge set, keep every untouched label verbatim, then fold
-    ``added_edges`` in with the ordinary growth path (added edges can
-    only merge, including across the freshly-split parts). Labels stay
-    canonical min-vid throughout: the scoped rerun emits min-vid labels
-    inside each surviving piece, and the growth contraction takes mins
-    of mins. Equivalence to a full recomputation after a cap-crossing
-    fold is tested (test_incremental.py::test_refresh_components_*).
-
-    Cost: one O(E) columnar scan to carve the induced subgraph (two
-    semi-joins against the affected-member set — at 100 TB this prunes at
-    the shuffle, which only carries the affected components' edges), CC
-    on the touched subgraph, and the O(batch + #components) growth fold.
-    Nothing rescans or reshuffles the untouched part of the graph.
-
-    ``edges``: the full post-fold edge set (the subgraph is carved from
-    it, so intra-component added edges are already inside the scoped
-    rerun; re-folding them via ``added_edges`` afterwards is a no-op).
-    ``removed_edges``/``added_edges``: (src, dst) vid pairs — e.g.
-    ``edge_delta`` output joined through the fold's vertex table.
-    """
-    from engine.algos.cc import connected_components
-
-    lbl = prev_labels.select("vid", "label")
-    ends = (
-        removed_edges.select(F.col("src").alias("vid"))
-        .unionByName(removed_edges.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    aff = (
-        ends.join(lbl, "vid")
-        .select("label")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    members = lbl.join(aff, "label", "semi").select("vid").localCheckpoint(
-        eager=True
-    )
-    sub = (
-        edges.select("src", "dst")
-        .join(members.select(F.col("vid").alias("src")), "src", "semi")
-        .join(members.select(F.col("vid").alias("dst")), "dst", "semi")
-    )
-    sub_cc = connected_components(spark, sub, vertices=members)
-    mid = (
-        lbl.join(aff, "label", "left_anti")
-        .unionByName(sub_cc.labels.select("vid", "label"))
-    )  # reads aff, and members through sub_cc: both stay with the result
-    if added_edges is not None:
-        return merge_components(spark, mid, added_edges, new_vertices)
-    if new_vertices is not None:
-        extra = (
-            new_vertices.select("vid")
-            .join(mid.select("vid"), "vid", "anti")
-            .select("vid", F.col("vid").alias("label"))
-        )
-        mid = mid.unionByName(extra)
-    return mid

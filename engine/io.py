@@ -241,10 +241,6 @@ class RunCheckpoint:
             self._manifest_path(it), json.dumps(manifest).encode("utf-8")
         )
 
-    def write(self, df: DataFrame, it: int, metrics: dict[str, Any]) -> None:
-        self.write_data(df, it)
-        self.commit(it, metrics, df.columns)
-
     # ---- mid-iteration salvage (north rule: "runs resume mid-iteration").
     # Protocol: the writer (a) seals iteration i with MANIFEST, (b) writes
     # STAGING for i+1 declaring the partition layout, (c) writes the

@@ -28,10 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id long, kind string, data binary, "
-    "meta struct<n_bytes: long, checksum: string>"
-)
 DECODED_SCHEMA = (
     "doc_id long, kind string, width int, height int, n_frames int, "
     "feature array<float>"

@@ -1,14 +1,13 @@
 """Rank & report — Verum's S3 ([R notebooks/score helpers, reconstructed]).
 
 Global top-k compiles to ``TakeOrderedAndProject`` (no full sort, no single
-giant reducer); per-type top-k uses a ranking window partitioned by vtype.
+giant reducer).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def top_k(scores: DataFrame, vertices: DataFrame, k: int = 10) -> DataFrame:
@@ -21,15 +20,4 @@ def top_k(scores: DataFrame, vertices: DataFrame, k: int = 10) -> DataFrame:
         .orderBy(F.desc("value"), F.asc("vid"))
         .limit(k)
         .select("vid", "name", "vtype", "value")
-    )
-
-
-def top_k_per_type(scores: DataFrame, vertices: DataFrame, k: int = 5) -> DataFrame:
-    """Top-k per vertex type via rank() over (partition by vtype)."""
-    w = Window.partitionBy("vtype").orderBy(F.desc("value"), F.asc("vid"))
-    return (
-        scores.join(vertices.select("vid", "name", "vtype"), "vid")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("vtype", "rk", "vid", "name", "value")
     )

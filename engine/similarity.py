@@ -12,8 +12,7 @@ Four operators:
   within candidates. O(N) bucketing + O(candidates*Q) re-rank.
 - ``ivf_topk`` — IVF scale path: nearest-coarse-centroid cell assignment,
   nprobe-cell probing per query, exact re-rank within probed cells. The
-  coarse quantizer is either the seeded stand-in (harness/oracle fixture)
-  or a real sampled-Lloyd fit via ``fit_ivf_centroids``.
+  coarse quantizer is a seeded stand-in (the harness/oracle fixture).
 - ``embedding_neardup`` — cosine near-duplicate pairs: SRP blocking + exact
   double-precision verify (the dedup-family member).
 
@@ -194,86 +193,12 @@ def embedding_neardup(
 
 def _ivf_centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
     """Deterministic coarse-quantizer centroids: seeded random directions,
-    the UNTRAINED fallback (and the harness/oracle fixture — the literals
-    are inlined into the DuckDB mirror at import time, before any data is
-    visible). For real recall use ``fit_ivf_centroids`` and pass the result
-    through ``ivf_topk(centroids=...)`` — the query plan is identical, only
-    the literal values change."""
+    untrained (the harness/oracle fixture — the literals are inlined into
+    the DuckDB mirror at import time, before any data is visible). A
+    trained quantizer would change only these literal values, not the
+    query plan."""
     rng = np.random.RandomState(seed)
     return rng.randn(n_centroids, dim)
-
-
-def fit_ivf_centroids(
-    emb: DataFrame, dim: int = 64, n_centroids: int = 16,
-    emb_col: str = "embedding", sample_cap: int = 1_000_000,
-    iters: int = 10, seed: int = 7,
-) -> np.ndarray:
-    """Sampled Lloyd k-means coarse-quantizer fit (VERDICT r2 item 5).
-
-    Scale shape: ONE bounded sample collect (<= ``sample_cap`` vectors —
-    at 64 float64 dims and the default cap that is ~512 MB of driver numpy,
-    the standard IVF training budget; FAISS trains 10^9-vector indexes on
-    samples of this order), then Lloyd iterations entirely driver-side in
-    numpy. The fitted centroids go back out as broadcast literals exactly
-    like the untrained ones — the executor-side plan never changes, so
-    assignment stays one codegen'd projection at any corpus size.
-
-    Deterministic: seeded k-means++-style init (first center from the
-    seeded RNG over the sample, rest by farthest-point on squared distance),
-    fixed iteration count, ties to the lowest centroid index — same
-    argmin discipline as ``ivf_assignments``. Empty cells re-seed to the
-    point farthest from its assigned center (standard Lloyd repair)."""
-    frac_rows = emb.select(F.col(emb_col).cast("array<double>").alias("v"))
-    n_total = frac_rows.count()
-    if n_total > sample_cap:
-        frac_rows = frac_rows.sample(
-            withReplacement=False, fraction=sample_cap / n_total, seed=seed
-        )
-    x = np.array(frac_rows.toPandas()["v"].tolist(), dtype=np.float64)
-    return lloyd_fit(x, n_centroids, iters, seed)
-
-
-def lloyd_fit(x: "np.ndarray", k: int, iters: int, seed: int) -> "np.ndarray":
-    """Driver-side seeded Lloyd on a sample matrix — the IVF coarse-cell
-    trainer. Farthest-point init, fixed iterations, one-at-a-time
-    empty-cell repair (ADVICE r3), lowest-index tie-breaks throughout."""
-    if x.shape[0] < k:
-        raise ValueError(
-            f"need >= {k} sample vectors to fit, got {x.shape[0]}"
-        )
-    rng = np.random.RandomState(seed)
-    # farthest-point init (deterministic given the seed and sample order)
-    centers = np.empty((k, x.shape[1]), dtype=np.float64)
-    centers[0] = x[rng.randint(x.shape[0])]
-    d2 = ((x - centers[0]) ** 2).sum(axis=1)
-    for j in range(1, k):
-        centers[j] = x[int(np.argmax(d2))]
-        d2 = np.minimum(d2, ((x - centers[j]) ** 2).sum(axis=1))
-    x2 = (x ** 2).sum(axis=1, keepdims=True)
-    for _ in range(iters):
-        # pairwise squared distances via the expansion trick; argmin ties
-        # break to the lowest index, matching ivf_assignments
-        dists = x2 - 2.0 * x @ centers.T + (centers ** 2).sum(axis=1)
-        asn = np.argmin(dists, axis=1)
-        empty = []
-        for j in range(k):
-            members = x[asn == j]
-            if len(members):
-                centers[j] = members.mean(axis=0)
-            else:
-                empty.append(j)
-        # Re-seed empty cells ONE AT A TIME against the already-updated
-        # centers: reusing the pre-update dists matrix handed every empty
-        # cell the identical farthest point, producing duplicate centroids
-        # that tie-break to the lowest cid and stay empty forever
-        # (ADVICE r3). Each reseed recomputes the min-distance so the next
-        # empty cell sees the previous reseed and picks a distinct point.
-        for j in empty:
-            d2 = (
-                x2 - 2.0 * x @ centers.T + (centers ** 2).sum(axis=1)
-            ).min(axis=1)
-            centers[j] = x[int(np.argmax(d2))]
-    return centers
 
 
 def _sqdist(col, cvec) -> F.Column:
@@ -291,15 +216,11 @@ def _sqdist(col, cvec) -> F.Column:
 def ivf_assignments(
     emb: DataFrame, dim: int = 64, n_centroids: int = 16,
     id_col: str = "vec_id", emb_col: str = "embedding", seed: int = 7,
-    centroids: "np.ndarray | None" = None,
 ) -> DataFrame:
     """(id, cid): nearest-centroid cell per vector (ties -> lowest cid,
     via first-occurrence array_position). One codegen'd projection — the
-    inverted file is just a groupBy/join key, never a driver-side index.
-    ``centroids``: a fitted coarse quantizer (fit_ivf_centroids); defaults
-    to the seeded stand-in."""
-    cents = _ivf_centroids(dim, n_centroids, seed) if centroids is None else centroids
-    n_centroids = len(cents)
+    inverted file is just a groupBy/join key, never a driver-side index."""
+    cents = _ivf_centroids(dim, n_centroids, seed)
     dists = [_sqdist(F.col(emb_col), cents[j]) for j in range(n_centroids)]
     arr = F.array(*dists)
     cid = (F.array_position(arr, F.array_min(arr)) - 1).cast("int")
@@ -310,7 +231,6 @@ def ivf_topk(
     emb: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
     n_centroids: int = 16, nprobe: int = 2,
     id_col: str = "vec_id", emb_col: str = "embedding", seed: int = 7,
-    centroids: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Approximate top-k via IVF: assign the corpus to coarse cells, probe
     each query's ``nprobe`` nearest cells, exact cosine re-rank within the
@@ -318,13 +238,10 @@ def ivf_topk(
     volume is corpus/n_centroids * nprobe per query, tuned by cell count —
     at 10^9 vectors n_centroids grows to ~sqrt(N) and probing stays a
     broadcast-able (query_id, cid) table joined against the cell-bucketed
-    corpus. ``centroids``: a fitted coarse quantizer (fit_ivf_centroids);
-    defaults to the seeded stand-in (which the s3 harness oracle mirrors)."""
-    cents = _ivf_centroids(dim, n_centroids, seed) if centroids is None else centroids
-    n_centroids = len(cents)
-    corpus_cells = ivf_assignments(
-        emb, dim, n_centroids, id_col, emb_col, seed, centroids=cents
-    )
+    corpus. The coarse cells are the seeded stand-in (which the s3 harness
+    oracle mirrors)."""
+    cents = _ivf_centroids(dim, n_centroids, seed)
+    corpus_cells = ivf_assignments(emb, dim, n_centroids, id_col, emb_col, seed)
     qdists = [_sqdist(F.col(emb_col), cents[j]) for j in range(n_centroids)]
     ranked = F.array(*[
         F.struct(qdists[j].alias("d"), F.lit(j).alias("j"))

@@ -1,76 +1,14 @@
-"""Streaming ingestion — the rebuild of Verum's "minions".
-
-The reference's minions are daemon threads polling a feed in a
-``while True: fetch; enrich; sleep`` loop ([R minions/*,
+"""Streaming rollup — the watermarked windowed count that Verum's
+"minions" (daemon threads polling a feed, [R minions/*,
 verum/__init__.py::app.start_minions — reconstructed, SURVEY.md Table A
-N1]). The Spark-native mapping is Structured Streaming: a file source
-watches a feed directory for new source-file batches; each micro-batch is
-derived into name-space edges and upserted into the persistent edge store
-via ``foreachBatch`` (merge-on-read: append + dedup view, the same
-MERGE-on-uri semantics as the reference's store_graph, Table A M1).
-
-At production scale the sink is an Iceberg table (``MERGE INTO`` in
-foreachBatch); offline it is a Parquet append directory whose reader
-deduplicates — both behind ``read_edge_store``.
+N1]) would feed at Spark scale. The same operator runs on a batch
+DataFrame, which is how the driver contract (n1) exercises it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from engine.derive import derive_structural_edges
-
-SOURCE_SCHEMA = "repo string, path string, commit string, lang string, content string"
-
-
-def feed_stream(spark: SparkSession, feed_dir: str, max_files: int = 16) -> DataFrame:
-    """File-source stream over a feed directory of parquet drops."""
-    return (
-        spark.readStream.schema(SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(feed_dir)
-    )
-
-
-def start_edge_ingest(
-    spark: SparkSession,
-    feed_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Continuously derive structural edges from feed drops and append them
-    to the edge store. ``available_now=True`` drains the backlog and stops
-    (the testable form); ``False`` keeps polling like a minion daemon.
-    """
-    stream = feed_stream(spark, feed_dir)
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        edges = derive_structural_edges(batch).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        edges.write.mode("append").parquet(store_dir)
-
-    writer = stream.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_edge_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge-on-read view of the streamed edge store: appends deduplicated
-    on (src_name, dst_name, rel) keeping the earliest batch (Verum keeps the
-    earliest start_time on merge, Table A M1)."""
-    raw = spark.read.parquet(store_dir)
-    return (
-        raw.groupBy("src_name", "dst_name", "rel")
-        .agg(F.min("batch_id").alias("first_batch"), F.max("weight").alias("weight"))
-        .select("src_name", "dst_name", "rel", "weight", "first_batch")
-    )
 
 
 def windowed_edge_counts(
@@ -97,133 +35,4 @@ def windowed_edge_counts(
             key_col,
             "n",
         )
-    )
-
-
-def running_degree_update(key, pdf_iter, state):
-    """applyInPandasWithState update function: per-vertex cumulative degree
-    across micro-batches. State = one int64 (the degree so far); each batch
-    adds its per-key edge count and emits the updated total — the
-    incremental form of graph.out_degrees for the minion feed."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-
-    total = state.get[0] if state.exists else 0
-    for pdf in pdf_iter:
-        total += len(pdf)
-    state.update((total,))
-    yield pd.DataFrame({"vertex": [key[0]], "degree": [total]})
-
-
-def start_degree_tracker(
-    spark: SparkSession,
-    feed_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Custom stateful streaming operator (B.8/B.9): cumulative out-degree
-    per repo vertex over the feed, maintained as keyed state via
-    ``applyInPandasWithState`` (Arrow-batched; state is one counter per
-    key, never a neighbor list). Each micro-batch appends the updated
-    totals for the keys it touched."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = feed_stream(spark, feed_dir)
-    edges = stream.select(F.concat(F.lit("repo:"), F.col("repo")).alias("vertex"))
-    updated = edges.groupBy("vertex").applyInPandasWithState(
-        running_degree_update,
-        outputStructType="vertex string, degree long",
-        stateStructType="degree long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    writer = updated.writeStream.outputMode("update").foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_degree_store(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Latest cumulative degree per vertex from the tracker's append log."""
-    raw = spark.read.parquet(out_dir)
-    return (
-        raw.groupBy("vertex")
-        .agg(F.max_by("degree", "batch_id").alias("degree"))
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    id_cols: list[str],
-    time_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup with BOUNDED state — the streaming sibling of
-    the batch d1 operator (engine/dedup.py).
-
-    ``dropDuplicatesWithinWatermark`` keeps each key's fingerprint only
-    until the watermark passes it, so state is O(keys-per-watermark-window)
-    instead of O(all keys ever) — the property that makes exact dedup
-    runnable on an unbounded feed (a plain ``dropDuplicates`` on a stream
-    grows state forever; public Spark semantics, Structured Streaming
-    guide). Late duplicates beyond the watermark are the documented
-    trade — they pass through, exactly like every watermarked operator.
-
-    Works identically on a batch DataFrame (watermark is a no-op there and
-    the call degrades to dropDuplicates) — same batch-mirror testing seam
-    as windowed_edge_counts."""
-    if not id_cols:
-        raise ValueError("dedup_stream: id_cols must be non-empty")
-    wm = events.withWatermark(time_col, watermark)
-    if events.isStreaming:
-        return wm.dropDuplicatesWithinWatermark(id_cols)
-    return wm.dropDuplicates(id_cols)
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_time: str = "ts",
-    right_time: str = "ts",
-    watermark: str = "10 minutes",
-    lag: str = "5 minutes",
-) -> DataFrame:
-    """Stream-stream equi-join with an event-time interval — the streaming
-    sibling of the batch range join (engine/relational.py j7).
-
-    Matches right rows within ``[left_ts - lag, left_ts]`` on the same
-    key. Both sides carry watermarks and the join condition bounds both
-    event times, so Spark can expire buffered state once the watermark
-    passes the interval — the requirement for a stream-stream inner join
-    to run with finite state (public Spark semantics). Column names are
-    suffixed _l/_r to keep the output unambiguous."""
-    l_ = left.withWatermark(left_time, watermark).select(
-        F.col(key).alias("k"),
-        F.col(left_time).alias("ts_l"),
-        *[F.col(c).alias(f"{c}_l") for c in left.columns
-          if c not in (key, left_time)],
-    )
-    r_ = right.withWatermark(right_time, watermark).select(
-        F.col(key).alias("k"),
-        F.col(right_time).alias("ts_r"),
-        *[F.col(c).alias(f"{c}_r") for c in right.columns
-          if c not in (key, right_time)],
-    )
-    cond = (
-        (F.col("ts_r") <= F.col("ts_l"))
-        & (F.col("ts_r") >= F.col("ts_l") - F.expr(f"INTERVAL {lag}"))
-    )
-    return l_.join(r_, on=[l_["k"] == r_["k"], cond], how="inner").select(
-        l_["k"].alias(key), "ts_l", "ts_r",
-        *[c for c in l_.columns if c.endswith("_l") and c != "ts_l"],
-        *[c for c in r_.columns if c.endswith("_r") and c != "ts_r"],
     )

@@ -1,20 +1,14 @@
-"""Transitive near-dup clustering (dedup_clusters / dedup_corpus) vs a
+"""Transitive near-dup clustering (dedup_clusters) vs a
 networkx connected-components oracle over the candidate-pair graph."""
 
 import networkx as nx
 import pytest
 
-from engine.dedup import dedup_clusters, dedup_corpus, minhash_candidates
+from engine.dedup import dedup_clusters, minhash_candidates
 
 
 def pairs_df(spark, pairs):
     return spark.createDataFrame([(int(a), int(b)) for a, b in pairs], "a long, b long")
-
-
-def docs_df(spark, ids):
-    return spark.createDataFrame(
-        [(int(i), f"text of {i}") for i in ids], "doc_id long, text string"
-    )
 
 
 def oracle_clusters(pairs):
@@ -47,30 +41,15 @@ def test_clusters_match_networkx(spark, name):
     assert got == ref, name
 
 
-def test_corpus_keeps_one_survivor_per_cluster(spark):
-    pairs = CASES["chain"] + CASES["two_clusters"]
-    all_ids = range(0, 9)  # 0 and 8 and 4? 4 is in chain; 0, 8 untouched
-    kept = {
-        r.doc_id
-        for r in dedup_corpus(
-            spark, docs_df(spark, all_ids), pairs_df(spark, pairs)
-        ).collect()
-    }
-    ref = oracle_clusters(pairs)
-    expect = {i for i in all_ids if ref.get(i, i) == i}
-    assert kept == expect
-    assert 0 in kept and 8 in kept      # untouched docs survive
-    assert kept & {2, 3, 4, 6, 7} == set()  # cluster losers removed
-
-
 def test_end_to_end_with_minhash_candidates(spark):
     # two literal duplicates + one unique doc: the full pipeline
-    # (shingle -> minhash -> band -> cc -> anti join) keeps 2 of 3 rows
+    # (shingle -> minhash -> band -> cc) clusters the pair under its min id
+    # and leaves the unique doc out
     base = "the quick brown fox jumps over the lazy dog again and again " * 5
     docs = spark.createDataFrame(
         [(1, base), (2, base), (3, "completely different content here " * 8)],
         "doc_id long, text string",
     )
     cands = minhash_candidates(docs).select("a", "b")
-    out = dedup_corpus(spark, docs, cands)
-    assert {r.doc_id for r in out.collect()} == {1, 3}
+    got = {r.doc_id: r.canonical_id for r in dedup_clusters(spark, cands).collect()}
+    assert got == {1: 1, 2: 1}

@@ -1,9 +1,11 @@
 """t0/t1: derivation — hash invariant, edge kinds, dense vids, cooccur cap."""
 
+from collections import Counter
+from itertools import combinations
+
 from pyspark.sql import functions as F
 
 from engine.derive import (
-    cooccur_groups,
     derive_cooccur_edges,
     hash_invariant_violations,
     with_content_hash,
@@ -46,15 +48,28 @@ def test_repo_path_edge_count_matches_distinct_pairs(tiny_source, tiny_graph):
 
 
 def test_cooccur_cap_enforced(spark, tiny_source):
+    """A content group of more than ``cap`` repos adds no pair: the pairs
+    are exactly those of the groups within the cap, weighted by the number
+    of such groups each pair shares."""
     hashed = with_content_hash(tiny_source)
     cap = 3
-    pairs = derive_cooccur_edges(hashed, cap=cap, log_dropped=False)
-    # with cap=3, any single hash contributes at most C(3,2)=3 pairs; the
-    # heaviest surviving group must have <= cap members
-    g = cooccur_groups(hashed, cap=cap).filter("NOT capped")
-    assert g.agg(F.max("n_repos")).collect()[0][0] <= cap
-    # pair weights are counts of shared hashes >= 1
-    assert pairs.filter("weight < 1").count() == 0
+    groups = {}
+    for r in hashed.select("content_hash", "repo").distinct().collect():
+        groups.setdefault(r.content_hash, set()).add(r.repo)
+    assert any(len(g) > cap for g in groups.values())  # the cap bites here
+    want = Counter(
+        pair
+        for g in groups.values()
+        if len(g) <= cap
+        for pair in combinations(sorted(g), 2)
+    )
+    got = {
+        (r.src_name, r.dst_name): r.weight
+        for r in derive_cooccur_edges(hashed, cap=cap, log_dropped=False).collect()
+    }
+    assert got == {
+        (f"repo:{a}", f"repo:{b}"): float(n) for (a, b), n in want.items()
+    }
 
 
 def test_cooccur_pairs_unordered_unique(tiny_graph):

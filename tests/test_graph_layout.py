@@ -1,4 +1,4 @@
-"""t1: CSR-like edge layout, scoring projection, degrees, hubs, report ops."""
+"""t1: CSR-like edge layout, scoring projection, hubs, report ops."""
 
 import os
 
@@ -9,11 +9,10 @@ from engine.graph import (
     hub_vertices,
     load_edges_csr,
     neighbours,
-    out_degrees,
     save_edges_csr,
     scoring_projection,
 )
-from engine.report import top_k, top_k_per_type
+from engine.report import top_k
 from tests.conftest import edges_df
 
 
@@ -38,12 +37,10 @@ def test_csr_roundtrip_and_sorted_runs(spark, tiny_graph, tmp_path):
     assert pairs == sorted(pairs)
 
 
-def test_out_degrees_and_hubs(spark):
+def test_hub_vertices(spark):
     e = edges_df(spark, [(i, 0) for i in range(1, 9)] + [(0, 1)])
     hubs = hub_vertices(e, threshold=5)
     assert [r.vid for r in hubs.collect()] == [0]
-    od = {r.vid: r.out_deg for r in out_degrees(e).collect()}
-    assert od[1] == 1 and od[0] == 1
 
 
 def test_neighbours_collapses_and_drops_loops(spark):
@@ -65,9 +62,6 @@ def test_top_k_report(spark, tiny_graph):
     t = top_k(scores, v, k=5).collect()
     assert len(t) == 5
     assert [r.vid for r in t] == sorted([r.vid for r in t], reverse=True)
-    per = top_k_per_type(scores, v, k=2)
-    counts = {r["vtype"]: r["n"] for r in per.groupBy("vtype").agg(F.count("*").alias("n")).collect()}
-    assert all(c <= 2 for c in counts.values())
 
 
 def test_scalable_vid_assignment_matches_window_path(spark, tiny_graph):
@@ -160,17 +154,6 @@ def test_bucketed_table_no_edge_exchange(spark, tiny_graph):
         [a[k] for k in sorted(a)], [b[k] for k in sorted(b)], atol=1e-12
     )
     spark.sql("DROP TABLE IF EXISTS edges_bucketed_test")
-
-
-def test_degree_histogram_matches_networkx(spark, tiny_graph, tiny_nx):
-    from engine.graph import degree_histogram
-
-    _, e = tiny_graph
-    got = {r.degree: r.n_vertices for r in degree_histogram(e).collect()}
-    import networkx as nx
-    hist = nx.degree_histogram(tiny_nx.to_undirected())
-    want = {d: c for d, c in enumerate(hist) if c and d > 0}
-    assert got == want
 
 
 def test_reciprocity_matches_networkx(spark):

@@ -115,157 +115,3 @@ def test_duplicate_batch_is_a_noop_on_edges(spark, split_source):
     want = _edge_set(ne)
     v2, e2, ne2, m2 = update_graph(v, ne, m, p1, cap=cap, log_dropped=False)
     assert _edge_set(ne2) == want
-
-
-def test_merge_components_equals_full_cc(spark):
-    """Incremental component maintenance under edge growth: yesterday's
-    labels + the batch's new edges must equal a full recomputation."""
-    import networkx as nx
-    from engine.algos.cc import connected_components
-    from engine.incremental import merge_components
-    from tests.conftest import edges_df
-
-    g = nx.gnm_random_graph(80, 90, seed=41)  # sparse: many components
-    all_edges = [(a, b) for a, b in g.edges]
-    batch1, batch2 = all_edges[:60], all_edges[60:]
-
-    labels = connected_components(spark, edges_df(spark, batch1)).labels
-    inc = merge_components(spark, labels, edges_df(spark, batch2))
-    got = {r.vid: r.label for r in inc.collect()}
-
-    full = connected_components(spark, edges_df(spark, all_edges)).labels
-    want = {r.vid: r.label for r in full.collect()}
-    assert got == want
-
-
-def test_merge_components_new_vertices_and_isolates(spark):
-    from engine.algos.cc import connected_components
-    from engine.incremental import merge_components
-    from tests.conftest import edges_df, vertices_df
-
-    labels = connected_components(spark, edges_df(spark, [(0, 1), (2, 3)])).labels
-    # batch: bridge the two components via a brand-new vertex 10
-    inc = merge_components(
-        spark, labels, edges_df(spark, [(1, 10), (10, 2)]),
-        new_vertices=vertices_df(spark, [0, 1, 2, 3, 10, 99]).select("vid"),
-    )
-    got = {r.vid: r.label for r in inc.collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 0, 99: 99}
-
-
-def test_refresh_components_bridge_removal_splits(spark):
-    """Retracting a bridge must split its component; every other label is
-    untouched; result equals the full recomputation (VERDICT r3 item 5)."""
-    from engine.algos.cc import connected_components
-    from engine.incremental import refresh_components
-    from tests.conftest import edges_df
-
-    # two triangles joined by bridge (2,3); a separate far component (8,9)
-    before = [(0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (5, 3), (2, 3), (8, 9)]
-    after = [p for p in before if p != (2, 3)]
-    labels = connected_components(spark, edges_df(spark, before)).labels
-    got_df = refresh_components(
-        spark, labels, edges_df(spark, after),
-        removed_edges=edges_df(spark, [(2, 3)]),
-    )
-    got = {r.vid: r.label for r in got_df.collect()}
-    want = {
-        r.vid: r.label
-        for r in connected_components(spark, edges_df(spark, after)).labels.collect()
-    }
-    assert got == want
-    assert got[0] == 0 and got[3] == 3 and got[8] == 8  # split + untouched
-
-
-def test_refresh_components_retract_and_add(spark):
-    """Removals and additions in one fold: the scoped rerun + growth pass
-    must equal the full recomputation, including an added edge that
-    re-merges across a freshly split boundary."""
-    import networkx as nx
-    from engine.algos.cc import connected_components
-    from engine.incremental import refresh_components
-    from tests.conftest import edges_df
-
-    g = nx.gnm_random_graph(60, 70, seed=7)
-    before = [(a, b) for a, b in g.edges]
-    removed = before[::7]
-    added = [(0, 59), (13, 41)]
-    after = [p for p in before if p not in removed] + added
-    labels = connected_components(spark, edges_df(spark, before)).labels
-    got_df = refresh_components(
-        spark, labels, edges_df(spark, after),
-        removed_edges=edges_df(spark, removed),
-        added_edges=edges_df(spark, added),
-    )
-    got = {r.vid: r.label for r in got_df.collect()}
-    want = {
-        r.vid: r.label
-        for r in connected_components(spark, edges_df(spark, after)).labels.collect()
-    }
-    # refresh keeps every previously-labeled vid (vertices are monotone);
-    # the full rerun only sees post-fold endpoints — compare on its keys
-    # and require the extras to be isolated self-labels
-    assert {k: got[k] for k in want} == want
-    assert all(got[k] == k for k in set(got) - set(want))
-
-
-def test_refresh_components_cap_crossing_fold(spark):
-    """The end-to-end case the growth-only path excludes: a batch pushes a
-    cooccur group over the cap, the fold RETRACTS that clique and splits a
-    component; refresh_components over edge_delta must equal the full CC
-    of the post-fold graph (VERDICT r3 item 5 'Done' criterion)."""
-    from engine.algos.cc import connected_components
-    from engine.graph import encode_edges
-    from engine.incremental import (
-        edge_delta, initial_state, refresh_components, update_graph,
-    )
-
-    def rows(repos, h):
-        # per-repo langs AND commits: no shared structural vertex, so the
-        # cooccur clique is the ONLY thing connecting the repos — its
-        # retraction must split the component
-        return [(r, f"{r}-{h}.py", f"c-{r}", f"lang-{r}", f"content-{h}")
-                for r in repos]
-
-    cap = 3
-    # shared content links r1..r3 into one cooccur clique; r4 arrives and
-    # pushes the group over the cap, retracting the whole clique
-    old = spark.createDataFrame(
-        rows(["r1", "r2", "r3"], "shared") + rows(["r9"], "solo"),
-        "repo string, path string, commit string, lang string, content string",
-    )
-    batch = spark.createDataFrame(
-        rows(["r4"], "shared"),
-        "repo string, path string, commit string, lang string, content string",
-    )
-    v0, e0, ne0, m0 = initial_state(old, cap=cap, log_dropped=False)
-    labels0 = connected_components(spark, e0, v0).labels
-    v1, e1, ne1, m1 = update_graph(v0, ne0, m0, batch, cap=cap, log_dropped=False)
-
-    added_n, removed_n = edge_delta(ne0, ne1)
-    # encode name-level deltas through the post-fold vertex table (vids are
-    # stable, so pre-fold names resolve identically)
-    added = encode_edges(
-        added_n.withColumn("weight", F.lit(1.0)), v1
-    ).select("src", "dst")
-    removed = encode_edges(
-        removed_n.withColumn("weight", F.lit(1.0)), v1
-    ).select("src", "dst")
-    assert removed.count() > 0  # the cap-crossing really retracted edges
-
-    got_df = refresh_components(
-        spark, labels0, e1, removed_edges=removed,
-        added_edges=added, new_vertices=v1.select("vid"),
-    )
-    got = {r.vid: r.label for r in got_df.collect()}
-    want = {
-        r.vid: r.label
-        for r in connected_components(spark, e1, v1).labels.collect()
-    }
-    assert got == want
-    # and the retraction actually split something: the r1..r3 repos are no
-    # longer one component unless structurally connected
-    name_by_vid = {r.vid: r.name for r in v1.collect()}
-    repo_labels = {got[k] for k, n in name_by_vid.items()
-                   if n in ("repo:r1", "repo:r2", "repo:r3")}
-    assert len(repo_labels) == 3

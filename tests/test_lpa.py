@@ -54,9 +54,19 @@ def test_corpus_graph_matches_oracle(spark, tiny_graph):
     assert ours == lpa_oracle(vids, pairs, max_iter=30)
 
 
+def _modularity(spark, e, labels):
+    """Newman Q assembled from the integer rows ``community_edge_stats``
+    returns (driver query g16): sum_c [L_c/m - (deg_c/2m)^2]."""
+    from engine.algos.lpa import community_edge_stats
+
+    rows = community_edge_stats(spark, e, labels).collect()
+    m = sum(r.deg_c for r in rows) // 2
+    return sum(r.l_c / m - (r.deg_c / (2.0 * m)) ** 2 for r in rows)
+
+
 def test_modularity_matches_networkx(spark):
     import networkx as nx
-    from engine.algos.lpa import label_propagation, modularity
+    from engine.algos.lpa import label_propagation
 
     # two dense blobs + a sparse bridge: clear community structure
     pairs = (
@@ -67,7 +77,7 @@ def test_modularity_matches_networkx(spark):
     e = edges_df(spark, pairs)
     res = label_propagation(spark, e)
     labels = {r.vid: r.label for r in res.labels.collect()}
-    got = modularity(spark, e, res.labels)
+    got = _modularity(spark, e, res.labels)
 
     g = nx.Graph(pairs)
     comms = {}
@@ -80,7 +90,6 @@ def test_modularity_matches_networkx(spark):
 
 def test_modularity_single_community_is_zero_minus_degree_term(spark):
     import networkx as nx
-    from engine.algos.lpa import modularity
     from pyspark.sql import functions as F
 
     pairs = [(0, 1), (1, 2), (2, 0)]
@@ -90,7 +99,7 @@ def test_modularity_single_community_is_zero_minus_degree_term(spark):
             e.select(F.col("dst").alias("vid"))
         ).distinct().select("vid", F.lit(0).alias("label"))
     )
-    got = modularity(spark, e, one)
+    got = _modularity(spark, e, one)
     g = nx.Graph(pairs)
     want = nx.algorithms.community.modularity(g, [set(g.nodes)])
     assert got == pytest.approx(want, abs=1e-12)

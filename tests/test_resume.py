@@ -6,6 +6,7 @@ import shutil
 import numpy as np
 import pytest
 
+from engine import loop
 from engine.algos.pagerank import pagerank
 from engine.io import MANIFEST, STAGING, RunCheckpoint
 
@@ -105,13 +106,18 @@ def test_mid_iteration_salvage(spark, tiny_graph, ckpt_base):
 
 
 def test_salvage_clears_committer_debris_and_truncated_files(
-    spark, tiny_graph, ckpt_base
+    spark, tiny_graph, ckpt_base, monkeypatch
 ):
     """Crash mid-write can leave (a) committed task dirs under the
     FileOutputCommitter v1 job-attempt path ``_temporary/0`` — which the
     salvage append's commitJob would otherwise merge, duplicating rows —
     and (b) a part file truncated mid-stream, whose corrupt footer would
-    fail the post-salvage read. Salvage must clear both (ADVICE r2)."""
+    fail the post-salvage read. Salvage must clear both (ADVICE r2).
+
+    The fixture needs at least 3 state files. The loop's partition count
+    is floored at the executor's task slots, and at this scale equals it,
+    so the slot count is pinned to 4 rather than read from the host."""
+    monkeypatch.setattr(loop, "_executor_cores", lambda spark: 4)
     v, e = tiny_graph
     n_v = v.count()
     full = RunCheckpoint(ckpt_base, "dfull")
@@ -178,6 +184,7 @@ import numpy as np
 from engine.datagen import source_files
 from engine.derive import build_graph
 from engine.session import get_spark
+from engine import loop
 from engine.algos.pagerank import pagerank
 
 ref = None

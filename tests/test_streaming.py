@@ -1,46 +1,6 @@
-"""t1: streaming ingest (Verum minions -> Structured Streaming mapping)."""
+"""The watermarked windowed rollup (engine/streaming.py) in batch mode."""
 
 from pyspark.sql import functions as F
-
-from engine.datagen import source_files
-from engine.streaming import read_edge_store, start_edge_ingest
-
-
-def test_feed_ingest_and_merge_on_read(spark, tmp_path):
-    feed = str(tmp_path / "feed")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    # two feed drops, the second overlaps the first (same repo/path rows)
-    src = source_files(spark, 200, 5).cache()
-    src.limit(120).write.mode("append").parquet(feed)
-    src.write.mode("append").parquet(feed)  # full superset -> duplicates
-
-    q = start_edge_ingest(spark, feed, store, ckpt, available_now=True)
-    q.awaitTermination(300)
-
-    merged = read_edge_store(spark, store)
-    # merge-on-read dedups on (src_name, dst_name, rel)
-    assert (
-        merged.groupBy("src_name", "dst_name", "rel").count().filter("count > 1").count()
-        == 0
-    )
-    # the merged store equals the batch derivation over the full corpus
-    from engine.derive import derive_structural_edges
-
-    expect = derive_structural_edges(src)
-    assert merged.count() == expect.count()
-    missing = expect.join(
-        merged.select("src_name", "dst_name", "rel"),
-        ["src_name", "dst_name", "rel"],
-        "left_anti",
-    )
-    assert missing.count() == 0
-
-    # resuming the stream with no new files adds nothing (checkpointed)
-    q2 = start_edge_ingest(spark, feed, store, ckpt, available_now=True)
-    q2.awaitTermination(300)
-    assert read_edge_store(spark, store).count() == expect.count()
 
 
 def test_windowed_counts_with_watermark(spark):
@@ -60,138 +20,3 @@ def test_windowed_counts_with_watermark(spark):
         for r in windowed_edge_counts(ev, window="10 minutes").collect()
     }
     assert got == {(0, "click"): 2, (0, "view"): 1, (10, "click"): 1, (30, "view"): 1}
-
-
-def test_stateful_degree_tracker_accumulates(spark, tmp_path):
-    """applyInPandasWithState keyed state survives across micro-batches:
-    cumulative degrees after two drops equal the batch groupBy count."""
-    from engine.streaming import read_degree_store, start_degree_tracker
-
-    feed = str(tmp_path / "feed2")
-    out = str(tmp_path / "deg")
-    ckpt = str(tmp_path / "ckpt2")
-    src = source_files(spark, 300, 6).cache()
-    # deterministic split (limit() is re-evaluation-unstable)
-    a = src.filter(F.abs(F.xxhash64("repo", "path")) % 3 == 0)
-    b = src
-    a.write.mode("append").parquet(feed)
-    q = start_degree_tracker(spark, feed, out, ckpt, available_now=True)
-    q.awaitTermination(300)
-    b.write.mode("append").parquet(feed)
-    q = start_degree_tracker(spark, feed, out, ckpt, available_now=True)
-    q.awaitTermination(300)
-
-    got = {r.vertex: r.degree for r in read_degree_store(spark, out).collect()}
-    want = {
-        "repo:" + r.repo: r.n
-        for r in a.unionByName(b).groupBy("repo").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got == want
-
-
-def test_dedup_stream_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark across micro-batches: a duplicate id
-    arriving in a later batch (within the watermark) is dropped; the
-    batch-mode mirror degrades to dropDuplicates."""
-    from engine.streaming import dedup_stream
-
-    feed = str(tmp_path / "dfeed")
-    out = str(tmp_path / "dout")
-    ckpt = str(tmp_path / "dckpt")
-    schema = "event_id long, payload string, t double"
-    batch1 = spark.createDataFrame(
-        [(1, "a", 10000.0), (2, "b", 10060.0), (3, "c", 10120.0)], schema
-    )
-    batch2 = spark.createDataFrame(
-        [(2, "b-dup", 10130.0), (4, "d", 10180.0), (4, "d-dup", 10181.0)], schema
-    )
-    # timestamps sit well above the watermark floor: an event at the
-    # initial watermark boundary (t=0) is dropped as late, not deduped
-    batch1.coalesce(1).write.mode("append").parquet(feed)
-    batch2.coalesce(1).write.mode("append").parquet(feed)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .select("event_id", "payload", F.timestamp_seconds("t").alias("ts"))
-    )
-    deduped = dedup_stream(stream, ["event_id"], watermark="10 minutes")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    got = sorted(r.event_id for r in spark.read.parquet(out).collect())
-    assert got == [1, 2, 3, 4]
-
-    # batch mirror: same call on a plain DataFrame
-    allb = batch1.unionByName(batch2).select(
-        "event_id", "payload", F.timestamp_seconds("t").alias("ts")
-    )
-    from engine.streaming import dedup_stream as ds
-    assert sorted(
-        r.event_id for r in ds(allb, ["event_id"]).collect()
-    ) == [1, 2, 3, 4]
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="non-empty"):
-        ds(allb, [])
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (availableNow over two file sources)
-    produces exactly the batch interval join of the same data."""
-    from engine.streaming import stream_interval_join
-
-    lfeed = str(tmp_path / "lfeed")
-    rfeed = str(tmp_path / "rfeed")
-    out = str(tmp_path / "jout")
-    ckpt = str(tmp_path / "jckpt")
-    lschema = "k string, lval long, t double"
-    rschema = "k string, rval long, t double"
-    lrows = [("a", 1, 300.0), ("a", 2, 900.0), ("b", 3, 600.0)]
-    rrows = [("a", 10, 100.0), ("a", 11, 290.0), ("a", 12, 650.0),
-             ("b", 13, 580.0), ("b", 14, 601.0)]
-    spark.createDataFrame(lrows, lschema).coalesce(1).write.parquet(lfeed)
-    spark.createDataFrame(rrows, rschema).coalesce(1).write.parquet(rfeed)
-
-    def _ts(df, schema):
-        cols = [c.split()[0] for c in schema.split(",")]
-        return df.select(
-            *[c for c in cols if c != "t"],
-            F.timestamp_seconds("t").alias("ts"),
-        )
-
-    ls = _ts(spark.readStream.schema(lschema).parquet(lfeed), lschema)
-    rs = _ts(spark.readStream.schema(rschema).parquet(rfeed), rschema)
-    joined = stream_interval_join(ls, rs, key="k", lag="5 minutes")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r.k, r.lval_l, r.rval_r)
-        for r in spark.read.parquet(out).collect()
-    )
-    # hand-computed: right within [left_t - 300s, left_t] on same key
-    want = sorted([
-        ("a", 1, 10),          # 100 in [0, 300]
-        ("a", 1, 11),          # 290 in [0, 300]
-        ("a", 2, 12),          # 650 in [600, 900]
-        ("b", 3, 13),          # 580 in [300, 600]
-    ])
-    assert got == want
-
-    # batch mirror of the same call
-    lb = _ts(spark.read.parquet(lfeed), lschema)
-    rb = _ts(spark.read.parquet(rfeed), rschema)
-    got_b = sorted(
-        (r.k, r.lval_l, r.rval_r)
-        for r in stream_interval_join(lb, rb, key="k", lag="5 minutes").collect()
-    )
-    assert got_b == want

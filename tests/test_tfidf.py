@@ -101,6 +101,16 @@ def test_tfidf_min_df_prunes(spark, docs_df):
     assert all(dfv >= 2 for (_, dfv, _) in got.values())
 
 
+def test_bm25_min_df_prunes(spark, docs_df):
+    """min_df drops rare terms; N and avgdl still count every doc."""
+    got = {
+        (r.doc_id, r.term): (r.tf, r.df, r.dl, r.bm25_w)
+        for r in T.bm25(docs_df, min_df=2).collect()
+    }
+    assert got == {k: w for k, w in oracle_bm25().items() if w[1] >= 2}
+    assert got  # something survives (cat/dog/the appear in >=2 docs)
+
+
 def test_bm25_matches_oracle(spark, docs_df):
     got = {
         (r.doc_id, r.term): (r.tf, r.df, r.dl, r.bm25_w)
