@@ -8,7 +8,7 @@ an idiomatic Spark engine:
   table (repo->path, path->lang, repo->commit, content-hash co-occurrence)
   from a source-code corpus table ``(repo, path, commit, lang, content)``.
 - **graph**: columnar vertex/edge tables, dense long vertex ids, CSR-like
-  hash-partitioned src-sorted Parquet layout, hub detection + salting.
+  hash-partitioned src-sorted Parquet layout, bucketed edge tables.
 - **algos**: iterative DataFrame algorithms — PageRank (damped, with
   dangling-mass redistribution, optional personalization = Verum's
   topic-sensitive scoring, and warm starts from prior ranks), connected

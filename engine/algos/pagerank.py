@@ -32,15 +32,15 @@ Scale design (the parts that must survive 10^12 edges):
   repo->path->lang / repo->commit link graph) G is nilpotent: x is exact
   after longest-path+1 updates and the loop stops one iteration later. On
   cyclic graphs the contraction modulus is alpha*rho(G) <= alpha.
-- **Hub skew: partial aggregation first, salting as the explicit option.**
-  ``groupBy(dst).sum`` map-side partial aggregation bounds a mega-hub's
-  reducer input to ONE partial row per map partition — for an algebraic
-  aggregate this is already the two-phase skew split, done by Tungsten for
-  free. The *explicit* salted path (pre-attached salt modulus on hub dsts,
-  ``groupBy(dst, salt)`` then ``groupBy(dst)``) is kept behind
-  ``salt_hub_threshold`` for non-algebraic gathers, but measured OFF as the
-  default: at 10.3M edges it costs a full extra exchange per iteration
-  (2.06 s/iter -> 1.26 s/iter at local[32] when removed, r2 probes).
+- **Hub skew: partial aggregation.** ``groupBy(dst).sum`` map-side
+  partial aggregation bounds a mega-hub's reducer input to ONE partial
+  row per map partition — for an algebraic aggregate this is already the
+  two-phase skew split, done by Tungsten for free
+  (``tests/test_pagerank.py`` pins the partial aggregate below the
+  gather's exchange). An explicit salted gather (``groupBy(dst, salt)``
+  then ``groupBy(dst)``) gave the same values but cost a full extra
+  exchange per iteration: 2.06 s/iter against 1.26 s/iter without it at
+  10.3M edges on local[32].
 - **Constant-depth plans + resumability**: each iteration's state is a
   Parquet checkpoint, re-read as the next iteration's input (lineage cut);
   resume picks up from the last committed manifest (io.RunCheckpoint).
@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from engine.graph import hub_vertices
 from engine.io import RunCheckpoint
 from engine.loop import iterative_conf, release, step
 
@@ -85,37 +84,17 @@ STATE_COLS = ("vid", "p", "value")
 def _prepare_edges(
     edges: DataFrame,
     weighted: bool,
-    salt_hub_threshold: int | None,
-    salt_buckets: int,
     partitions: int,
     pre_partitioned: bool = False,
-) -> tuple[DataFrame, DataFrame, bool]:
-    """Returns (norm_edges(src,dst,cw[,salt]), out_vids(vid), has_hubs).
-
-    cw = transition probability src->dst. When salting is requested AND a
-    hub exists, the salt is pre-attached ONCE so the loop pays nothing
-    per-iteration to compute it; when off, the cached edge table carries no
-    salt column at all (narrower rows = less cache traffic per iteration)."""
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (norm_edges(src,dst,cw), out_vids(vid)); cw = transition
+    probability src->dst."""
     w = F.col("weight") if weighted else F.lit(1.0)
     e = edges.select("src", "dst", w.alias("w"))
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     norm = e.join(out_w, "src").select(
         "src", "dst", (F.col("w") / F.col("out_w")).alias("cw")
     )
-    has_hubs = False
-    hubs = None
-    if salt_hub_threshold is not None:
-        hubs = hub_vertices(edges, salt_hub_threshold).select(
-            F.col("vid").alias("dst"), F.lit(salt_buckets).alias("salt_mod")
-        )
-        has_hubs = not hubs.isEmpty()
-    if has_hubs:
-        norm = norm.join(F.broadcast(hubs), "dst", "left").select(
-            "src",
-            "dst",
-            "cw",
-            F.pmod(F.xxhash64("src"), F.coalesce("salt_mod", F.lit(1))).alias("salt"),
-        )
     if not pre_partitioned:
         # One explicit shuffle so every iteration's gather join finds the
         # edge side already clustered by src. Skipped when the input comes
@@ -123,7 +102,7 @@ def _prepare_edges(
         # already exposes HashPartitioning(src) and the groupBy/join above
         # preserved it, so repartitioning would be a wasted O(E) shuffle.
         norm = norm.repartition(partitions, "src")
-    return norm, out_w.select(F.col("src").alias("vid")), has_hubs
+    return norm, out_w.select(F.col("src").alias("vid"))
 
 
 def pagerank(
@@ -138,8 +117,6 @@ def pagerank(
     checkpoint: RunCheckpoint | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
-    salt_hub_threshold: int | None = None,
-    salt_buckets: int = 16,
     edges_pre_partitioned: bool = False,
     initial_ranks: DataFrame | None = None,
 ) -> PageRankResult:
@@ -159,13 +136,6 @@ def pagerank(
     ``edges_pre_partitioned``: True when ``edges`` comes from a bucketed
     table clustered by src (graph.save_edges_bucketed with buckets ==
     shuffle partitions) — skips the loop's one-time O(E) repartition.
-
-    ``salt_hub_threshold``: None (default) relies on Tungsten partial
-    aggregation for hub-dst skew (one partial per map partition per key —
-    already two-phase for the algebraic sum); an int enables the explicit
-    salted two-phase aggregation for dsts above that in-degree. Results are
-    identical either way (tested to 1e-12); the explicit path costs one
-    extra exchange per iteration.
 
     ``initial_ranks``: optional (vid, value) DataFrame to warm-start the
     iteration from — typically yesterday's converged ranks after an
@@ -194,15 +164,14 @@ def pagerank(
         return _pagerank_loop(
             spark, edges, vertices, alpha, tol, max_iter, weighted,
             personalization, checkpoint, checkpoint_every, resume,
-            salt_hub_threshold, salt_buckets, edges_pre_partitioned,
-            initial_ranks,
+            edges_pre_partitioned, initial_ranks,
         )
 
 
-def _gather_update(norm, ranks, cols, has_hubs, bcast):
+def _gather_update(norm, ranks, cols, bcast):
     """ONE synchronous update ``x <- (1-alpha)*p + alpha*G*x`` as a
     DataFrame expression: gather edges(src)⋈ranks -> per-dst contribution
-    sum (hub-salted partial stage when hubs are present) -> update joined
+    sum (partially aggregated map-side) -> update joined
     back onto the state. Returns (vid, p, value, diff); shared by the main
     loop and mid-iteration salvage so both run the same expression tree.
     Salvaged partitions are numerically equivalent to an uninterrupted run
@@ -216,15 +185,7 @@ def _gather_update(norm, ranks, cols, has_hubs, bcast):
     gathered = norm.join(
         bcast(ranks.select(F.col("vid").alias("src"), "value")), "src"
     )
-    if has_hubs:
-        contribs = (
-            gathered.groupBy("dst", "salt")
-            .agg(cols["cw_value_sum"].alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        contribs = gathered.groupBy("dst").agg(cols["cw_value_sum"].alias("c"))
+    contribs = gathered.groupBy("dst").agg(cols["cw_value_sum"].alias("c"))
     value = cols["value"]
     return (
         ranks.withColumnRenamed("value", "old")
@@ -249,8 +210,7 @@ def _update_cols(p_col, alpha):
 
 def _pagerank_loop(
     spark, edges, vertices, alpha, tol, max_iter, weighted, personalization,
-    checkpoint, checkpoint_every, resume, salt_hub_threshold, salt_buckets,
-    edges_pre_partitioned, initial_ranks,
+    checkpoint, checkpoint_every, resume, edges_pre_partitioned, initial_ranks,
 ) -> PageRankResult:
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Narrow vertex ids to int32 when they fit (dense vids fit up to 2^31
@@ -291,9 +251,8 @@ def _pagerank_loop(
             initial_ranks = initial_ranks.withColumn(
                 "vid", F.col("vid").cast("int")
             )
-    norm, out_vids, has_hubs = _prepare_edges(
-        edges, weighted, salt_hub_threshold, salt_buckets, P,
-        pre_partitioned=edges_pre_partitioned,
+    norm, out_vids = _prepare_edges(
+        edges, weighted, P, pre_partitioned=edges_pre_partitioned
     )
     norm.persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = norm.count()  # materialize the one-time edge shuffle
@@ -426,9 +385,9 @@ def _pagerank_loop(
                 # merged by the append job's commitJob, duplicating rows for
                 # those hash partitions in the sealed state (ADVICE r2).
                 checkpoint.clear_job_debris(it_s)
-                new_full = _gather_update(
-                    norm, ranks, cols, has_hubs, bcast
-                ).select(*STATE_COLS)
+                new_full = _gather_update(norm, ranks, cols, bcast).select(
+                    *STATE_COLS
+                )
                 part = F.pmod(F.hash("vid"), F.lit(p_s))
                 new_full.filter(part.isin(missing)).repartition(
                     p_s, "vid"
@@ -460,7 +419,7 @@ def _pagerank_loop(
     observed = {"delta": F.sum("diff"), "mass": F.sum("value")}
     for it in range(loop_start, max_iter + 1):
         t0 = time.monotonic()
-        new = _gather_update(norm, ranks, cols, has_hubs, bcast)
+        new = _gather_update(norm, ranks, cols, bcast)
 
         if checkpoint is not None and (it % checkpoint_every == 0):
             # Observe BELOW the slimming select: the delta/mass metrics

@@ -12,7 +12,7 @@ The generated corpus exercises every skew/dedup path the engine must handle:
 
 - lang popularity is Zipf(s=1.2) over a fixed 12-entry ext->lang map, so
   ``python`` / ``javascript`` become hub vertices (>20% of path->lang edges
-  land on the top lang — salting is exercised, not just configured).
+  land on the top lang — hub skew is exercised, not just configured).
 - 8% of files draw content from a shared 50-entry pool (empty file, LICENSE,
   README boilerplate, common snippets) -> cross-repo identical sha256 ->
   co-occurrence groups, including groups larger than the explode cap.

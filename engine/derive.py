@@ -157,9 +157,15 @@ def derive_cooccur_edges(
     The groupBy+double-explode form (not a raw self-join on content_hash) so
     the cap is applied *before* the quadratic blowup (SURVEY.md Table B J3).
     """
-    pairs = cooccur_pairs(
-        hashed.select("content_hash", "repo").distinct(), cap, log_dropped
+    return cooccur_name_edges(
+        cooccur_pairs(
+            hashed.select("content_hash", "repo").distinct(), cap, log_dropped
+        )
     )
+
+
+def cooccur_name_edges(pairs: DataFrame) -> DataFrame:
+    """Repo pairs (a, b, weight) as name-space ``cooccur`` edges."""
     return pairs.select(
         _name("repo", F.col("a")).alias("src_name"),
         _name("repo", F.col("b")).alias("dst_name"),

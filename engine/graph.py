@@ -1,4 +1,4 @@
-"""Graph tables: schemas, dense vertex ids, CSR-like layout, hubs, salting.
+"""Graph tables: schemas, dense vertex ids, CSR-like and bucketed layouts.
 
 The engine's graph representation is a pair of immutable columnar tables
 (SURVEY.md §1.2) — the idiomatic Spark form of the reference's single
@@ -160,13 +160,6 @@ def in_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def hub_vertices(edges: DataFrame, threshold: int = 10_000) -> DataFrame:
-    """Vertices whose in-degree exceeds ``threshold`` — the salting target
-    list (popular langs/commits, BASELINE.json north_star). Computed once at
-    derivation; tiny (O(#langs + #hot commits)), always broadcastable."""
-    return in_degrees(edges).filter(F.col("in_deg") > threshold).select("vid", "in_deg")
-
-
 def undirected(edges: DataFrame) -> DataFrame:
     """Undirected simple view as one row per edge: (a, b) with a < b —
     endpoints ordered, self-loops dropped, parallel and reciprocal edges
@@ -254,9 +247,7 @@ def load_edges_csr(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).select("src", "dst", "rel", "weight")
 
 
-def save_edges_bucketed(
-    edges: DataFrame, table: str, buckets: int = 32, narrow: bool = True
-) -> None:
+def save_edges_bucketed(edges: DataFrame, table: str, buckets: int = 32) -> None:
     """Persist edges as a BUCKETED table: ``bucketBy(src) + sortBy(src,dst)``.
 
     Unlike the directory layout above, bucket metadata survives in the
@@ -267,22 +258,19 @@ def save_edges_bucketed(
     ``buckets`` equal to the loop's ``spark.sql.shuffle.partitions`` so the
     rank side's hash partitioning lines up with the bucket count.
 
-    ``narrow`` (default on): when every vid fits in int32, src/dst are cast
-    to int BEFORE the write. Casting must happen here, at ingest, because a
-    cast on top of the bucketed scan would invalidate HashPartitioning(src)
+    When every vid fits in int32, src/dst are cast to int BEFORE the write.
+    Casting must happen here, at ingest, because a cast on top of the
+    bucketed scan would invalidate HashPartitioning(src)
     (Murmur3 hash(int) != hash(long)) and re-introduce the O(E) exchange;
     narrowing at save time gives readers rows a third smaller AND the
     shuffle-free scan (measured 27%/iteration on the bigint layout at 3.4M
     edges). One extra O(E) max() aggregation at ingest pays for it.
     """
-    if narrow:
-        max_vid = edges.agg(
-            F.greatest(F.max("src"), F.max("dst"))
-        ).collect()[0][0]
-        if max_vid is not None and int(max_vid) < 2**31 - 1:
-            edges = edges.withColumn(
-                "src", F.col("src").cast("int")
-            ).withColumn("dst", F.col("dst").cast("int"))
+    max_vid = edges.agg(F.greatest(F.max("src"), F.max("dst"))).collect()[0][0]
+    if max_vid is not None and int(max_vid) < 2**31 - 1:
+        edges = edges.withColumn("src", F.col("src").cast("int")).withColumn(
+            "dst", F.col("dst").cast("int")
+        )
     (
         # Cluster by the bucket key BEFORE the write: the bucket id is
         # pmod(Murmur3(src), buckets) — the same function repartition

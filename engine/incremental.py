@@ -41,21 +41,13 @@ from pyspark.sql import functions as F
 
 from engine.derive import (
     COOCCUR_CAP,
-    _name,
     content_membership,
+    cooccur_name_edges,
     cooccur_pairs,
     derive_graph,
     derive_structural_edges,
 )
 from engine.graph import assign_vertex_ids, encode_edges
-
-def _pairs_to_name_edges(pairs: DataFrame) -> DataFrame:
-    return pairs.select(
-        _name("repo", F.col("a")).alias("src_name"),
-        _name("repo", F.col("b")).alias("dst_name"),
-        F.lit("cooccur").alias("rel"),
-        "weight",
-    )
 
 
 def merge_cooccur(
@@ -164,7 +156,7 @@ def update_graph(
             cap,
             log_dropped=log_dropped,
         )
-        name_edges = struct.unionByName(_pairs_to_name_edges(pairs))
+        name_edges = struct.unionByName(cooccur_name_edges(pairs))
     else:
         membership = prev_membership.unionByName(
             content_membership(new_source)

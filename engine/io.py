@@ -18,13 +18,13 @@ layout) is ignored and recovery falls back to the last committed iteration
 boundary. Sub-task retry inside a live job remains Spark's own
 lineage/shuffle-retry territory.
 
-Filesystem abstraction (ADVICE r1): all manifest/lineage IO goes through a
-small FS seam. Local paths use ``os``/``pyarrow`` directly (fast path);
-any URI with a scheme (``hdfs://``, ``s3a://``, ...) is served by the
-Hadoop FileSystem API through the live JVM (``spark._jvm``), which is
-exactly what a spark-submit cluster run would resolve against. The Parquet
-*data* write/read is ``df.write.parquet``/``spark.read.parquet`` either
-way, which already speaks any Hadoop-supported scheme.
+One filesystem: every manifest, staging marker, listing and footer read
+goes through the Hadoop FileSystem API of the live JVM (``spark._jvm``),
+the same storage layer ``df.write.parquet``/``spark.read.parquet`` use for
+the data. A path therefore resolves identically for both: a schemeless
+base dir means ``fs.defaultFS`` (HDFS on a cluster, the local disk in
+``local[n]``), and ``hdfs://``, ``s3a://`` or ``file://`` URIs mean what
+they say.
 
 Why Parquet-per-iteration and not ``df.checkpoint()``/``localCheckpoint()``:
 it cuts lineage (constant-depth plans across iterations), survives process
@@ -35,14 +35,10 @@ and session-bound (SURVEY.md §4.3.5). All table IO goes through
 
 from __future__ import annotations
 
-import io as _io
 import json
-import os
-import shutil
 import uuid
 from typing import Any
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "MANIFEST.json"
@@ -61,63 +57,16 @@ def load_source(spark: SparkSession, location: str, table: bool = False) -> Data
 # ------------------------------------------------------------------ FS seam
 
 
-def _has_scheme(path: str) -> bool:
-    return "://" in path and not path.startswith("file://")
-
-
-class _LocalFS:
-    """Plain-os backend for schemeless / file:// paths."""
-
-    def makedirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def listdir(self, path: str) -> list[str]:
-        return os.listdir(path)
-
-    def size(self, path: str) -> int:
-        return os.path.getsize(path)
-
-    def read_bytes(self, path: str) -> bytes:
-        with open(path, "rb") as fh:
-            return fh.read()
-
-    def write_atomic(self, path: str, data: bytes) -> None:
-        # Write-then-rename: the file's existence IS the commit. A crash
-        # mid-write leaves a .tmp that resume ignores.
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        os.replace(tmp, path)
-
-    def delete(self, path: str, recursive: bool = False) -> None:
-        if not os.path.exists(path):
-            return
-        if recursive and os.path.isdir(path):
-            shutil.rmtree(path)
-        else:
-            os.remove(path)
-
-    def parquet_num_rows(self, path: str) -> int:
-        return pq.ParquetFile(path).metadata.num_rows
-
-
 class _HadoopFS:
-    """Hadoop FileSystem backend for hdfs:// s3a:// etc., via the live JVM.
-
-    Exercised in tests against ``file:///`` URIs (the Hadoop LocalFileSystem
-    implementation) — the same Java code path a cluster resolves for HDFS.
-    """
+    """Manifest/lineage IO through the Hadoop FileSystem API of the live
+    JVM: the filesystem ``df.write.parquet`` resolves the same path
+    against, so markers and data always land side by side."""
 
     def __init__(self, spark: SparkSession, path: str):
         jvm = spark._jvm
         self._jvm = jvm
         self._conf = spark._jsc.hadoopConfiguration()
-        self._fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(path), self._conf
-        )
+        self._fs = self._p(path).getFileSystem(self._conf)
 
     def _p(self, path: str):
         return self._jvm.org.apache.hadoop.fs.Path(path)
@@ -145,6 +94,8 @@ class _HadoopFS:
         return bytes(baos.toByteArray())
 
     def write_atomic(self, path: str, data: bytes) -> None:
+        # Write-then-rename: the final name's existence IS the commit. A
+        # crash mid-write leaves a .tmp that resume ignores.
         tmp = self._p(path + ".tmp")
         stream = self._fs.create(tmp, True)
         try:
@@ -163,22 +114,17 @@ class _HadoopFS:
         self._fs.delete(self._p(path), recursive)
 
     def parquet_num_rows(self, path: str) -> int:
-        data = self.read_bytes(path)
-        return pq.ParquetFile(_io.BytesIO(data)).metadata.num_rows
-
-
-def _fs_for(path: str, spark: SparkSession | None):
-    if _has_scheme(path):
-        if spark is None:
-            raise ValueError(
-                f"{path!r} needs a live SparkSession for Hadoop FS access"
+        """The footer's row count, read in the JVM (only the footer moves)."""
+        jvm = self._jvm
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                self._p(path), self._conf
             )
-        return _HadoopFS(spark, path)
-    return _LocalFS()
-
-
-def _strip_file_scheme(path: str) -> str:
-    return path[len("file://"):] if path.startswith("file://") else path
+        )
+        try:
+            return int(reader.getRecordCount())
+        finally:
+            reader.close()
 
 
 # --------------------------------------------------------------- checkpoint
@@ -200,9 +146,9 @@ def _file_lineage(fs, state_dir: str) -> list[dict[str, Any]]:
 class RunCheckpoint:
     """Per-run checkpoint directory with commit-marker manifests.
 
-    ``base_dir`` may be a local path (tests, single box) or any
-    Hadoop-resolvable URI (``hdfs://nn/runs``, ``s3a://bucket/runs``) when a
-    SparkSession is supplied.
+    ``base_dir`` is any Hadoop-resolvable path: schemeless (``fs.defaultFS``)
+    or a URI (``hdfs://nn/runs``, ``s3a://bucket/runs``, ``file:///runs``).
+    ``spark`` defaults to the active session.
     """
 
     def __init__(
@@ -211,10 +157,14 @@ class RunCheckpoint:
         run_id: str | None = None,
         spark: SparkSession | None = None,
     ):
+        spark = spark or SparkSession.getActiveSession()
+        if spark is None:
+            raise ValueError(
+                "RunCheckpoint needs a live SparkSession for filesystem access"
+            )
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        base_dir = base_dir if _has_scheme(base_dir) else _strip_file_scheme(base_dir)
         self.dir = base_dir.rstrip("/") + "/" + self.run_id
-        self._fs = _fs_for(self.dir, spark)
+        self._fs = _HadoopFS(spark, self.dir)
         self._fs.makedirs(self.dir)
 
     def state_path(self, it: int) -> str:

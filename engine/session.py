@@ -89,8 +89,8 @@ def get_spark(
         # a batch stays comfortably in the Python worker's memory.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "5000")
         # AQE: runtime partition coalescing + skew-join splitting are the
-        # first line of defense for skew; explicit salting (graph.py) covers
-        # the groupBy hot keys AQE cannot touch.
+        # first line of defense for join skew; groupBy hot keys are split by
+        # map-side partial aggregation (the PageRank gather's sum).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

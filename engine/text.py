@@ -213,66 +213,9 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def ngram_vocab(
-    docs: DataFrame,
-    n: int = 1,
-    min_count: int = 1,
-    top_k: int | None = None,
-    lowercase: bool = True,
-) -> DataFrame:
-    """(gram, count, doc_freq) — token n-gram vocabulary induction, the
-    tokenizer-prep / IDF-table operator of a training-data pipeline.
-
-    Tokens are whitespace runs (the same split as ``token_counts``),
-    n-grams the space-joined sliding windows over each doc's token
-    sequence — built with ``transform`` over ``sequence`` + ``slice``,
-    i.e. array expressions inside codegen, no UDF. One explode (row count
-    = total grams, the irreducible size of the work) into one
-    partial-aggregated groupBy: counts combine map-side, so the shuffle
-    carries one partial row per (partition, gram), not one per
-    occurrence. ``doc_freq`` = distinct docs containing the gram (the IDF
-    numerator) rides the same aggregation.
-
-    ``min_count`` prunes the long tail BEFORE any driver contact;
-    ``top_k`` additionally keeps the global k most frequent (ties broken
-    by gram for determinism) — at 100 TB always set one of them: an
-    unpruned unigram table of the open web is itself a large dataset.
-    """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    t = F.col("text")
-    if lowercase:
-        t = F.lower(t)
-    toks = F.split(F.trim(t), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    exploded = (
-        docs.filter(F.length("text") > 0)
-        .filter(F.size(toks) >= n)
-        .select("doc_id", F.explode(grams).alias("gram"))
-    )
-    agg = exploded.groupBy("gram").agg(
-        F.count(F.lit(1)).alias("count"),
-        F.countDistinct("doc_id").alias("doc_freq"),
-    )
-    if min_count > 1:
-        agg = agg.filter(F.col("count") >= min_count)
-    if top_k is not None:
-        # orderBy().limit() compiles to TakeOrderedAndProject: a bounded
-        # per-partition heap + one k-row merge at the driver — never a
-        # global sort of the whole vocabulary (same pattern as report.top_k)
-        agg = (
-            agg.orderBy(F.col("count").desc(), F.col("gram").asc())
-            .limit(top_k)
-        )
-    return agg
-
-
 def term_frequencies(docs: DataFrame, lowercase: bool = True) -> DataFrame:
     """(doc_id, term, tf, dl) — per-document whitespace-term counts plus the
-    document token length, the shared substrate of ``tfidf`` and ``bm25``.
+    document token length, the substrate of ``bm25``.
 
     One explode (row count = total tokens, the irreducible work) into one
     partially-aggregated groupBy(doc_id, term): counts combine map-side, so
@@ -295,57 +238,6 @@ def term_frequencies(docs: DataFrame, lowercase: bool = True) -> DataFrame:
     )
 
 
-def _doc_stats(tf: DataFrame) -> DataFrame:
-    """One-row (n_docs, avgdl) from the tf table — broadcast-joined by the
-    callers (a 1-row aggregate; Catalyst broadcasts it, never shuffles)."""
-    return (
-        tf.select("doc_id", "dl")
-        .distinct()
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
-    )
-
-
-def tfidf(
-    docs: DataFrame,
-    min_df: int = 1,
-    lowercase: bool = True,
-    round_to: int = 4,
-) -> DataFrame:
-    """(doc_id, term, tf, df, tfidf_w) — smoothed TF-IDF term weights,
-    idf = ln((N+1)/(df+1)) + 1 (the add-one-smoothed form: never zero,
-    never divides by zero, public knowledge from the IR literature /
-    sklearn's TfidfTransformer default).
-
-    Plan: tf explode+groupBy (see ``term_frequencies``), df as a second,
-    much smaller groupBy over the tf table (one row per distinct term),
-    then tf ⋈ df on term — a shuffle equi-join whose build side is the
-    vocabulary, orders of magnitude below the corpus; the (N) scalar rides
-    a broadcast 1-row crossJoin. No UDF anywhere; the weight is one
-    codegen'd projection, rounded once at the end (the quality_score
-    cross-engine rounding rule).
-    """
-    tf = term_frequencies(docs, lowercase=lowercase)
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if min_df > 1:
-        dfreq = dfreq.filter(F.col("df") >= min_df)
-    stats = _doc_stats(tf)
-    idf = F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0
-    return (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "term",
-            "tf",
-            "df",
-            F.round(F.col("tf") * idf, round_to).alias("tfidf_w"),
-        )
-    )
-
-
 def bm25(
     docs: DataFrame,
     k1: float = 1.2,
@@ -361,15 +253,21 @@ def bm25(
 
     The per-(doc, term) weight table IS the inverted index a retrieval or
     data-curation pipeline builds: scoring a query is then a semi-join of
-    its terms against this table + a groupBy(doc_id) sum. Same plan shape
-    as ``tfidf`` — the corpus-sized side is touched once, the (N, avgdl)
-    scalars ride a broadcast 1-row aggregate, everything codegen'd.
+    its terms against this table + a groupBy(doc_id) sum. The corpus-sized
+    side is touched once: tf explode+groupBy (``term_frequencies``), df as
+    a much smaller groupBy over the tf table, tf ⋈ df on term, and the
+    (N, avgdl) scalars ride a broadcast 1-row aggregate, everything
+    codegen'd.
     """
     tf = term_frequencies(docs, lowercase=lowercase)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if min_df > 1:
         dfreq = dfreq.filter(F.col("df") >= min_df)
-    stats = _doc_stats(tf)
+    stats = (
+        tf.select("doc_id", "dl")
+        .distinct()
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
+    )
     idf = F.log(
         1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
@@ -386,274 +284,4 @@ def bm25(
             "dl",
             F.round(w, round_to).alias("bm25_w"),
         )
-    )
-
-
-def repetition_features(docs: DataFrame, ns: tuple = (2, 3)) -> DataFrame:
-    """Per-doc repetition/boilerplate signals (the Gopher/MassiveText
-    repetition-filter family, Rae et al. 2021 §A1.1 — public knowledge),
-    set-oriented:
-
-      dup_line_frac       duplicate lines / lines
-      dup_line_char_frac  chars inside duplicate-line occurrences / chars
-      top{n}gram_frac     occurrences of the most frequent word n-gram /
-                          total n-gram occurrences, per n in ``ns``
-      dup{n}gram_frac     1 - distinct/total n-gram occurrences (the
-                          fraction of occurrences that are repeats)
-
-    Line metrics are pure array expressions (split + array_distinct +
-    aggregate) — zero shuffle, one codegen'd projection. The n-gram
-    metrics explode once per n into a partial-agg groupBy(doc_id, gram)
-    and a groupBy(doc_id) rollup — shuffle rows = distinct grams, the
-    irreducible histogram size; everything joins back on doc_id. Short
-    docs (< n tokens) report 0.0 for that n. All ratios rounded to 4 for
-    cross-engine compare.
-    """
-    t = F.col("text")
-    lines = F.filter(F.split(t, "\n"), lambda s: F.length(F.trim(s)) > 0)
-    n_lines = F.size(lines)
-    dist_lines = F.array_distinct(lines)
-    # chars inside duplicate-line occurrences: total line chars minus the
-    # chars of one copy of each distinct line... counts EVERY occurrence of
-    # a line that appears >1x as duplicate, matching the "fraction of
-    # characters within duplicate lines" reading where the first copy of a
-    # repeated line is also boilerplate.
-    sum_len = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0), lambda acc, s: acc + F.length(s)
-    )
-    line_chars = sum_len(lines)
-    uniq_line_set = F.filter(
-        dist_lines,
-        lambda s: F.size(F.filter(lines, lambda x: x == s)) == 1,
-    )
-    base = docs.filter(F.col("text").rlike(r"\S")).select(
-        "doc_id",
-        "text",
-        F.when(n_lines > 0, F.round(
-            (n_lines - F.size(dist_lines)) / n_lines, 4
-        )).otherwise(F.lit(0.0)).alias("dup_line_frac"),
-        F.when(line_chars > 0, F.round(
-            (line_chars - sum_len(uniq_line_set)) / line_chars, 4
-        )).otherwise(F.lit(0.0)).alias("dup_line_char_frac"),
-    )
-
-    toks = F.split(F.regexp_replace(F.lower(t), r"^\s+|\s+$", ""), r"\s+")
-    out = base.select("doc_id", "dup_line_frac", "dup_line_char_frac")
-    for n in ns:
-        grams = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            ),
-        ).otherwise(F.array())
-        hist = (
-            base.select("doc_id", F.explode(grams).alias("g"))
-            .groupBy("doc_id", "g")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("doc_id")
-            .agg(
-                F.max("c").alias("top"),
-                F.sum("c").alias("tot"),
-                F.count(F.lit(1)).alias("dist"),
-            )
-            .select(
-                "doc_id",
-                F.round(F.col("top") / F.col("tot"), 4).alias(f"top{n}gram_frac"),
-                F.round(1 - F.col("dist") / F.col("tot"), 4).alias(f"dup{n}gram_frac"),
-            )
-        )
-        out = out.join(hist, "doc_id", "left").fillna(
-            {f"top{n}gram_frac": 0.0, f"dup{n}gram_frac": 0.0}
-        )
-    return out
-
-
-# ---------------------------------------------------------------- PII pass
-# Regex PII detection/redaction — the standard pre-training scrub (public
-# practice: C4/Dolma/RedPajama ship exactly this class of conservative
-# regex passes; ML-based PII is out of scope offline). Patterns restrict
-# to constructs whose semantics are IDENTICAL in Java regex (Spark JVM)
-# and python `re` — no lookaround, no possessive quantifiers — so the
-# pytest oracle (tests/test_pii.py) runs the very same pattern strings
-# through `re` and asserts exact per-doc equality.
-#
-# Scale notes: detection is one projection of `regexp_count` columns
-# (whole-stage codegen, zero shuffle, zero Python); redaction is a chain
-# of `regexp_replace` in a fixed kind order. Both stream through the scan.
-
-PII_PATTERNS: dict[str, str] = {
-    # local@domain.tld — conservative, no quoted-locals
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9-]+(?:\.[A-Za-z0-9-]+)*\.[A-Za-z]{2,}",
-    # dotted quad, each octet 0-255
-    "ipv4": (
-        r"\b(?:(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"
-        r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\b"
-    ),
-    # NANP-ish phone: optional +1, (xxx) or xxx, separators space/dot/dash
-    "phone": r"\b(?:\+?1[ .-]?)?(?:\(\d{3}\)|\d{3})[ .-]\d{3}[ .-]\d{4}\b",
-    # US SSN shape
-    "ssn": r"\b\d{3}-\d{2}-\d{4}\b",
-}
-
-# Redaction must apply in a FIXED order: ssn/phone before ipv4 cannot
-# matter (disjoint shapes), but email before ipv4 prevents re-matching
-# inside already-redacted text when replacement tokens contain dots.
-PII_ORDER = ("email", "ipv4", "phone", "ssn")
-
-
-def pii_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document match counts per PII kind + total. One codegen'd
-    projection; no shuffle, no Python."""
-    cols = [
-        F.regexp_count(F.col(text_col), F.lit(pat)).alias(f"n_{kind}")
-        for kind, pat in PII_PATTERNS.items()
-    ]
-    out = docs.select("doc_id", *cols)
-    total = None
-    for kind in PII_PATTERNS:
-        c = F.col(f"n_{kind}")
-        total = c if total is None else total + c
-    return out.withColumn("n_pii", total)
-
-
-def redact_pii(
-    docs: DataFrame,
-    text_col: str = "text",
-    replacement: str = "[PII_{kind}]",
-) -> DataFrame:
-    """Replace every PII match with ``replacement`` (``{kind}`` expands to
-    the pattern name, uppercased). Applies PII_ORDER deterministically;
-    all other columns pass through."""
-    col = F.col(text_col)
-    for kind in PII_ORDER:
-        token = replacement.replace("{kind}", kind.upper())
-        col = F.regexp_replace(col, F.lit(PII_PATTERNS[kind]), F.lit(token))
-    return docs.withColumn(text_col, col)
-
-
-# ---------------------------------------------------------------------------
-# Text normalization + C4-style line cleaning (round 4)
-# ---------------------------------------------------------------------------
-
-# C0 controls minus \t\n\r, plus DEL and the zero-width/BOM family — the
-# characters every web-corpus pipeline strips (C4/Dolma/RefinedWeb
-# practice). The class members are LITERAL characters (Python \x/\u
-# escapes resolve before the pattern string is built), so Java regex and
-# python `re` see byte-identical patterns and the test oracle runs the
-# SAME string.
-CONTROL_CHARS_RE = (
-    "[\x00-\x08\x0b\x0c\x0e-\x1f\x7f"
-    "\u200b\u200c\u200d\ufeff]"
-)
-
-
-def normalize_text(
-    docs: DataFrame,
-    text_col: str = "text",
-    unicode_form: str | None = "NFC",
-    strip_control: bool = True,
-    collapse_spaces: bool = True,
-) -> DataFrame:
-    """Canonical text cleanup: CRLF/CR -> LF, control/zero-width strip,
-    space-run collapse + per-line edge trim, optional Unicode NFC.
-
-    Everything except NFC is codegen'd ``regexp_replace`` (zero shuffle,
-    zero Python). NFC itself has no JVM builtin in Spark SQL, so it is the
-    one Arrow-batched pandas-UDF step — vectorized ``unicodedata.normalize``
-    per batch, the documented slow-path exception (SURVEY §2 B.9). Pass
-    ``unicode_form=None`` to stay entirely JVM-side.
-
-    Order matters and is part of the contract (mirrored by the oracle):
-    newline canonicalization, then control strip, then space collapse,
-    then NFC last (so composition can't resurrect a stripped mark's
-    combining form ordering).
-    """
-    col = F.col(text_col)
-    col = F.regexp_replace(col, F.lit("\\r\\n?"), F.lit("\n"))
-    if strip_control:
-        col = F.regexp_replace(col, F.lit(CONTROL_CHARS_RE), F.lit(""))
-    if collapse_spaces:
-        col = F.regexp_replace(col, F.lit("[ \\t]+"), F.lit(" "))
-        col = F.regexp_replace(col, F.lit(" ?\\n ?"), F.lit("\n"))
-        # explicit edge-trim pattern (NOT F.trim, which strips only
-        # spaces): by this point \r is canonicalized and controls are
-        # gone, so [ \t\n] is the full whitespace alphabet — the same
-        # pattern string runs in the python-re oracle
-        col = F.regexp_replace(
-            col, F.lit("^[ \\t\\n]+|[ \\t\\n]+$"), F.lit("")
-        )
-    out = docs.withColumn(text_col, col)
-    if unicode_form is not None:
-        if unicode_form not in ("NFC", "NFD", "NFKC", "NFKD"):
-            raise ValueError(f"unknown unicode form {unicode_form!r}")
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        form = unicode_form
-
-        # NB: no pd.Series type hints — this module uses
-        # `from __future__ import annotations`, which stringifies them
-        # and breaks pandas_udf's eval-type inference; the returnType
-        # argument alone selects the scalar Arrow-batched form.
-        @pandas_udf(StringType())
-        def _nfc(s):
-            import unicodedata
-
-            return s.map(
-                lambda t: unicodedata.normalize(form, t)
-                if t is not None
-                else None
-            )
-
-        out = out.withColumn(text_col, _nfc(F.col(text_col)))
-    return out
-
-
-TERMINAL_PUNCT = (".", "!", "?", '"', "'")
-
-
-def clean_lines(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words: int = 3,
-    require_terminal: bool = True,
-    drop_markers: tuple[str, ...] = ("javascript", "cookie", "{"),
-    min_lines: int = 1,
-) -> DataFrame:
-    """C4's line-level heuristics (Raffel et al. 2020 §2.2, public): keep
-    only lines with >= ``min_words`` whitespace words, (optionally) ending
-    in terminal punctuation, and not containing any lowercase
-    ``drop_markers`` substring; drop documents left with fewer than
-    ``min_lines`` surviving lines.
-
-    One codegen'd split -> ``filter`` (array lambda) -> ``array_join``
-    projection plus one length filter: zero shuffle, zero Python, the
-    whole corpus pass is a single WholeStageCodegen span. At 100 TB this
-    is the shape you want for a rule that touches every byte once.
-    """
-    if min_words < 1:
-        raise ValueError(f"min_words must be >= 1, got {min_words}")
-    lines = F.split(F.col(text_col), "\n")
-
-    def keep(line):
-        c = F.size(F.split(F.trim(line), r"\s+")) >= min_words
-        c = c & (F.length(F.trim(line)) > 0)
-        if require_terminal:
-            term = None
-            for p in TERMINAL_PUNCT:
-                t = F.endswith(F.trim(line), F.lit(p))
-                term = t if term is None else (term | t)
-            c = c & term
-        low = F.lower(line)
-        for m in drop_markers:
-            c = c & ~F.contains(low, F.lit(m.lower()))
-        return c
-
-    kept = F.filter(lines, keep)
-    return (
-        docs.withColumn("__kept", kept)
-        .filter(F.size("__kept") >= min_lines)
-        .withColumn(text_col, F.array_join(F.col("__kept"), "\n"))
-        .drop("__kept")
     )

@@ -1,4 +1,4 @@
-"""t1: CSR-like edge layout, scoring projection, hubs, report ops."""
+"""t1: CSR-like edge layout, scoring projection, degrees, report ops."""
 
 import os
 
@@ -6,7 +6,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from engine.graph import (
-    hub_vertices,
+    in_degrees,
     load_edges_csr,
     neighbours,
     save_edges_csr,
@@ -37,10 +37,10 @@ def test_csr_roundtrip_and_sorted_runs(spark, tiny_graph, tmp_path):
     assert pairs == sorted(pairs)
 
 
-def test_hub_vertices(spark):
-    e = edges_df(spark, [(i, 0) for i in range(1, 9)] + [(0, 1)])
-    hubs = hub_vertices(e, threshold=5)
-    assert [r.vid for r in hubs.collect()] == [0]
+def test_in_degrees(spark):
+    e = edges_df(spark, [(i, 0, 0.5) for i in range(1, 9)] + [(0, 1, 2.0)])
+    got = {r.vid: (r.in_w, r.in_deg) for r in in_degrees(e).collect()}
+    assert got == {0: (4.0, 8), 1: (2.0, 1)}
 
 
 def test_neighbours_collapses_and_drops_loops(spark):
@@ -139,7 +139,7 @@ def test_bucketed_table_no_edge_exchange(spark, tiny_graph):
 
     # the whole _prepare_edges chain stays exchange-free on the edge side
     with iterative_conf(spark):
-        norm, _, _ = _prepare_edges(back, True, None, 16, P, pre_partitioned=True)
+        norm, _ = _prepare_edges(back, True, P, pre_partitioned=True)
         nplan = norm._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in nplan, nplan
 

@@ -83,17 +83,34 @@ def test_personalized_matches_oracle(spark):
     )
 
 
-def test_salting_does_not_change_results(spark, tiny_graph):
-    """t4: salt-on == salt-off (explicit skew handling is value-neutral)."""
-    v, e = tiny_graph
-    r_off = pagerank(spark, e, vertices=v, tol=1e-7, max_iter=200,
-                     salt_hub_threshold=None)
-    r_on = pagerank(spark, e, vertices=v, tol=1e-7, max_iter=200,
-                    salt_hub_threshold=1, salt_buckets=4)  # force-salt everything
-    a = {r.vid: r.value for r in r_off.ranks.collect()}
-    b = {r.vid: r.value for r in r_on.ranks.collect()}
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
+def test_gather_aggregates_partially_below_its_exchange(spark, tiny_graph):
+    """The engine's hub-skew handling: the gather's ``sum(cw*value)`` is
+    algebraic, so a partial HashAggregate runs map-side, under the Exchange
+    on ``dst``, and a mega-hub's reducer receives one partial row per map
+    partition instead of one row per in-edge. A gather that stops being a
+    partially aggregated sum fails here (the star_hub oracle test keeps the
+    hub's values checked)."""
+    from engine.algos.pagerank import _gather_update, _prepare_edges, _update_cols
+    from engine.loop import iterative_conf
+
+    _, e = tiny_graph
+    with iterative_conf(spark):
+        P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        norm, out_vids = _prepare_edges(e, True, P)
+        ranks = out_vids.select(
+            "vid", F.lit(1.0).alias("p"), F.lit(1.0).alias("value")
+        )
+        new = _gather_update(
+            norm, ranks, _update_cols(F.col("p"), 0.85), F.broadcast
+        )
+        plan = new._jdf.queryExecution().executedPlan().toString()
+    lines = [ln.lstrip(" :+-") for ln in plan.splitlines()]
+    exchanges = [
+        i for i, ln in enumerate(lines) if ln.startswith("Exchange hashpartitioning(dst")
+    ]
+    assert len(exchanges) == 1, plan
+    below = next(ln for ln in lines[exchanges[0] + 1:] if "Aggregate" in ln)
+    assert "HashAggregate(keys=[dst" in below and "partial_sum(" in below, plan
 
 
 def test_empty_graph(spark):

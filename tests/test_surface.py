@@ -18,9 +18,7 @@ REPO = Path(__file__).resolve().parent.parent
 
 # Engine definitions kept although no entry point reaches them: parts of
 # the paper's link-graph engine that no benchmark workload or driver query
-# exercises yet, and the corpus-curation primitives of the text pipeline
-# that feeds the graph, each checked against an exact python oracle.
-# Their tests pin them.
+# exercises yet. Their tests pin them.
 KEPT = {
     "engine.derive.sha256_udf":
         "the per-row sha256 invariant: the Arrow-UDF side of the check",
@@ -35,26 +33,6 @@ KEPT = {
     "engine.algos.triangles.transitivity":
         "neighbourhood density: global clustering",
     "engine.io.load_source": "the Iceberg/Parquet input seam",
-    "engine.text.normalize_text":
-        "curation: newline/control/space cleanup and Unicode NFC",
-    "engine.text.CONTROL_CHARS_RE":
-        "curation: the control-character class normalize_text strips",
-    "engine.text.clean_lines": "curation: C4 line-level heuristics",
-    "engine.text.TERMINAL_PUNCT":
-        "curation: the line endings clean_lines accepts",
-    "engine.text.pii_counts": "curation: regex PII detection",
-    "engine.text.redact_pii": "curation: regex PII redaction",
-    "engine.text.PII_PATTERNS":
-        "curation: the PII patterns, identical in Java regex and python re",
-    "engine.text.PII_ORDER": "curation: the fixed redaction order",
-    "engine.text.repetition_features":
-        "curation: Gopher-style repetition signals",
-    "engine.text.ngram_vocab": "curation: n-gram vocabulary induction",
-    "engine.text.tfidf": "curation: smoothed TF-IDF term weights",
-    "engine.dedup.contamination_pairs":
-        "curation: benchmark n-gram collision pairs",
-    "engine.dedup.decontaminate":
-        "curation: the corpus minus the benchmark-contaminated docs",
 }
 
 

@@ -468,7 +468,7 @@ def test_paragraph_dedup_idempotent(para_docs):
     assert a == b
 
 
-# --- curation chain: normalize -> C4 lines -> lang -> quality -> dedup ----
+# --- curation chain: lang -> quality -> exact dedup -> near dedup ---------
 
 _GOOD_EN = (
     "The quick brown fox jumps over the lazy dog near the river bank. "
@@ -487,7 +487,6 @@ _SPANISH = (
     "Toda la gente del pueblo estaba de acuerdo en que la cosecha seria buena."
 )
 _DIGITS = "1029 3847 5665 the 9182 7364 0192 " * 30 + "the end."
-_JUNKLINES = "click to accept cookie policy\n{ var x = 1 }\nok"
 
 
 def test_curation_chain_keeps_one_doc_per_cluster(spark):
@@ -499,12 +498,10 @@ def test_curation_chain_keeps_one_doc_per_cluster(spark):
         [
             (0, _GOOD_EN),
             (1, _GOOD_EN),                      # exact dup of 0
-            (2, _GOOD_EN.replace(" ", "  ")),   # exact dup after normalize
-            (3, _NEAR_DUP),                     # near-dup of 0
-            (4, _GOOD_EN_2),
-            (5, _SPANISH),                      # language gate
-            (6, _DIGITS),                       # quality gate
-            (7, _JUNKLINES),                    # no line survives C4 rules
+            (2, _NEAR_DUP),                     # near-dup of 0
+            (3, _GOOD_EN_2),
+            (4, _SPANISH),                      # language gate
+            (5, _DIGITS),                       # quality gate
         ],
         "doc_id long, text string",
     )
@@ -515,10 +512,8 @@ def test_curation_chain_keeps_one_doc_per_cluster(spark):
         funnel[name] = df.count()
         return df
 
-    cur = stage("normalized", T.normalize_text(docs, unicode_form=None))
-    cur = stage("c4_lines", T.clean_lines(cur))
-    langs = T.lang_id(cur).filter(F.col("lang_pred").isin(["en"]))
-    cur = stage("lang", cur.join(langs.select("doc_id"), "doc_id", "semi"))
+    langs = T.lang_id(docs).filter(F.col("lang_pred").isin(["en"]))
+    cur = stage("lang", docs.join(langs.select("doc_id"), "doc_id", "semi"))
     good = T.quality_score(cur).filter(F.col("quality") >= 0.5)
     cur = stage("quality", cur.join(good.select("doc_id"), "doc_id", "semi"))
     cur = stage("exact_dedup", D.exact_dedup(cur))
@@ -528,7 +523,6 @@ def test_curation_chain_keeps_one_doc_per_cluster(spark):
     )
     cur = stage("near_dedup", cur.join(losers, "doc_id", "anti"))
     assert funnel == {
-        "normalized": 8, "c4_lines": 7, "lang": 6, "quality": 5,
-        "exact_dedup": 3, "near_dedup": 2,
+        "lang": 5, "quality": 4, "exact_dedup": 3, "near_dedup": 2,
     }
-    assert sorted(r.doc_id for r in cur.collect()) == [0, 4]
+    assert sorted(r.doc_id for r in cur.collect()) == [0, 3]

@@ -1,6 +1,6 @@
-"""tfidf / bm25 (engine/text.py): term-weight tables vs an exact
-pure-python oracle (same smoothed-idf / Okapi formulas computed with
-vanilla floats), plus the min_df pruning and doc-length contracts."""
+"""bm25 (engine/text.py): the term-weight table vs an exact pure-python
+oracle (the same Okapi formula computed with vanilla floats), plus the
+min_df pruning and doc-length contracts."""
 
 import math
 import re
@@ -25,24 +25,6 @@ def _tok(text):
 
 def _corpus():
     return {d: _tok(t) for d, t in DOCS if t.strip()}
-
-
-def oracle_tfidf(min_df=1, round_to=4):
-    corpus = _corpus()
-    n = len(corpus)
-    df = {}
-    for toks in corpus.values():
-        for term in set(toks):
-            df[term] = df.get(term, 0) + 1
-    out = {}
-    for doc_id, toks in corpus.items():
-        for term in set(toks):
-            if df[term] < min_df:
-                continue
-            tf = toks.count(term)
-            idf = math.log((n + 1.0) / (df[term] + 1.0)) + 1.0
-            out[(doc_id, term)] = (tf, df[term], round(tf * idf, round_to))
-    return out
 
 
 def oracle_bm25(k1=1.2, b=0.75, round_to=4):
@@ -81,24 +63,6 @@ def test_term_frequencies(spark, docs_df):
         for term in set(toks)
     }
     assert rows == want
-
-
-def test_tfidf_matches_oracle(spark, docs_df):
-    got = {
-        (r.doc_id, r.term): (r.tf, r.df, r.tfidf_w)
-        for r in T.tfidf(docs_df).collect()
-    }
-    assert got == oracle_tfidf()
-
-
-def test_tfidf_min_df_prunes(spark, docs_df):
-    got = {
-        (r.doc_id, r.term): (r.tf, r.df, r.tfidf_w)
-        for r in T.tfidf(docs_df, min_df=2).collect()
-    }
-    assert got == oracle_tfidf(min_df=2)
-    assert got  # something survives (cat/dog/the appear in >=2 docs)
-    assert all(dfv >= 2 for (_, dfv, _) in got.values())
 
 
 def test_bm25_min_df_prunes(spark, docs_df):
