@@ -310,6 +310,56 @@ def ngram_jaccard_pairs(
     return _seal(out, sh)
 
 
+def contamination_pairs(
+    docs: DataFrame,
+    benchmark: DataFrame,
+    shingle_n: int = 8,
+    min_shared: int = 1,
+) -> DataFrame:
+    """(doc_id, bench_id, shared) — training docs that collide with a
+    benchmark/eval set on at least ``min_shared`` distinct word
+    ``shingle_n``-grams. The decontamination primitive of an LLM training
+    pipeline (public practice: GPT-3 App. C / PaLM / Llama report n-gram
+    collision filtering at n~8-13).
+
+    Scale shape: the corpus side is shingled once (one explode, distinct
+    within doc); the benchmark side is TINY by construction (eval sets are
+    MBs against a 100-TB corpus), so its shingle set is broadcast and the
+    collision join touches the corpus WITHOUT a shuffle — the whole
+    operator is scan + broadcast-hash-join + one partial-agg groupBy.
+    ``benchmark`` must carry (doc_id, text); its ids surface as bench_id.
+    """
+    if min_shared < 1:
+        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
+    corpus_sh = _shingles(docs, shingle_n)
+    bench_sh = _shingles(benchmark, shingle_n).withColumnRenamed(
+        "doc_id", "bench_id"
+    )
+    hits = corpus_sh.join(F.broadcast(bench_sh), "sh")
+    out = (
+        hits.groupBy("doc_id", "bench_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("shared"))
+    )
+    if min_shared > 1:
+        out = out.filter(F.col("shared") >= min_shared)
+    return out
+
+
+def decontaminate(
+    docs: DataFrame,
+    benchmark: DataFrame,
+    shingle_n: int = 8,
+    min_shared: int = 1,
+) -> DataFrame:
+    """``docs`` minus every row flagged by ``contamination_pairs`` — a
+    left-anti join against the (already aggregated, already tiny) flagged
+    id set, so the pass over the corpus stays shuffle-free end to end."""
+    flagged = contamination_pairs(
+        docs, benchmark, shingle_n=shingle_n, min_shared=min_shared
+    ).select("doc_id").distinct()
+    return docs.join(F.broadcast(flagged), "doc_id", "anti")
+
+
 def dedup_clusters(spark, pairs: DataFrame) -> DataFrame:
     """(doc_id, canonical_id) — transitive near-dup clusters from candidate
     pairs, canonical = min doc_id of the cluster.

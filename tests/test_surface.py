@@ -18,7 +18,9 @@ REPO = Path(__file__).resolve().parent.parent
 
 # Engine definitions kept although no entry point reaches them: parts of
 # the paper's link-graph engine that no benchmark workload or driver query
-# exercises yet. Their tests pin them.
+# exercises yet, and the benchmark decontamination primitive of the text
+# pipeline that feeds the graph, checked against an exact python oracle.
+# Their tests pin them.
 KEPT = {
     "engine.derive.sha256_udf":
         "the per-row sha256 invariant: the Arrow-UDF side of the check",
@@ -33,6 +35,10 @@ KEPT = {
     "engine.algos.triangles.transitivity":
         "neighbourhood density: global clustering",
     "engine.io.load_source": "the Iceberg/Parquet input seam",
+    "engine.dedup.contamination_pairs":
+        "curation: benchmark n-gram collision pairs",
+    "engine.dedup.decontaminate":
+        "curation: the corpus minus the benchmark-contaminated docs",
 }
 
 
